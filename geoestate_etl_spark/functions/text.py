@@ -109,14 +109,6 @@ def fingerprint_md5(c: Column | str) -> Column:
     return F.md5(normalize_text(_c(c)))
 
 
-def rolling_hash64(c: Column | str) -> Column:
-    """64-bit content fingerprint via xxhash64 of normalized text.
-
-    Cheaper than md5 (no hex string); engine-specific → rows-only checks.
-    """
-    return F.xxhash64(normalize_text(_c(c)))
-
-
 # --- PII / noise scrubbing (training-data hygiene) --------------------------
 
 #: Conservative, precision-first patterns: a corpus scrubber would
@@ -147,17 +139,6 @@ def scrub_pii(
     out = F.regexp_replace(out, IPV4_RE, ip_token)
     out = F.regexp_replace(out, PHONE_RE, phone_token)
     return out
-
-
-def pii_counts(c: Column | str) -> Column:
-    """Struct of per-category PII hit counts (audit side of the scrub:
-    log how much was redacted per document/source before training)."""
-    col = _c(c)
-    return F.struct(
-        F.regexp_count(col, F.lit(EMAIL_RE)).alias("n_email"),
-        F.regexp_count(col, F.lit(URL_RE)).alias("n_url"),
-        F.regexp_count(col, F.lit(IPV4_RE)).alias("n_ip"),
-    )
 
 
 def repetition_ratios(c: Column | str) -> Column:

@@ -38,11 +38,6 @@ def global_median_approx(df: DataFrame, col: str, alias: str) -> DataFrame:
     return df.agg(F.percentile_approx(col, 0.5).alias(alias))
 
 
-def group_count(df: DataFrame, keys: list[str], alias: str = "cnt") -> DataFrame:
-    """A3: groupBy(keys).count() (dags/main.py:319-331)."""
-    return df.groupBy(*keys).agg(F.count("*").alias(alias))
-
-
 def group_min_max(
     df: DataFrame, keys: list[str], value: str, max_alias: str, min_alias: str
 ) -> DataFrame:

@@ -174,7 +174,7 @@ def connected_components(
     n_edges = edges.count()
     if driver_max_edges is not None and n_edges <= driver_max_edges:
         out = _cc_driver(pairs.sparkSession, edges)
-        if out is not None:  # None = NULL ids seen; use the loop
+        if out is not None:  # None = NULL/NaN ids seen; use the loop
             edges.unpersist()
             return out
     # Truncate the edge lineage AFTER the cache is materialized: the
@@ -212,9 +212,11 @@ def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
     edge set — same (id, component=min reachable id) contract as the
     distributed loop. Union-by-min keeps every set's root at its
     minimum member; path halving keeps finds near-constant at this
-    size. Returns None when a NULL id is present (Python cannot order
-    None against values; the caller falls back to the distributed
-    loop, whose null-key groupBy semantics are the contract)."""
+    size. Returns None when a NULL or NaN id is present (Python cannot
+    order None against values, and NaN compares false to everything
+    and is unequal to itself, so it would break the min-root
+    invariant; the caller falls back to the distributed loop, whose
+    null-key groupBy and NaN ordering semantics are the contract)."""
     from pyspark.sql import types as T
 
     id_type = edges.schema["src"].dataType
@@ -230,7 +232,8 @@ def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
 
     try:
         for a, b in edges.collect():
-            if a is None or b is None:
+            # ``x != x`` is true only for a NaN
+            if a is None or b is None or a != a or b != b:
                 return None
             if a not in parent:
                 parent[a] = a
@@ -242,10 +245,9 @@ def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
                     ra, rb = rb, ra
                 parent[rb] = ra  # min id stays the root
     except TypeError:
-        # ids Python can't hash or order consistently with Spark
-        # (BinaryType collects as bytearray → unhashable; float NaN
-        # breaks the min-root invariant) — fall back to the
-        # distributed loop, mirroring the NULL-id fallback (r9 ADVICE)
+        # ids Python can't hash or order (BinaryType collects as
+        # bytearray → unhashable) — fall back to the distributed loop,
+        # mirroring the NULL/NaN-id fallback (r9 ADVICE)
         return None
 
     rows = [(x, find(x)) for x in parent]

@@ -2453,91 +2453,3 @@ def embed_media_stub(
             )
 
     return df.select(id_col, content_col).mapInPandas(_embed, out_schema)
-
-
-#: Frame-level audio features from REAL decoded PCM.
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("n", T.IntegerType()),  # samples in the frame
-        T.StructField("sq_sum", T.LongType()),  # Σ s² (exact integer)
-        T.StructField("zcr", T.IntegerType()),  # sign changes (exact)
-        T.StructField("centroid_hz", T.DoubleType()),  # rounded, 3 dp
-    ]
-)
-
-
-def audio_features(
-    df: DataFrame,
-    frame_size: int = 512,
-    hop: int = 256,
-    sample_rate: int | None = None,
-) -> DataFrame:
-    """REAL audio feature extraction over ``mapInPandas``: WAV
-    payloads decode to int16 PCM (:func:`wav_samples`), then per
-    analysis frame (``frame_size`` samples every ``hop``):
-
-    - ``sq_sum`` — Σ s², the exact-integer energy (RMS² · n); integer
-      so downstream gates (silence trim, clipping detection) are
-      engine-reproducible,
-    - ``zcr`` — zero-crossing count (sign changes, zeros treated as
-      positive — exact integer),
-    - ``centroid_hz`` — FFT spectral centroid (Σ f·|X(f)| / Σ |X(f)|
-      over the rfft bins, NULL for silent frames), rounded to 3 dp.
-
-    ``sample_rate`` overrides the rate read from each file's own fmt
-    chunk (when None, the file's rate converts bins → Hz). Non-WAV /
-    undecodable rows produce no frames — the same honest boundary as
-    :func:`decode_media_content`. Multi-channel PCM is analyzed
-    interleaved (a production pipeline would de-interleave per
-    channel; the frame arithmetic is identical).
-
-    Scale shape: Arrow-batched, one Python pass per partition, output
-    rows bounded by total-samples/hop. The windowed-frame view uses
-    numpy stride tricks — no per-frame Python loop.
-    """
-
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(payload) if payload is not None else b""
-                if sniff_media(b)["format"] != "wav":
-                    continue
-                s = wav_samples(b)
-                if s is None or s.size == 0:
-                    continue
-                rate = sample_rate
-                if rate is None:
-                    rate = sniff_media(b)["sample_rate"] or 1
-                x = s.astype(np.float64)
-                n_total = x.size
-                starts = range(0, n_total, hop)
-                for fi, st in enumerate(starts):
-                    fr = x[st : st + frame_size]
-                    n = fr.size
-                    sq = int((fr * fr).sum())
-                    signs = fr >= 0
-                    zcr = int(np.count_nonzero(signs[1:] != signs[:-1]))
-                    mag = np.abs(np.fft.rfft(fr))
-                    tot = float(mag.sum())
-                    if tot > 0.0:
-                        freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                        cen = round(float((freqs * mag).sum() / tot), 3)
-                    else:
-                        cen = None
-                    out_rows.append((int(mid), fi, n, sq, zcr, cen))
-            yield pd.DataFrame(
-                out_rows,
-                columns=[
-                    "media_id", "frame_idx", "n", "sq_sum", "zcr",
-                    "centroid_hz",
-                ],
-            ).astype({"frame_idx": "Int32", "n": "Int32", "sq_sum": "Int64",
-                      "zcr": "Int32"})
-
-    parallelism = min(df.sparkSession.sparkContext.defaultParallelism, 8)
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
-    return df.mapInPandas(_features, AUDIO_FEATURES_SCHEMA)

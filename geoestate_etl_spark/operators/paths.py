@@ -112,51 +112,55 @@ def bfs_distances(
         .sortWithinPartitions("u")
         .persist()
     )
-    n_edges = e.count()
+    # released in ``finally``: the returned frame is checkpoint-
+    # truncated, and a failing level leaves no cache registered
+    try:
+        n_edges = e.count()
 
-    visited = spark.createDataFrame(
-        [(int(source), 0)],
-        T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("dist", T.IntegerType()),
-            ]
-        ),
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("id")
-    with _iteration_shuffle_window(spark, n_edges):
-        for d in range(1, max_hops + 1):
-            # the empty-frontier check rides the eager checkpoint's
-            # materialization via the Observation API — no separate
-            # isEmpty job per level (the connected_components
-            # convergence-check discipline)
-            obs = Observation()
-            nxt = (
-                frontier.join(e, frontier["id"] == e["u"])
-                .select(F.col("v").alias("id"))
-                .distinct()
-                .join(visited, "id", "left_anti")
-                .withColumn("dist", F.lit(d).cast("int"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            try:
-                n_new = int(obs.get["n"] or 0)
-            except Exception:
-                # Spark 4.1 quirk: metrics rows over driver-local
-                # relations trip PythonSQLUtils.toPyRow (see
-                # corpus_pipeline) — tiny test inputs fall back to the
-                # direct (checkpointed, cheap) count
-                n_new = nxt.count()
-            if n_new == 0:
-                break
-            # visited is a union of per-level CHECKPOINTED frames — the
-            # lineage stays O(levels) shallow without re-materializing
-            # the cumulative set every round
-            visited = visited.union(nxt)
-            frontier = nxt.select("id")
-    e.unpersist()
-    return visited
+        visited = spark.createDataFrame(
+            [(int(source), 0)],
+            T.StructType(
+                [
+                    T.StructField("id", T.LongType()),
+                    T.StructField("dist", T.IntegerType()),
+                ]
+            ),
+        ).localCheckpoint(eager=True)
+        frontier = visited.select("id")
+        with _iteration_shuffle_window(spark, n_edges):
+            for d in range(1, max_hops + 1):
+                # the empty-frontier check rides the eager checkpoint's
+                # materialization via the Observation API — no separate
+                # isEmpty job per level (the connected_components
+                # convergence-check discipline)
+                obs = Observation()
+                nxt = (
+                    frontier.join(e, frontier["id"] == e["u"])
+                    .select(F.col("v").alias("id"))
+                    .distinct()
+                    .join(visited, "id", "left_anti")
+                    .withColumn("dist", F.lit(d).cast("int"))
+                    .observe(obs, F.count(F.lit(1)).alias("n"))
+                    .localCheckpoint(eager=True)
+                )
+                try:
+                    n_new = int(obs.get["n"] or 0)
+                except Exception:
+                    # Spark 4.1 quirk: metrics rows over driver-local
+                    # relations trip PythonSQLUtils.toPyRow (see
+                    # corpus_pipeline) — tiny test inputs fall back to the
+                    # direct (checkpointed, cheap) count
+                    n_new = nxt.count()
+                if n_new == 0:
+                    break
+                # visited is a union of per-level CHECKPOINTED frames — the
+                # lineage stays O(levels) shallow without re-materializing
+                # the cumulative set every round
+                visited = visited.union(nxt)
+                frontier = nxt.select("id")
+        return visited
+    finally:
+        e.unpersist()
 
 
 def sssp_distances(

@@ -134,55 +134,3 @@ def line_repetition(
         F.sum((F.col("c") - 1) * F.col("len")).alias("dup_line_chars"),
         F.sum(F.col("c") * F.col("len")).alias("total_line_chars"),
     )
-
-
-def compression_signals(c: Column | str, level: int = 6) -> Column:
-    """Deflate compression-ratio quality signal — the byte-level
-    sibling of the n-gram repetition gates (RefinedWeb/MassiveText
-    use the "too compressible = boilerplate loops, too incompressible
-    = noise/binary junk" band): struct of exact integers
-    ``(n_bytes, n_deflate)`` — UTF-8 length and ``zlib.compress``
-    output length. Integer counts per the module's float-discipline
-    rule; callers derive the ratio and pick the band at the edge.
-
-    Arrow-batched pandas_udf — the signal is inherently byte-level
-    (no SQL twin exists), zlib is C-speed per row, so this sits with
-    the unicode normalizer on the sanctioned-Python tier. Map-only at
-    any scale; NULL text → NULL fields.
-    """
-    import zlib
-
-    import pandas as pd
-
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_bytes", T.IntegerType()),
-            T.StructField("n_deflate", T.IntegerType()),
-        ]
-    )
-
-    # no type hints: the returnType is explicit, and stringified
-    # annotations can't resolve a function-local pandas import
-    @pandas_udf(out_t, "SCALAR")
-    def _sig(s):
-        n_bytes, n_defl = [], []
-        for v in s:
-            if v is None:
-                n_bytes.append(None)
-                n_defl.append(None)
-            else:
-                b = v.encode("utf-8")
-                n_bytes.append(len(b))
-                n_defl.append(len(zlib.compress(b, level)))
-        return pd.DataFrame(
-            {
-                "n_bytes": pd.array(n_bytes, dtype="Int32"),
-                "n_deflate": pd.array(n_defl, dtype="Int32"),
-            }
-        )
-
-    col = F.col(c) if isinstance(c, str) else c
-    return _sig(col)

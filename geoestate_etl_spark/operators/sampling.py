@@ -239,16 +239,6 @@ def k_fold(
     )
 
 
-def fold_split(
-    df: DataFrame, fold: int, fold_col: str = "fold"
-) -> tuple[DataFrame, DataFrame]:
-    """(train, test) for one fold of a :func:`k_fold`-tagged frame."""
-    return (
-        df.filter(F.col(fold_col) != fold),
-        df.filter(F.col(fold_col) == fold),
-    )
-
-
 def sample_k_per_group(
     df: DataFrame,
     group_cols: list[str],
@@ -370,47 +360,6 @@ def sample_to_token_budget(
         order_col=order_col,
     )
     return kept
-
-
-def weighted_sample(
-    df: DataFrame,
-    weight_col: str,
-    k: int,
-    salt: str = "ws",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic weighted sampling without replacement (Efraimidis
-    & Spirakis 2006): draw ``k`` rows with inclusion probability that
-    scales with ``weight_col``, reproducibly — the importance-weighted
-    subsample step (upweight quality, downweight boilerplate) without
-    RNG state.
-
-    Per row: a uniform ``u`` in (0,1) derived from ``xxhash64(id,
-    salt)`` (content-keyed — stable under repartitioning, growth-
-    stable under corpus append like the rest of this module), then the
-    E-S key ``u^(1/w)``; keep the top ``k`` keys. Computed as
-    ``ln(u)/w`` (monotone transform, numerically safer than the
-    power for tiny weights) with a (key, id) ordering so ties are
-    deterministic. Rows with NULL or non-positive weight never sample.
-
-    One scan + TakeOrderedAndProject — ≤ k·partitions shuffle rows.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    # 53-bit hash fraction -> exact double in (0,1): (h + 0.5) / 2^53
-    h53 = F.xxhash64(F.col(id_col).cast("string"), F.lit(salt)).bitwiseAND(
-        F.lit((1 << 53) - 1)
-    )
-    u = (h53.cast("double") + 0.5) / float(1 << 53)
-    w = F.col(weight_col).cast("double")
-    es_key = F.log(u) / w  # maximize u^(1/w) == maximize ln(u)/w (ln(u)<0)
-    return (
-        df.filter(w.isNotNull() & (w > 0))
-        .withColumn("_es", es_key)
-        .orderBy(F.desc("_es"), F.asc(id_col))
-        .limit(k)
-        .drop("_es")
-    )
 
 
 def consume_token_budget(

@@ -176,73 +176,6 @@ def lsh_topk(
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
-def lsh_topk_batch(
-    embeddings: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    num_planes: int = 8,
-    probe_radius: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "probe_vec",
-    scale: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """Multi-probe LSH top-k for a BATCH of query vectors in one job:
-    (probe_id, vec_id, cos_sim), k rows per probe.
-
-    Same candidate set per probe as :func:`lsh_topk`, different
-    mechanics — everything stays JVM-side and batched:
-    - bucket keys become INTEGERS (``conv(bits, 2, 10)``), so the
-      hamming≤radius neighborhood is ``bucket XOR mask`` over the
-      precomputed ≤radius-popcount masks — no per-probe string
-      surgery, and the corpus join key is a long, not a string;
-    - each probe explodes to its C(P,≤r) neighbor buckets and the
-      (small) probe table broadcast-joins the bucketed corpus on the
-      integer key; per-probe top-k is the two-phase partial reducer.
-    """
-    from itertools import combinations
-
-    from geoestate_etl_spark.operators.topk import top_k_per_group_partial
-
-    if dim is None:
-        first = embeddings.select(vec_col).first()
-        dim = len(first[0])
-    planes = make_hyperplanes(num_planes, dim)
-    bucketed = bucketize(embeddings, planes, id_col, vec_col).withColumn(
-        "_b", F.conv("bucket", 2, 10).cast("long")
-    )
-    masks = [
-        sum(1 << i for i in idxs)
-        for r in range(probe_radius + 1)
-        for idxs in combinations(range(num_planes), r)
-    ]
-    probe_b = probes.select(
-        probe_id_col,
-        probe_vec_col,
-        F.conv(hyperplane_bits(F.col(probe_vec_col), planes), 2, 10)
-        .cast("long")
-        .alias("_pb"),
-    )
-    probe_exp = probe_b.select(
-        probe_id_col,
-        probe_vec_col,
-        "_pb",
-        F.explode(F.array(*[F.lit(m) for m in masks])).alias("_m"),
-    ).select(
-        probe_id_col,
-        probe_vec_col,
-        F.col("_pb").bitwiseXOR(F.col("_m")).alias("_b"),
-    )
-    scored = bucketed.join(F.broadcast(probe_exp), "_b").select(
-        F.col(probe_id_col),
-        F.col(id_col),
-        (F.round(cosine(F.col(vec_col), F.col(probe_vec_col)), scale) + 0.0).alias("cos_sim"),
-    )
-    return top_k_per_group_partial(scored, [probe_id_col], "cos_sim", id_col, k)
-
-
 def ivf_build(
     embeddings: DataFrame,
     n_cells: int = 16,
@@ -525,30 +458,6 @@ def knn_join(
         .dropDuplicates([id_col, "neighbor_id"])
     )
     return top_k_per_group_partial(scored, [id_col], "cos_sim", "neighbor_id", k)
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    probe: list[float],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
-) -> DataFrame:
-    """ANN top-k via IVF, building the index inline.
-
-    Convenience path for one-shot use and tests; a serving deployment
-    builds ONCE with :func:`ivf_write_index` and answers every query
-    with :func:`ivf_probe` against the materialized index — rebuilding
-    the quantizer per probe query is the scale anti-pattern this split
-    exists to avoid.
-    """
-    assigned, centroids = ivf_build(embeddings, n_cells, id_col=id_col, vec_col=vec_col)
-    return ivf_probe(
-        assigned, centroids, probe, k, n_probe, id_col=id_col, vec_col=vec_col, scale=scale
-    )
 
 
 def hybrid_topk(

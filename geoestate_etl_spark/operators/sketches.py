@@ -133,14 +133,6 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
     return out.agg(agg)
 
 
-def hll_estimate(sketches: DataFrame) -> DataFrame:
-    """Replace the binary ``hll`` column with its distinct estimate."""
-    others = [c for c in sketches.columns if c != "hll"]
-    return sketches.select(
-        *others, F.hll_sketch_estimate("hll").alias("n_distinct")
-    )
-
-
 def cms_estimate(
     sketch: DataFrame, keys: DataFrame, key_col: str, depth: int = 4, width: int = 256
 ) -> DataFrame:

@@ -26,18 +26,6 @@ def salted_group_count(
     return partial.groupBy(*keys).agg(F.sum("_pc").alias(alias))
 
 
-def salted_group_sum(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    salt_buckets: int = 16,
-    alias: str = "total",
-) -> DataFrame:
-    salted = df.withColumn("_salt", (F.rand(seed=42) * salt_buckets).cast("int"))
-    partial = salted.groupBy(*keys, "_salt").agg(F.sum(value).alias("_ps"))
-    return partial.groupBy(*keys).agg(F.sum("_ps").alias(alias))
-
-
 def salted_skew_join(
     fact: DataFrame,
     dim: DataFrame,

@@ -17,11 +17,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def top_k(df: DataFrame, order: list[Column], k: int) -> DataFrame:
-    """T1/T3: global top-k without a full sort."""
-    return df.orderBy(*order).limit(k)
-
-
 def top_k_by_count(
     df: DataFrame, keys: list[str], k: int, count_alias: str = "cnt"
 ) -> DataFrame:

@@ -124,6 +124,13 @@ def _star_edges(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
     )
 
 
+#: The equality tiers as (window tag, key column). The two image tiers
+#: keep DISTINCT tags: their 64-bit keys share one string space, so a
+#: content hash equal to some stats fingerprint must not elect a root
+#: across tiers. The first letter of a tag is the funnel side.
+_EQ_TIERS = [("i1", "_chash"), ("i2", "_fp"), ("t", "_tfp")]
+
+
 def _star_edges_tagged(
     df: DataFrame, tiers: list[tuple[str, str]], id_col: str
 ) -> DataFrame:
@@ -287,9 +294,9 @@ def run_paired_corpus(
         gated.withColumn("_fp", fp).withColumn(
             "_tfp", fingerprint_md5(caption_col)
         ),
-        [("i", "_chash"), ("i", "_fp"), ("t", "_tfp")],
+        _EQ_TIERS,
         id_col,
-    ).withColumnRenamed("tag", "_src")
+    ).select(F.substring("tag", 1, 1).alias("_src"), "id_a", "id_b")
     txt_near = (
         minhash_near_dups(
             gated.select(id_col, caption_col),

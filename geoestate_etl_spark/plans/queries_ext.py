@@ -40,11 +40,6 @@ def _probe(spark: SparkSession, sf_dir: str) -> list[float]:
     return [float(x) for x in row[0]]
 
 
-def q_similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return SIM.brute_force_topk(emb, _probe(spark, sf_dir), k=10)
-
-
 def _ivf_index_path(sf_dir: str, n_cells: int) -> str:
     """Cache location for the materialized IVF index of one source
     table: keyed by absolute path + file stats + cell count, so a
@@ -132,8 +127,6 @@ def read_ivf_artifact(
         for r in sorted(cent_rows, key=lambda r: r.cell)
     ]
     return assign, centroids
-
-
 
 
 #: fixed bag-of-words retrieval query for the bm25 variant — literal in

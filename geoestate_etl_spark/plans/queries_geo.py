@@ -1,22 +1,17 @@
-"""Geospatial queries (the north-star "geospatial real estate" surface).
+"""Synthetic-coordinate helpers for the geospatial registry query
+(``queries_suites.q_geo_distance_radius``).
 
-The driver testdata has no coordinate columns, so each query derives
+The testdata has no coordinate columns, so the query derives
 deterministic synthetic lat/lon from integer keys with exact integer
-arithmetic — the identical formula appears in the DuckDB oracle, so
-the geo operators themselves (haversine, bbox, grid bucketing,
-radius join) are what's being verified.
+arithmetic — the identical formula appears in the DuckDB oracle
+(:func:`_coords_cte`), so the geo operators themselves (haversine,
+bbox, grid bucketing, radius join) are what's being verified.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from geoestate_etl_spark.functions.geo import grid_cell, haversine_km
-from geoestate_etl_spark.operators.spatial import radius_join
-from geoestate_etl_spark.plans.registry import QuerySpec
 
 MOSCOW = (55.75, 37.62)
 
@@ -32,47 +27,6 @@ def _with_coords(df: DataFrame, key: str, lat: str = "lat", lon: str = "lon") ->
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def q_geo_distance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """25 customers nearest to Moscow by haversine (rounded, tiebroken)."""
-    cust = _with_coords(_t(spark, sf_dir, "customer"), "c_custkey")
-    scored = cust.select(
-        "c_custkey",
-        F.round(
-            haversine_km("lat", "lon", F.lit(MOSCOW[0]), F.lit(MOSCOW[1])), 3
-        ).alias("dist_km"),
-    )
-    return scored.orderBy(F.asc("dist_km"), F.asc("c_custkey")).limit(25)
-
-
-def q_geo_grid_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Density per 10-degree grid cell (exact floor arithmetic)."""
-    cust = _with_coords(_t(spark, sf_dir, "customer"), "c_custkey")
-    return (
-        cust.select(grid_cell("lat", "lon", 10.0).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def q_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer-supplier pairs within 200 km via the grid-bucketed
-    radius join (equi-join on 3x3 cells + exact haversine filter)."""
-    cust = _with_coords(
-        _t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey", "clat", "clon"
-    )
-    supp = _with_coords(
-        _t(spark, sf_dir, "supplier").select("s_suppkey"), "s_suppkey", "slat", "slon"
-    )
-    out = radius_join(
-        cust, supp, 200.0, 6.0, "clat", "clon", "slat", "slon", "dist_km", 3
-    )
-    return out.select("c_custkey", "s_suppkey", "dist_km")
-
-
 def _coords_cte(table: str, key: str, lat: str = "lat", lon: str = "lon") -> str:
     return (
         f"SELECT *, {_LAT_SQL.replace('k', key)} AS {lat}, "
@@ -86,8 +40,3 @@ _HAVERSINE = (
     "cos(radians({la1})) * cos(radians({la2})) * "
     "pow(sin((radians({lo2}) - radians({lo1})) / 2), 2)))"
 )
-
-# geo_grid_count was a standalone registry entry through r3; folded into
-# the geo_distance_radius tagged union in r4 to free the slot the oracled
-# `semantic_dedup` entry took (registry window is exactly 50 names).
-SPECS: list[QuerySpec] = []

@@ -3,7 +3,8 @@
 The reference is join-free; these declare the engine's join surface
 with the physical strategy chosen for scale: broadcast for dims
 (region/nation: KBs even at 100 TB fact scale), sort-merge for
-fact⋈fact, semi/anti for existence. AQE may downgrade merge→broadcast
+fact⋈fact (the semi/anti existence joins live in
+``queries_suites.semi_anti_join``). AQE may downgrade merge→broadcast
 at runtime — that's desired.
 """
 
@@ -14,12 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geoestate_etl_spark.operators.joins import (
-    anti_join,
-    broadcast_dim_join,
-    semi_join,
-    sortmerge_join,
-)
+from geoestate_etl_spark.operators.joins import broadcast_dim_join, sortmerge_join
 from geoestate_etl_spark.plans.registry import QuerySpec
 
 
@@ -90,18 +86,6 @@ def q_lineitem_orders_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("salted").alias("variant"), "o_orderpriority", "sum_qty", "n_items"
     )
     return plain.unionByName(salted).orderBy("variant", "o_orderpriority")
-
-
-def q_customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    orders = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return semi_join(cust, orders, on="c_custkey")
-
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    orders = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return anti_join(cust, orders, on="c_custkey")
 
 
 def q_parts_top_value(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -80,7 +80,6 @@ def all_queries() -> dict[str, QuerySpec]:
         queries_etl,
         queries_events,
         queries_ext,
-        queries_geo,
         queries_join,
         queries_suites,
         queries_tpch2,
@@ -94,7 +93,6 @@ def all_queries() -> dict[str, QuerySpec]:
         queries_ext,
         queries_advanced,
         queries_tpch2,
-        queries_geo,
         queries_etl,
         queries_suites,
     ):

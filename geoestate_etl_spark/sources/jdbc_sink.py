@@ -11,8 +11,7 @@ PER PARTITION on the executors (each itself batched via
 ``batchsize``), and reads come back partition-parallel via
 predicate-split ranges — no row ever visits the driver.
 
-Gating follows the `sources/avro_source.py` / `table_formats.py`
-contract: a JDBC *driver* jar (ClickHouse, Postgres, ...) is not
+Gating contract: a JDBC *driver* jar (ClickHouse, Postgres, ...) is not
 bundled with pyspark, so every entry point probes for the requested
 driver class first and raises an actionable error instead of Spark's
 opaque ``ClassNotFoundException`` stack. When the jar IS present

@@ -61,42 +61,6 @@ def write_sorted_table(
     df.sortWithinPartitions(sort_key).write.mode(mode).parquet(path)
 
 
-def write_zordered_table(
-    df: DataFrame,
-    path: str,
-    zkey: F.Column,
-    n_files: int = 8,
-    row_group_bytes: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered sink: range-partition by the Morton key
-    (``functions.zorder.morton_key_2d``), sort within each file by it,
-    drop the key before writing.
-
-    Why both steps: ``repartitionByRange`` gives each FILE a disjoint
-    key range (file-level pruning via min/max), the within-partition
-    sort gives each ROW GROUP inside a file a tight range (row-group
-    pruning). A 2D bbox query then skips every row group whose
-    (x, y) min/max envelope misses the box — on either axis — which a
-    single-column sort can only do for its one column.
-
-    ``row_group_bytes`` tunes parquet's in-file granularity: smaller
-    groups prune finer but cost more metadata/seeks. Production scans
-    want the default 128 MB; the tests shrink it to make pruning
-    measurable at toy scale.
-    """
-    clustered = (
-        df.withColumn("_zkey", zkey)
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-    )
-    writer = clustered.write.mode(mode)
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(path)
-
-
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table loader, normalizing nanosecond timestamps.
 

@@ -20,7 +20,6 @@ aggregation applies, and no overflow under ANSI mode).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -154,12 +153,3 @@ def verify_shards(spark: SparkSession, path: str) -> DataFrame:
         )
         .orderBy("shard")
     )
-
-
-def list_shard_files(path: str) -> dict[int, list[str]]:
-    """Physical files per shard (for loader integration/debugging)."""
-    out: dict[int, list[str]] = {}
-    for d in sorted(glob.glob(os.path.join(path, "data", "shard=*"))):
-        k = int(d.rsplit("=", 1)[1])
-        out[k] = sorted(glob.glob(os.path.join(d, "*.parquet")))
-    return out

@@ -7,8 +7,7 @@ APIs. Spark 4 merged the spark-xml package into core, so both the
 file source (``spark.read.format("xml")`` with ``rowTag``) and the
 column functions (``from_xml`` / ``schema_of_xml`` / ``to_xml``) are
 built-in and jar-free — unlike Avro, which still needs the external
-connector (probed in :mod:`sources.table_formats` style, not stubbed
-here).
+connector.
 
 Scale notes:
 
@@ -20,8 +19,7 @@ Scale notes:
   materializing the document, so memory is bounded by row size, not
   file size.
 - Schema inference samples every file; production should pass an
-  explicit schema (one less full read, and evolution is explicit —
-  compose with :mod:`sources.schema_evolution` for drift).
+  explicit schema (one less full read, and evolution is explicit).
 
 Reference scope: the reference (dags/main.py) reads CSV only; this
 extends the S-tier source family (CSV/Parquet/ORC/JSONL/binary/custom
@@ -69,17 +67,6 @@ def parse_xml_column(
     markup)."""
     col = F.col(c) if isinstance(c, str) else c
     return F.from_xml(col, schema, options or None)
-
-
-def xml_schema_of(spark: SparkSession, sample: str) -> str:
-    """Infer a DDL-ish schema string from one representative XML
-    snippet (``schema_of_xml`` on a literal) — the bootstrap step
-    before pinning an explicit schema in production code."""
-    return (
-        spark.range(1)
-        .select(F.schema_of_xml(F.lit(sample)).alias("s"))
-        .first()[0]
-    )
 
 
 def to_xml_column(struct: Column | str, **options: str) -> Column:

@@ -252,3 +252,25 @@ def test_driver_tier_null_ids_fall_back_to_loop(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_driver_tier_nan_ids_fall_back_to_loop(spark):
+    """A float NaN id is unequal to itself and unordered in Python; the
+    driver tier must decline, and the distributed loop labels every
+    node with its minimum reachable id (Spark orders NaN above every
+    other double)."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(nan, 1.0), (1.0, 2.0), (5.0, 6.0)], "id_a double, id_b double"
+    )
+    got = {
+        (str(r.id), str(r.component))
+        for r in connected_components(df).collect()
+    }
+    assert got == {
+        ("nan", "1.0"),
+        ("1.0", "1.0"),
+        ("2.0", "1.0"),
+        ("5.0", "5.0"),
+        ("6.0", "5.0"),
+    }

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from geoestate_etl_spark.operators.similarity import (
     brute_force_topk,
     ivf_build,
-    ivf_topk,
+    ivf_probe,
 )
 from tests.conftest import SF_ORACLE
 
@@ -24,8 +24,8 @@ def probe(emb):
 
 
 def test_ivf_deterministic(emb, probe):
-    a = [(r.vec_id, r.cos_sim) for r in ivf_topk(emb, probe, k=10).collect()]
-    b = [(r.vec_id, r.cos_sim) for r in ivf_topk(emb, probe, k=10).collect()]
+    a = [(r.vec_id, r.cos_sim) for r in ivf_probe(*ivf_build(emb), probe, k=10).collect()]
+    b = [(r.vec_id, r.cos_sim) for r in ivf_probe(*ivf_build(emb), probe, k=10).collect()]
     assert a == b
 
 
@@ -38,12 +38,12 @@ def test_ivf_partitions_all_vectors(emb):
 
 def test_ivf_recall_and_scan_fraction(emb, probe):
     exact = [r.vec_id for r in brute_force_topk(emb, probe, k=10).collect()]
-    approx = [r.vec_id for r in ivf_topk(emb, probe, k=10, n_cells=16, n_probe=4).collect()]
+    approx = [r.vec_id for r in ivf_probe(*ivf_build(emb, n_cells=16), probe, k=10, n_probe=4).collect()]
     assert approx[0] == exact[0] == 0  # probe's own vector found
     # measured deterministic floor on this near-random data; full-probe
     # (n_probe=n_cells) must equal brute force exactly
     assert len(set(exact) & set(approx)) >= 3
-    full = [r.vec_id for r in ivf_topk(emb, probe, k=10, n_cells=16, n_probe=16).collect()]
+    full = [r.vec_id for r in ivf_probe(*ivf_build(emb, n_cells=16), probe, k=10, n_probe=16).collect()]
     assert full == exact
 
 
@@ -52,7 +52,6 @@ def test_ivf_materialized_index_probe_matches_inline(emb, probe, tmp_path):
     materialized cell-partitioned index returns exactly what the
     inline build+probe returns, and its scan is partition-pruned."""
     from geoestate_etl_spark.operators.similarity import (
-        ivf_probe,
         ivf_read_index,
         ivf_write_index,
     )
@@ -61,7 +60,10 @@ def test_ivf_materialized_index_probe_matches_inline(emb, probe, tmp_path):
     ivf_write_index(emb, path, n_cells=16)
     assigned, cents = ivf_read_index(emb.sparkSession, path)
 
-    inline = [(r.vec_id, r.cos_sim) for r in ivf_topk(emb, probe, k=10, n_probe=4).collect()]
+    inline = [
+        (r.vec_id, r.cos_sim)
+        for r in ivf_probe(*ivf_build(emb), probe, k=10, n_probe=4).collect()
+    ]
     stored = [
         (r.vec_id, r.cos_sim)
         for r in ivf_probe(assigned, cents, probe, k=10, n_probe=4).collect()
@@ -101,7 +103,6 @@ def test_ivf_sq8_index_recall_and_size(emb, probe, tmp_path):
     import os
 
     from geoestate_etl_spark.operators.similarity import (
-        ivf_probe,
         ivf_read_index,
         ivf_write_index,
     )

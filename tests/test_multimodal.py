@@ -562,51 +562,6 @@ def test_sample_video_frames_real(spark):
     )
 
 
-def test_audio_features_match_numpy_reference(spark):
-    """Frame-level features over real WAV PCM equal a direct numpy
-    rebuild: exact-integer energy and zero-crossing counts per frame,
-    FFT spectral centroid to the rounding quantum, frame count =
-    ceil(total/hop), and non-WAV rows produce no frames."""
-    import numpy as np
-
-    from geoestate_etl_spark.operators.multimodal import (
-        attach_real_media,
-        audio_features,
-        wav_samples,
-        make_wav,
-    )
-
-    ids = spark.createDataFrame([(i,) for i in range(28)], ["doc_id"])
-    media = attach_real_media(ids, "doc_id")
-    got = {}
-    for r in audio_features(media, frame_size=64, hop=32).collect():
-        got.setdefault(r.media_id, {})[r.frame_idx] = r
-    # only the WAV rows (id % 7 == 2) may produce frames
-    assert set(got) == {i for i in range(28) if i % 7 == 2}
-    for i in sorted(got):
-        pcm = wav_samples(
-            make_wav(8000 + (i % 8) * 1000, i % 2 + 1, i % 100 + 1)
-        ).astype(np.float64)
-        rate = 8000 + (i % 8) * 1000
-        n_frames = (pcm.size + 31) // 32
-        assert set(got[i]) == set(range(n_frames))
-        for fi in range(n_frames):
-            fr = pcm[fi * 32 : fi * 32 + 64]
-            r = got[i][fi]
-            assert r.n == fr.size
-            assert r.sq_sum == int((fr * fr).sum())
-            signs = fr >= 0
-            assert r.zcr == int(np.count_nonzero(signs[1:] != signs[:-1]))
-            mag = np.abs(np.fft.rfft(fr))
-            if mag.sum() > 0:
-                freqs = np.fft.rfftfreq(fr.size, d=1.0 / rate)
-                assert r.centroid_hz == round(
-                    float((freqs * mag).sum() / mag.sum()), 3
-                )
-            else:
-                assert r.centroid_hz is None
-
-
 def test_riff_walk_survives_pathological_list_nesting():
     """ADVICE r5 (medium): a crafted deeply-nested LIST RIFF (>1000
     levels fits in ~24 KB) must sniff as data — never a RecursionError

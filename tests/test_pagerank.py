@@ -116,3 +116,21 @@ def test_personalized_multi_seed_and_uniform_default(spark):
     ref = reference_pagerank(4, edges, iters=15)
     for i in range(4):
         assert abs(un[i] - ref[i]) < 1e-12
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_bad_seeds_raise_and_leave_no_cache(spark):
+    """An empty seed set is rejected before anything is persisted, and
+    a seed missing from the graph (raised after the node cache is
+    built) still releases every cache."""
+    df = spark.createDataFrame([(0, 1), (1, 2)], ["src", "dst"])
+    before = _persistent_rdds(spark)
+    with pytest.raises(ValueError, match="non-empty"):
+        pagerank(df, seeds=[])
+    assert _persistent_rdds(spark) == before
+    with pytest.raises(ValueError, match="not in graph"):
+        pagerank(df, seeds=[7])
+    assert _persistent_rdds(spark) == before

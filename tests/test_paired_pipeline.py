@@ -251,3 +251,24 @@ def test_star_edges_window_semantics(spark):
         for r in _star_edges(df, "k", "pid").collect()
     }
     assert got == {(1, 5), (1, 3), (4, 9)}
+
+
+def test_equality_tiers_never_join_across_tiers(spark):
+    """A content hash equal to another pair's stats fingerprint (a
+    64-bit cross-tier collision, forced here) must not link the two
+    pairs: each image tier elects roots in its own window partition."""
+    from geoestate_etl_spark.plans.paired_pipeline import (
+        _EQ_TIERS,
+        _star_edges_tagged,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 5, 7, "x"), (2, 9, 5, "y"), (3, 9, 8, "z")],
+        "pid long, _chash long, _fp long, _tfp string",
+    )
+    got = {
+        (r.tag, r.id_a, r.id_b)
+        for r in _star_edges_tagged(df, _EQ_TIERS, "pid").collect()
+    }
+    # only the genuine same-tier match (pairs 2 and 3 share _chash)
+    assert got == {("i1", 2, 3)}

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from geoestate_etl_spark.operators.paths import bfs_distances
@@ -168,3 +169,18 @@ def test_sssp_equals_bfs_on_unit_weights(spark):
         ).collect()
     }
     assert sp == {k: v for k, v in bf.items()}
+
+
+def test_failing_level_releases_edge_cache(spark, monkeypatch):
+    """A fault after the edge cache is built (here: the first
+    checkpoint of the level loop) propagates and leaves no persisted
+    RDD behind."""
+    def boom(self, eager=True):
+        raise RuntimeError("injected level fault")
+
+    e = _edges(spark, [(0, 1), (1, 2), (2, 3)])
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    monkeypatch.setattr(type(e), "localCheckpoint", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        bfs_distances(e, 0)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) == before

@@ -301,25 +301,3 @@ def test_margin_micro_matches_python_reference(spark, texts):
             TOKEN_WEIGHTS_MICRO.get(x, 0) for x in toks
         )
         assert got[i] == want, (i, t)
-
-
-def test_model_gate_composes_into_streaming_ingest(spark, tmp_path):
-    """The inline classifier Column works as the streaming ingest's
-    gate too (ingest_batch is the per-epoch kernel): junk rows never
-    reach the corpus dir, funnel metrics stay exact."""
-    from geoestate_etl_spark.streaming.corpus_ingest import ingest_batch
-
-    labeled = _labeled(spark, n=80)
-    model = train_quality_model(labeled, dims=DIMS)
-    metrics = ingest_batch(
-        labeled.select("doc_id", "text"),
-        epoch_id=0,
-        corpus_dir=str(tmp_path / "corpus"),
-        fp_dir=str(tmp_path / "fps"),
-        gate=model.as_column("text") >= 0.5,
-    )
-    written = spark.read.parquet(str(tmp_path / "corpus"))
-    labels = {r.doc_id: r.label for r in labeled.collect()}
-    kept = {r.doc_id for r in written.select("doc_id").collect()}
-    assert kept and all(labels[i] == 1 for i in kept)
-    assert metrics["n_written"] == len(kept)

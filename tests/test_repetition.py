@@ -166,41 +166,3 @@ def test_ngram_matches_python_reference(spark, texts):
             if (s := _py_ngram_stats(t, n)) is not None
         }
         assert got == want, (n, texts)
-
-
-def test_compression_signals_match_zlib_and_band_sensibly(spark):
-    """compression_signals == per-row python zlib exactly (same C lib
-    through Arrow batches), NULL text → NULL fields, and the signal
-    separates chant-like boilerplate (highly compressible) from
-    random-looking text — the property the RefinedWeb-style band gate
-    relies on."""
-    import random
-    import zlib
-
-    from geoestate_etl_spark.operators.repetition import compression_signals
-
-    rng = random.Random(7)
-    rand_text = " ".join(
-        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(8))
-        for _ in range(200)
-    )
-    boiler = "click here to subscribe now " * 200
-    rows = [(0, boiler), (1, rand_text), (2, None), (3, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: r.sig
-        for r in df.select(
-            "doc_id", compression_signals("text").alias("sig")
-        ).collect()
-    }
-    for i, txt in rows:
-        if txt is None:
-            assert got[i].n_bytes is None and got[i].n_deflate is None
-        else:
-            b = txt.encode("utf-8")
-            assert got[i].n_bytes == len(b)
-            assert got[i].n_deflate == len(zlib.compress(b, 6))
-    # band separation: boilerplate compresses an order of magnitude
-    # harder than random text of comparable size
-    ratio = lambda r: r.n_deflate / r.n_bytes  # noqa: E731
-    assert ratio(got[0]) < 0.1 < ratio(got[1])

@@ -3,6 +3,7 @@ sizes, manifest integrity, and tamper detection."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -10,7 +11,6 @@ from pyspark.sql import functions as F
 
 from geoestate_etl_spark.sources.shards import (
     assign_shards,
-    list_shard_files,
     verify_shards,
     write_shards,
 )
@@ -43,8 +43,10 @@ def test_write_verify_roundtrip(spark, tmp_path):
     with open(os.path.join(path, "manifest.json")) as f:
         assert json.load(f) == manifest
     # physical layout exists for every shard
-    files = list_shard_files(path)
-    assert set(files) == {s["shard"] for s in manifest["shards"]}
+    dirs = glob.glob(os.path.join(path, "data", "shard=*"))
+    assert {int(d.rsplit("=", 1)[1]) for d in dirs} == {
+        s["shard"] for s in manifest["shards"]
+    }
     # verification: every shard intact
     rep = verify_shards(spark, path).collect()
     assert all(r.rows_match and r.checksum_match for r in rep)
@@ -55,7 +57,7 @@ def test_verify_detects_tamper(spark, tmp_path):
     path = str(tmp_path / "shards")
     write_shards(docs, path, rows_per_shard=100)
     # drop one data file from shard 1
-    victim = list_shard_files(path)[1][0]
+    victim = sorted(glob.glob(os.path.join(path, "data", "shard=1", "*.parquet")))[0]
     os.remove(victim)
     rep = {r.shard: (r.rows_match, r.checksum_match) for r in
            verify_shards(spark, path).collect()}

@@ -162,7 +162,7 @@ def test_hybrid_recall_superset_of_both_paths(spark):
     from geoestate_etl_spark.operators.similarity import (
         hybrid_topk,
         ivf_build,
-        ivf_topk,
+        ivf_probe,
     )
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
@@ -174,7 +174,7 @@ def test_hybrid_recall_superset_of_both_paths(spark):
     try:
         ivf = [
             r.vec_id
-            for r in ivf_topk(emb, probe, k=10, n_cells=16, n_probe=4).collect()
+            for r in ivf_probe(assigned, cents, probe, k=10, n_probe=4).collect()
         ]
         hyb = [
             r.vec_id
@@ -196,25 +196,3 @@ def test_hybrid_recall_superset_of_both_paths(spark):
         assert full == exact
     finally:
         assigned.unpersist()
-
-
-def test_lsh_topk_batch_matches_single_probes(spark):
-    """Batch LSH probing == looping lsh_topk per probe (identical
-    candidate sets: integer XOR neighborhood == string bit flips)."""
-    from geoestate_etl_spark.operators.similarity import lsh_topk_batch
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    pids = [0, 3, 11]
-    probes = emb.filter(F.col("vec_id").isin(pids)).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_vec"),
-    )
-    batch = lsh_topk_batch(emb, probes, k=5).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r.probe_id, []).append((r.vec_id, r.cos_sim))
-    for pid in pids:
-        vec = [float(x) for x in emb.filter(F.col("vec_id") == pid).first().embedding]
-        single = [(r.vec_id, r.cos_sim) for r in lsh_topk(emb, vec, k=5).collect()]
-        assert sorted(got[pid]) == sorted(single), f"probe {pid}"
-        assert len(got[pid]) == 5

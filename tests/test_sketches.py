@@ -100,11 +100,7 @@ def test_hll_merge_equals_full_build(spark):
     build and the exact truth (the union path uses its own composite
     estimator, so bit-equality with the direct build is NOT the
     contract - see the hll_build docstring)."""
-    from geoestate_etl_spark.operators.sketches import (
-        hll_build,
-        hll_estimate,
-        hll_merge,
-    )
+    from geoestate_etl_spark.operators.sketches import hll_build, hll_merge
 
     li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
     parts = [li.filter(F.col("l_orderkey") % 3 == i) for i in range(3)]
@@ -112,8 +108,9 @@ def test_hll_merge_equals_full_build(spark):
         *[hll_build(p, "l_partkey", ["l_returnflag"]) for p in parts]
     )
     full = hll_build(li, "l_partkey", ["l_returnflag"])
-    em = {r.l_returnflag: r.n_distinct for r in hll_estimate(merged).collect()}
-    ef = {r.l_returnflag: r.n_distinct for r in hll_estimate(full).collect()}
+    est = F.hll_sketch_estimate("hll").alias("n")
+    em = {r.l_returnflag: r.n for r in merged.select("l_returnflag", est).collect()}
+    ef = {r.l_returnflag: r.n for r in full.select("l_returnflag", est).collect()}
     truth = {
         r.l_returnflag: r.n
         for r in li.groupBy("l_returnflag")
@@ -127,17 +124,14 @@ def test_hll_merge_equals_full_build(spark):
 
 
 def test_hll_global_merge(spark):
-    from geoestate_etl_spark.operators.sketches import (
-        hll_build,
-        hll_estimate,
-        hll_merge,
-    )
+    from geoestate_etl_spark.operators.sketches import hll_build, hll_merge
 
     li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
     parts = [li.filter(F.col("l_orderkey") % 2 == i) for i in range(2)]
     merged = hll_merge(*[hll_build(p, "l_partkey") for p in parts])
-    est = hll_estimate(merged).collect()[0].n_distinct
-    full = hll_estimate(hll_build(li, "l_partkey")).collect()[0].n_distinct
+    n = F.hll_sketch_estimate("hll").alias("n")
+    est = merged.select(n).first().n
+    full = hll_build(li, "l_partkey").select(n).first().n
     truth = li.select("l_partkey").distinct().count()
     assert abs(est - truth) <= 0.05 * truth
     assert abs(est - full) <= 0.05 * truth

@@ -120,186 +120,6 @@ def test_stream_matches_batch(spark, events_batch):
     assert got == expected
 
 
-def test_stream_stream_interval_join_matches_batch(spark, events_batch):
-    """Purchases attributed to a same-user click within 30 minutes:
-    the stream-stream interval join emits exactly the batch join's
-    rows (watermarks bound state, not inner-join output)."""
-    from geoestate_etl_spark.streaming.joins import interval_join
-
-    batch_df = spark.read.parquet(events_batch)
-    clicks = batch_df.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    buys = batch_df.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("buy_ts"),
-        F.col("event_id").alias("buy_id"),
-    )
-    expected = {
-        (r.user_id, r.click_id, r.buy_id)
-        for r in interval_join(
-            clicks, buys, "user_id", "click_ts", "buy_ts"
-        ).collect()
-    }
-    assert expected  # fixture really exercises the join
-
-    schema = batch_df.schema
-    stream = spark.readStream.schema(schema).parquet(events_batch)
-    s_clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    s_buys = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("buy_ts"),
-        F.col("event_id").alias("buy_id"),
-    )
-    q = (
-        interval_join(s_clicks, s_buys, "user_id", "click_ts", "buy_ts")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ij_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.user_id, r.click_id, r.buy_id)
-            for r in spark.sql("SELECT * FROM ij_out").collect()
-        }
-    finally:
-        q.stop()
-    assert got == expected
-
-
-def test_stream_stream_left_outer_interval_join(spark, events_batch, tmp_path):
-    """Left-outer attribution: clicks that never converted must surface
-    with a null buy_id. Streaming emits those rows only after the
-    watermark proves no match can arrive, so a far-future sentinel pair
-    (filtered from the comparison) flushes the tail state; the result
-    then equals the batch left join on the same condition."""
-    from geoestate_etl_spark.streaming.joins import interval_join
-
-    batch_df = spark.read.parquet(events_batch)
-
-    def sides(df):
-        clicks = df.filter(F.col("event_type") == "click").select(
-            "user_id", F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        buys = df.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("ts").alias("buy_ts"),
-            F.col("event_id").alias("buy_id"),
-        )
-        return clicks, buys
-
-    clicks, buys = sides(batch_df)
-    expected = {
-        (r.user_id, r.click_id, r.buy_id)
-        for r in interval_join(
-            clicks, buys, "user_id", "click_ts", "buy_ts", how="left_outer"
-        ).collect()
-    }
-    unmatched = {t for t in expected if t[2] is None}
-    assert unmatched  # fixture really exercises the outer part
-
-    # staged source: real events first, then a sentinel click+purchase
-    # 2 days later (one per side) that advances both watermarks past
-    # every real row's expiry, flushing unmatched state
-    src = str(tmp_path / "staged")
-    batch_df.write.parquet(src)
-    types = dict(batch_df.dtypes)
-    max_ts = batch_df.agg(F.max("ts")).collect()[0][0]
-    base = (
-        batch_df.limit(1)
-        .withColumn("user_id", F.lit(-999).cast(types["user_id"]))
-        .withColumn("ts", F.lit(max_ts) + F.expr("interval 2 days"))
-    )
-    sentinel = base.withColumn("event_type", F.lit("click")).withColumn(
-        "event_id", F.lit(-1).cast(types["event_id"])
-    ).union(
-        base.withColumn("event_type", F.lit("purchase")).withColumn(
-            "event_id", F.lit(-2).cast(types["event_id"])
-        )
-    ).select(*batch_df.columns)
-    sentinel.write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(batch_df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    s_clicks, s_buys = sides(stream)
-    q = (
-        interval_join(
-            s_clicks, s_buys, "user_id", "click_ts", "buy_ts", how="left_outer"
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("loj_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.user_id, r.click_id, r.buy_id)
-            for r in spark.sql(
-                "SELECT * FROM loj_out WHERE user_id != -999"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    assert got == expected
-
-
-# --- kafka builders (no broker/jar in this container) ----------------------
-
-def test_kafka_missing_connector_raises_clean_error(spark):
-    from geoestate_etl_spark.streaming.kafka_source import (
-        KafkaConnectorMissing,
-        kafka_available,
-        read_kafka_stream,
-    )
-
-    assert not kafka_available(spark)
-    import pytest as _pytest
-
-    with _pytest.raises(KafkaConnectorMissing, match="spark-sql-kafka"):
-        read_kafka_stream(spark, "localhost:9092", "events")
-
-
-def test_kafka_json_roundtrip_on_batch_frame(spark):
-    """parse(pack(x)) == x on a batch frame shaped like the Kafka wire
-    format — pins the value semantics without a broker."""
-    from geoestate_etl_spark.streaming.kafka_source import (
-        parse_kafka_json,
-        to_kafka_frame,
-    )
-
-    rows = spark.createDataFrame(
-        [(1, "click", "2024-05-01 10:00:00"), (2, "buy", "2024-05-01 10:05:00")],
-        ["user_id", "event_type", "ts"],
-    )
-    packed = to_kafka_frame(rows, ["user_id", "event_type", "ts"], F.col("user_id"))
-    wire = packed.select(
-        F.lit("events").alias("topic"),
-        (F.col("key").cast("long") % 4).cast("int").alias("partition"),
-        F.monotonically_increasing_id().alias("offset"),
-        F.current_timestamp().alias("timestamp"),
-        F.col("value").cast("binary").alias("value"),
-    )
-    parsed = parse_kafka_json(
-        wire, "user_id BIGINT, event_type STRING, ts STRING", ts_col="ts"
-    )
-    got = {
-        (r.user_id, r.event_type, str(r.ts)) for r in parsed.collect()
-    }
-    assert got == {
-        (1, "click", "2024-05-01 10:00:00"),
-        (2, "buy", "2024-05-01 10:05:00"),
-    }
-    assert set(parsed.columns) >= {"topic", "partition", "offset", "kafka_ts"}
-
-
 # --- rocksdb state store ---------------------------------------------------
 
 def test_session_windows_on_rocksdb_state_store(spark, events_batch):

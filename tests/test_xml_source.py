@@ -10,7 +10,6 @@ from geoestate_etl_spark.sources.xml_source import (
     parse_xml_column,
     read_xml,
     to_xml_column,
-    xml_schema_of,
 )
 
 SITEMAP = """<?xml version="1.0" encoding="UTF-8"?>
@@ -82,9 +81,6 @@ def test_from_xml_column_and_malformed_null(spark):
 
 
 def test_schema_of_and_to_xml_roundtrip(spark):
-    snippet = "<r><k>7</k><v>ok</v></r>"
-    ddl = xml_schema_of(spark, snippet)
-    assert "k" in ddl and "v" in ddl
     df = spark.createDataFrame([(7, "ok")], "k long, v string").select(
         F.struct("k", "v").alias("s")
     )

@@ -1,16 +1,19 @@
 """Dump `.explain("formatted")` for every registry query to
-``plans/r09/<name>_<suffix>.txt`` (r9 optimization-round evidence).
+``<out_dir>/<name>_<suffix>.txt`` (plan-shape evidence for an
+optimization round).
 
 Run from the repo root:
 
-    python tools/dump_plans_r09.py before   # or: after
+    python tools/dump_plans.py plans/r11                  # suffix "after"
+    python tools/dump_plans.py plans/r11 before
+    python tools/dump_plans.py plans/r11 after text_metrics graph_bfs
 
 Plans are captured at the bench scale ($SPARK_GRAFT_SF_DIR, default
-sf0.1) with the bench session (AQE on) so the committed text matches
-what the bench actually executes (``isFinalPlan=false`` initial plans
-— the plan-shape facts cited in OPTIMIZATION_r09.md: Exchange count,
-join strategy, PushedFilters/ReadSchema, codegen spans, *EvalPython
-nodes — are all visible in the initial plan).
+sf0.1) with the bench session (AQE on), so the text matches what the
+bench executes. They are the initial plans (``isFinalPlan=false``);
+the plan-shape facts a round cites (Exchange count, join strategy,
+PushedFilters/ReadSchema, codegen spans, *EvalPython nodes) are all
+visible there.
 """
 
 import os
@@ -22,16 +25,16 @@ from geoestate_etl_spark.plans import all_queries
 from geoestate_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r09"
-)
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])  # optional: dump just these queries
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark("dump-plans-r09")
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "after"
+    only = set(sys.argv[3:])  # optional: dump just these queries
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("dump-plans")
     for name, spec in all_queries().items():
         if only and name not in only:
             continue
@@ -42,7 +45,7 @@ def main() -> None:
             )
         except Exception as e:  # noqa: BLE001 — record, keep dumping
             plan = f"EXPLAIN FAILED: {type(e).__name__}: {e}\n"
-        with open(os.path.join(OUT_DIR, f"{name}_{suffix}.txt"), "w") as fh:
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(name, flush=True)
     spark.stop()
