@@ -261,7 +261,7 @@ def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
 
 
 def _cc_iterate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
-    from pyspark.sql import Observation
+    from geoestate_etl_spark.stage import observed
 
     for _ in range(max_iter):
         # propagate: each node adopts min(own label, neighbors' labels)
@@ -287,39 +287,20 @@ def _cc_iterate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame
         )
         # convergence check rides the checkpoint's materialization via
         # the Observation API — no separate join+count job per round
-        obs = Observation()
-        new_labels = (
-            propagated.join(parents, "component", "left")
-            .select(
+        jumped, read_changed = observed(
+            propagated.join(parents, "component", "left").select(
                 "id",
                 "_old",
                 F.least(
                     "component", F.coalesce("parent", "component")
                 ).alias("component"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("component") != F.col("_old")).cast("long")
-                ).alias("changed"),
-            )
-            .drop("_old")
-            .localCheckpoint()
+            ),
+            F.sum(
+                (F.col("component") != F.col("_old")).cast("long")
+            ).alias("changed"),
         )
-        try:
-            changed = int(obs.get["changed"] or 0)
-        except Exception:
-            # Spark 4.1 quirk: metrics rows over driver-local relations
-            # trip PythonSQLUtils.toPyRow (see corpus_pipeline); such
-            # inputs are tiny test frames, so the direct join costs ~0
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-        labels = new_labels
+        labels = jumped.drop("_old").localCheckpoint()
+        changed = int(read_changed()["changed"] or 0)
         if changed == 0:
             break
     return labels

@@ -99,11 +99,10 @@ def bfs_distances(
     # connected_components discipline — localCheckpoint bypasses AQE,
     # so each level otherwise pays the session's full shuffle-partition
     # fan-out in empty-task scheduling; at scale the clamp is a no-op).
-    from pyspark.sql import Observation
-
     from geoestate_etl_spark.operators.components import (
         _iteration_shuffle_window,
     )
+    from geoestate_etl_spark.stage import observed
 
     e = (
         symmetrized_edges(edges, src_col, dst_col, directed, dedup=False)
@@ -133,24 +132,16 @@ def bfs_distances(
                 # materialization via the Observation API — no separate
                 # isEmpty job per level (the connected_components
                 # convergence-check discipline)
-                obs = Observation()
-                nxt = (
+                nxt, read_new = observed(
                     frontier.join(e, frontier["id"] == e["u"])
                     .select(F.col("v").alias("id"))
                     .distinct()
                     .join(visited, "id", "left_anti")
-                    .withColumn("dist", F.lit(d).cast("int"))
-                    .observe(obs, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
+                    .withColumn("dist", F.lit(d).cast("int")),
+                    F.count(F.lit(1)).alias("n"),
                 )
-                try:
-                    n_new = int(obs.get["n"] or 0)
-                except Exception:
-                    # Spark 4.1 quirk: metrics rows over driver-local
-                    # relations trip PythonSQLUtils.toPyRow (see
-                    # corpus_pipeline) — tiny test inputs fall back to the
-                    # direct (checkpointed, cheap) count
-                    n_new = nxt.count()
+                nxt = nxt.localCheckpoint(eager=True)
+                n_new = int(read_new()["n"] or 0)
                 if n_new == 0:
                     break
                 # visited is a union of per-level CHECKPOINTED frames — the
@@ -216,44 +207,44 @@ def sssp_distances(
     # measured edge count (no-op at scale), and let the convergence
     # check ride the eager checkpoint via Observation instead of a
     # dedicated isEmpty join job per round.
-    from pyspark.sql import Observation
-
     from geoestate_etl_spark.operators.components import (
         _iteration_shuffle_window,
     )
+    from geoestate_etl_spark.stage import observed
 
-    n_edges = e.count()
-    dist = spark.createDataFrame(
-        [(int(source), 0)],
-        T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("cost", T.LongType()),
-            ]
-        ),
-    ).localCheckpoint(eager=True)
-    with _iteration_shuffle_window(spark, n_edges):
-        for _ in range(max_hops):
-            relaxed = (
-                dist.join(e, dist["id"] == e["u"])
-                .select(F.col("v").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
-            )
-            # convergence = no node improved and none appeared: the old
-            # cost rides the aggregate (min over cost carries the pair
-            # (cost, old) per node), observed during the checkpoint's
-            # materialization
-            obs = Observation()
-            new_dist = (
-                dist.withColumnRenamed("cost", "old")
-                .withColumn("cost", F.col("old"))
-                .unionByName(relaxed.withColumn("old", F.lit(None).cast("long")))
-                .groupBy("id")
-                .agg(
-                    F.min("cost").alias("cost"),
-                    F.min("old").alias("_old"),
+    # released in ``finally``, as in bfs_distances: the returned frame
+    # is checkpoint-truncated, and a failing round leaves no cache
+    # registered
+    try:
+        n_edges = e.count()
+        dist = spark.createDataFrame(
+            [(int(source), 0)],
+            T.StructType(
+                [
+                    T.StructField("id", T.LongType()),
+                    T.StructField("cost", T.LongType()),
+                ]
+            ),
+        ).localCheckpoint(eager=True)
+        with _iteration_shuffle_window(spark, n_edges):
+            for _ in range(max_hops):
+                relaxed = (
+                    dist.join(e, dist["id"] == e["u"])
+                    .select(F.col("v").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
                 )
-                .observe(
-                    obs,
+                # convergence = no node improved and none appeared: the
+                # old cost rides the aggregate (min over cost carries the
+                # pair (cost, old) per node), observed during the
+                # checkpoint's materialization
+                new_dist, read_improved = observed(
+                    dist.withColumnRenamed("cost", "old")
+                    .withColumn("cost", F.col("old"))
+                    .unionByName(relaxed.withColumn("old", F.lit(None).cast("long")))
+                    .groupBy("id")
+                    .agg(
+                        F.min("cost").alias("cost"),
+                        F.min("old").alias("_old"),
+                    ),
                     F.sum(
                         (
                             F.col("_old").isNull()
@@ -261,25 +252,9 @@ def sssp_distances(
                         ).cast("long")
                     ).alias("improved"),
                 )
-                .drop("_old")
-                .localCheckpoint(eager=True)
-            )
-            try:
-                n_improved = int(obs.get["improved"] or 0)
-            except Exception:
-                # driver-local-relation quirk: fall back to the direct
-                # join check over the (checkpointed, cheap) frames
-                n_improved = (
-                    new_dist.join(
-                        dist.withColumnRenamed("cost", "old"), "id", "left"
-                    )
-                    .filter(F.col("old").isNull() | (F.col("cost") < F.col("old")))
-                    .limit(1)
-                    .count()
-                )
-            if n_improved == 0:
-                e.unpersist()
-                return new_dist
-            dist = new_dist
-    e.unpersist()
-    return dist
+                dist = new_dist.drop("_old").localCheckpoint(eager=True)
+                if int(read_improved()["improved"] or 0) == 0:
+                    break
+        return dist
+    finally:
+        e.unpersist()

@@ -33,6 +33,7 @@ Scale design (the parts that matter at 100 TB):
 
 from __future__ import annotations
 
+import contextlib
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -47,8 +48,9 @@ from geoestate_etl_spark.functions.text import (
     token_count,
 )
 from geoestate_etl_spark.operators.components import connected_components
-from geoestate_etl_spark.operators.dedup import minhash_near_dups
+from geoestate_etl_spark.operators.dedup import minhash_near_dups, minhash_signatures
 from geoestate_etl_spark.operators.prefix import pack_sequences
+from geoestate_etl_spark.stage import labelled, observed, on_error
 
 
 @dataclass(frozen=True)
@@ -171,8 +173,8 @@ def run_corpus(
     # production input is left alone — collapsing a well-partitioned
     # corpus to local parallelism and reshuffling raw text would be a
     # regression at scale. The minhash stage re-spreads survivors.
-    _jd = df.sparkSession.sparkContext.setJobDescription
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    spark = df.sparkSession
+    parallelism = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < parallelism:
         df = df.repartition(parallelism)
     if strip_html:
@@ -201,290 +203,282 @@ def run_corpus(
     # the budget-mix stage needs its domain column to survive the
     # projection; everything else rides (id, text) only
     extra = [mix_domain_col] if mix_budgets is not None else []
-    from pyspark.sql import Observation
-
     # gate funnel via Observation: counted WHILE the first downstream
     # action streams these rows, not by a dedicated agg pass (every
     # run_corpus path ends in at least the exact-stage count, so the
-    # metrics are always available by the time the result is built).
-    # Anonymous (auto-unique name): a fixed name collides when one
-    # run's output feeds another run's plan (incremental ``seen``
-    # chains embed the upstream CollectMetrics node).
-    obs = Observation()
-    flagged = df.select(
-        F.col(id_col), F.col(text_col), *extra, gate.alias("_pass")
-    ).observe(
-        obs,
+    # metrics are always available by the time the result is built)
+    flagged, read_funnel = observed(
+        df.select(F.col(id_col), F.col(text_col), *extra, gate.alias("_pass")),
         F.count(F.lit(1)).alias("n_input"),
         F.sum(F.col("_pass").cast("long")).alias("n_gated"),
     )
     gated = flagged.filter("_pass").drop("_pass")
 
-    # sub-document (line/paragraph) dedup FIRST among the content
-    # stages, CCNet-style: boilerplate spans repeat across pages even
-    # when documents don't, and every later stage (fingerprints,
-    # shingles, token accounting) must see the de-boilerplated text.
-    # Docs whose every span was a later duplicate are dropped here —
-    # they carry zero novel content.
-    n_spans_dropped = 0
-    despanned = None
-    if span_dedup_delimiter is not None:
-        from geoestate_etl_spark.operators.dedup import dedup_spans
+    # every cache below is released when this block exits, on success
+    # or failure, except ``clean``: the result hands it back
+    with contextlib.ExitStack() as caches:
+        # sub-document (line/paragraph) dedup FIRST among the content
+        # stages, CCNet-style: boilerplate spans repeat across pages
+        # even when documents don't, and every later stage
+        # (fingerprints, shingles, token accounting) must see the
+        # de-boilerplated text. Docs whose every span was a later
+        # duplicate are dropped here — they carry zero novel content.
+        n_spans_dropped = 0
+        if span_dedup_delimiter is not None:
+            from geoestate_etl_spark.operators.dedup import dedup_spans
 
-        # persisted: the span count below is an eager action, and the
-        # fingerprint/minhash stages re-consume the same rebuilt text —
-        # without the cache the posexplode+rebuild would run twice
-        despanned = dedup_spans(
-            gated, text_col, id_col, span_dedup_delimiter, span_dedup_min_chars
-        ).persist()
-        _jd("corpus: span dedup")
-        n_spans_dropped = int(
-            despanned.agg(F.sum("n_spans_dropped")).first()[0] or 0
+            # persisted: the span count below is an eager action, and the
+            # fingerprint/minhash stages re-consume the same rebuilt text —
+            # without the cache the posexplode+rebuild would run twice
+            despanned = dedup_spans(
+                gated, text_col, id_col, span_dedup_delimiter, span_dedup_min_chars
+            ).persist()
+            caches.callback(despanned.unpersist)
+            with labelled(spark, "corpus: span dedup"):
+                n_spans_dropped = int(
+                    despanned.agg(F.sum("n_spans_dropped")).first()[0] or 0
+                )
+            # drop docs with no non-whitespace content left: F.trim strips ONLY
+            # spaces, so a doc rebuilt to pure structure (e.g. "\n") would
+            # otherwise survive and be packed as zero-content tape
+            gated = despanned.filter(
+                F.length(F.regexp_replace(text_col, r"\s", "")) > 0
+            ).drop("n_spans_dropped")
+
+        with_fp = gated.withColumn("_fp", fingerprint_md5(text_col))
+        if seen is not None:
+            with_fp = with_fp.join(
+                seen.select(F.col("fp").alias("_fp")), "_fp", "left_anti"
+            )
+            with labelled(spark, "corpus: unseen anti-join"):
+                n_unseen = with_fp.count()
+        else:
+            n_unseen = None  # == n_gated; resolved from the observation below
+
+        # exact dedup: min-id keeper per content fingerprint, as a window min
+        # over the fingerprint partition — ONE shuffle of the batch
+        # (fingerprint groups are duplicate families, tiny by nature, so the
+        # per-group buffering is trivial) where the groupBy-keepers + equi-join
+        # formulation shuffled the batch twice (measured 2× at sf0.1, r5)
+        from pyspark.sql import Window
+
+        exact, read_exact = observed(
+            with_fp.withColumn(
+                "_keep", F.min(id_col).over(Window.partitionBy("_fp"))
+            )
+            .filter(F.col(id_col) == F.col("_keep"))
+            .withColumnRenamed("_fp", "fp")  # raw-text content address, kept
+            .drop("_keep"),
+            # funnel count rides the first materialization (same
+            # Observation discipline as the gate counts above)
+            F.count(F.lit(1)).alias("n_exact"),
         )
-        # drop docs with no non-whitespace content left: F.trim strips
-        # ONLY spaces, so a doc rebuilt to pure structure (e.g. "\n")
-        # would otherwise survive and be packed as zero-content tape
-        gated = despanned.filter(
-            F.length(F.regexp_replace(text_col, r"\s", "")) > 0
-        ).drop("n_spans_dropped")
-
-    with_fp = gated.withColumn("_fp", fingerprint_md5(text_col))
-    if seen is not None:
-        with_fp = with_fp.join(
-            seen.select(F.col("fp").alias("_fp")), "_fp", "left_anti"
-        )
-        _jd("corpus: unseen anti-join")
-        n_unseen = with_fp.count()
-    else:
-        n_unseen = None  # == n_gated; resolved from the observation below
-
-    # exact dedup: min-id keeper per content fingerprint, as a window
-    # min over the fingerprint partition — ONE shuffle of the batch
-    # (fingerprint groups are duplicate families, tiny by nature, so
-    # the per-group buffering is trivial) where the groupBy-keepers +
-    # equi-join formulation shuffled the batch twice (measured 2× at
-    # sf0.1, r5)
-    from pyspark.sql import Window
-
-    obs_exact = Observation()
-    exact = (
-        with_fp.withColumn(
-            "_keep", F.min(id_col).over(Window.partitionBy("_fp"))
-        )
-        .filter(F.col(id_col) == F.col("_keep"))
-        .withColumnRenamed("_fp", "fp")  # raw-text content address, kept
-        .drop("_keep")
-        # funnel count rides the first materialization (same
-        # Observation discipline as the gate counts above)
-        .observe(obs_exact, F.count(F.lit(1)).alias("n_exact"))
         # persisted: feeds the LSH pair generator, the survivor
         # anti-join, and the funnel count — three consumers, one
         # materialization
-        .persist()
-    )
+        exact = exact.persist()
+        caches.callback(exact.unpersist)
 
-    # near-dup removal: LSH pairs → components → drop non-keepers.
-    # connected_components labels every paired node with the min id
-    # reachable from it, so "loser" == any node whose label isn't itself.
-    # Banding tuned for RECALL at the removal threshold: 24 hashes in 8
-    # bands of 3 puts the S-curve midpoint at (1/8)^(1/3) = 0.5, giving
-    # P(candidate) = 1-(1-j^3)^8 ≈ 0.97 at j = 0.7 — the operator
-    # default (16 in 4) centers at 0.59 and would miss a third of
-    # true pairs at this threshold. Candidate false positives are
-    # removed by the exact-Jaccard rescore, so looser banding costs
-    # rescore volume, not precision.
-    near_dup_kwargs.setdefault("num_hashes", 24)
-    near_dup_kwargs.setdefault("bands", 8)
-    _jd("corpus: minhash+cc+survivors")
-    pairs = minhash_near_dups(
-        exact,
-        text_col,
-        id_col,
-        jaccard_threshold=jaccard_threshold,
-        **near_dup_kwargs,
-    )
-    cc = connected_components(pairs)
-    if keeper == "min_id":
-        losers = cc.filter(F.col("id") != F.col("component"))
-    elif keeper == "quality":
-        # keep the highest-quality member of each cluster (ties and
-        # unscored → min id), the way production near-dup removal does
-        scores = exact.select(
-            F.col(id_col).alias("id"), quality_score(text_col).alias("score")
-        )
-        ranked = cc.join(scores, "id", "left").withColumn(
-            "_rank", F.struct(F.coalesce("score", F.lit(float("-inf"))), -F.col("id"))
-        )
-        keeps = ranked.groupBy("component").agg(F.max_by("id", "_rank").alias("_keep"))
-        losers = cc.join(keeps, "component").filter(F.col("id") != F.col("_keep"))
-    else:
-        raise ValueError(f"keeper must be 'min_id' or 'quality', got {keeper!r}")
-    survivors = exact.join(
-        losers.select(F.col("id").alias(id_col)), id_col, "left_anti"
-    )
-
-    # semantic (embedding-space) dedup on the textually-deduped
-    # survivors: SemDeDup removes paraphrases/translations that share
-    # no shingles, so it runs AFTER the text tiers (cheap drops first)
-    # and only over vectors the survivors still need. ``embeddings``
-    # must carry (id_col, 'embedding'); docs without a vector pass
-    # through untouched (coverage gaps must not silently drop data).
-    n_semantic_dropped = 0
-    sem_dropped = None
-    if embeddings is not None:
-        from geoestate_etl_spark.operators.semantic_dedup import (
-            cluster_embeddings,
-            semantic_dedup,
-        )
-
-        emb_surv = embeddings.join(survivors.select(id_col), id_col)
-        # persisted for the same reason as media_pipeline's clustered:
-        # the decisions plan references this subtree ~8x (capped
-        # self-join sides, dropped distinct, decisions rejoin) and
-        # every uncached occurrence re-runs the ArrowEvalPython cell
-        # assignment (r9)
-        clustered = (
-            cluster_embeddings(
-                emb_surv, n_cells=semantic_cells, id_col=id_col
+        # near-dup removal: LSH pairs → components → drop non-keepers.
+        # connected_components labels every paired node with the min id
+        # reachable from it, so "loser" == any node whose label isn't
+        # itself. Banding tuned for RECALL at the removal threshold: 24
+        # hashes in 8 bands of 3 puts the S-curve midpoint at
+        # (1/8)^(1/3) = 0.5, giving P(candidate) = 1-(1-j^3)^8 ≈ 0.97 at
+        # j = 0.7 — the operator default (16 in 4) centers at 0.59 and
+        # would miss a third of true pairs at this threshold. Candidate
+        # false positives are removed by the exact-Jaccard rescore, so
+        # looser banding costs rescore volume, not precision.
+        near_dup_kwargs.setdefault("num_hashes", 24)
+        near_dup_kwargs.setdefault("bands", 8)
+        # CC consumes the pairs, so the signature cache minhash_near_dups
+        # keeps can go with the others; Spark keys caches by plan, so
+        # rebuilding that plan finds it
+        keys = ("k_shingle", "num_hashes", "arrow")
+        sig = {k: near_dup_kwargs[k] for k in keys if k in near_dup_kwargs}
+        caches.callback(minhash_signatures(exact, text_col, id_col, **sig).unpersist)
+        # ``stage`` names the last labelled stage that ran; masking and
+        # the exact-count read have no label of their own and run under it
+        stage = "corpus: minhash+cc+survivors"
+        n_semantic_dropped = 0
+        with labelled(spark, stage):
+            pairs = minhash_near_dups(
+                exact,
+                text_col,
+                id_col,
+                jaccard_threshold=jaccard_threshold,
+                **near_dup_kwargs,
             )
-            .join(emb_surv, id_col)
-            .persist()
-        )
-        _, decisions = semantic_dedup(
-            clustered, semantic_threshold, id_col=id_col
-        )
-        sem_dropped = decisions.filter(~F.col("kept")).select(id_col).persist()
-        _jd("corpus: semantic")
-        n_semantic_dropped = sem_dropped.count()
-        clustered.unpersist()
-        survivors = survivors.join(sem_dropped, id_col, "left_anti")
-
-    # exact-substring masking (Lee et al. 2022) on the deduped
-    # survivors: spans repeated across surviving documents (licence
-    # boilerplate, templates) are cut out of the text. Runs AFTER
-    # document-level dedup (fewer docs to window-scan; a span shared
-    # only by dropped twins needs no masking) and BEFORE
-    # decontamination/scrub/token accounting, which must see the final
-    # text. n_tokens_masked rides the funnel.
-    n_tokens_masked = 0
-    if mask_spans_ngram is not None:
-        from geoestate_etl_spark.operators.substr_dedup import (
-            mask_repeated_spans,
-        )
-
-        survivors = mask_repeated_spans(
-            survivors, id_col, text_col, n=mask_spans_ngram
-        )
-        n_tokens_masked = (
-            survivors.agg(F.sum("n_masked")).first()[0] or 0
-        )
-        survivors = survivors.drop("n_masked")
-
-    # benchmark decontamination on the deduped survivors, BEFORE the
-    # scrub (scrubbing rewrites text; overlap is defined on content as
-    # deduped). The flagged set is tiny -> one cheap extra action.
-    n_decontam_dropped = 0
-    flagged_ids = None
-    if benchmark is not None:
-        from geoestate_etl_spark.operators.decontam import contamination_report
-
-        flagged_ids = (
-            contamination_report(
-                survivors, benchmark, text_col, id_col, n=decontam_ngram
+            cc = connected_components(pairs)
+            if keeper == "min_id":
+                losers = cc.filter(F.col("id") != F.col("component"))
+            elif keeper == "quality":
+                # keep the highest-quality member of each cluster (ties and
+                # unscored → min id), the way production near-dup removal does
+                scores = exact.select(
+                    F.col(id_col).alias("id"), quality_score(text_col).alias("score")
+                )
+                ranked = cc.join(scores, "id", "left").withColumn(
+                    "_rank",
+                    F.struct(F.coalesce("score", F.lit(float("-inf"))), -F.col("id")),
+                )
+                keeps = ranked.groupBy("component").agg(
+                    F.max_by("id", "_rank").alias("_keep")
+                )
+                losers = cc.join(keeps, "component").filter(
+                    F.col("id") != F.col("_keep")
+                )
+            else:
+                raise ValueError(
+                    f"keeper must be 'min_id' or 'quality', got {keeper!r}"
+                )
+            survivors = exact.join(
+                losers.select(F.col("id").alias(id_col)), id_col, "left_anti"
             )
-            .select(F.col(id_col))
-            .persist()
+
+            # semantic (embedding-space) dedup on the textually-deduped
+            # survivors: SemDeDup removes paraphrases/translations that share
+            # no shingles, so it runs AFTER the text tiers (cheap drops first)
+            # and only over vectors the survivors still need. ``embeddings``
+            # must carry (id_col, 'embedding'); docs without a vector pass
+            # through untouched (coverage gaps must not silently drop data).
+            if embeddings is not None:
+                from geoestate_etl_spark.operators.semantic_dedup import (
+                    cluster_embeddings,
+                    semantic_dedup,
+                )
+
+                emb_surv = embeddings.join(survivors.select(id_col), id_col)
+                # persisted for the same reason as media_pipeline's
+                # clustered: the decisions plan references this subtree
+                # ~8x (capped self-join sides, dropped distinct,
+                # decisions rejoin) and every uncached occurrence re-runs
+                # the ArrowEvalPython cell assignment (r9)
+                clustered = (
+                    cluster_embeddings(
+                        emb_surv, n_cells=semantic_cells, id_col=id_col
+                    )
+                    .join(emb_surv, id_col)
+                    .persist()
+                )
+                caches.callback(clustered.unpersist)
+                _, decisions = semantic_dedup(
+                    clustered, semantic_threshold, id_col=id_col
+                )
+                sem_dropped = (
+                    decisions.filter(~F.col("kept")).select(id_col).persist()
+                )
+                caches.callback(sem_dropped.unpersist)
+                stage = "corpus: semantic"
+                with labelled(spark, stage):
+                    n_semantic_dropped = sem_dropped.count()
+                clustered.unpersist()
+                survivors = survivors.join(sem_dropped, id_col, "left_anti")
+
+        # exact-substring masking (Lee et al. 2022) on the deduped survivors:
+        # spans repeated across surviving documents (licence boilerplate,
+        # templates) are cut out of the text. Runs AFTER document-level dedup
+        # (fewer docs to window-scan; a span shared only by dropped twins needs
+        # no masking) and BEFORE decontamination/scrub/token accounting, which
+        # must see the final text. n_tokens_masked rides the funnel.
+        n_tokens_masked = 0
+        if mask_spans_ngram is not None:
+            from geoestate_etl_spark.operators.substr_dedup import (
+                mask_repeated_spans,
+            )
+
+            survivors = mask_repeated_spans(
+                survivors, id_col, text_col, n=mask_spans_ngram
+            )
+            with labelled(spark, stage):
+                n_tokens_masked = (
+                    survivors.agg(F.sum("n_masked")).first()[0] or 0
+                )
+            survivors = survivors.drop("n_masked")
+
+        # benchmark decontamination on the deduped survivors, BEFORE the
+        # scrub (scrubbing rewrites text; overlap is defined on content
+        # as deduped). The flagged set is tiny -> one cheap extra action.
+        n_decontam_dropped = 0
+        if benchmark is not None:
+            from geoestate_etl_spark.operators.decontam import contamination_report
+
+            flagged_ids = (
+                contamination_report(
+                    survivors, benchmark, text_col, id_col, n=decontam_ngram
+                )
+                .select(F.col(id_col))
+                .persist()
+            )
+            caches.callback(flagged_ids.unpersist)
+            stage = "corpus: decontam"
+            with labelled(spark, stage):
+                n_decontam_dropped = flagged_ids.count()
+            survivors = survivors.join(flagged_ids, id_col, "left_anti")
+
+        # scrub + token accounting on the final survivor set only
+        clean = survivors.withColumn(text_col, scrub_pii(text_col)).withColumn(
+            "n_tokens", token_count(text_col)
         )
-        _jd("corpus: decontam")
-        n_decontam_dropped = flagged_ids.count()
-        survivors = survivors.join(flagged_ids, id_col, "left_anti")
+        clean = clean.persist()
+        on_error(caches, clean.unpersist)
+        # n_exact rides the cache materialization the CC stage already
+        # forced (exact is persisted and fully computed by the time the
+        # survivor anti-join ran) — no dedicated count job
+        with labelled(spark, stage):
+            n_exact = int(read_exact()["n_exact"])
+        with labelled(spark, "corpus: scrub+count survivors"):
+            n_near = clean.count()
+        # clean is materialized now, so every upstream cache can go: the
+        # drop-list persists only existed to keep their counts and the survivor
+        # anti-joins on one computation each. Closing the stack also drops
+        # clean's release-on-error, so it is armed again for the tail.
+        caches.close()
+        on_error(caches, clean.unpersist)
 
-    # scrub + token accounting on the final survivor set only
-    clean = survivors.withColumn(text_col, scrub_pii(text_col)).withColumn(
-        "n_tokens", token_count(text_col)
-    )
-    clean = clean.persist()
-    # n_exact rides the cache materialization the CC stage already
-    # forced (exact is persisted and fully computed by the time the
-    # survivor anti-join ran) — obs_exact delivers without a dedicated
-    # count job; the direct count is the tiny-driver-relation fallback
-    try:
-        n_exact = int(obs_exact.get["n_exact"])
-    except Exception:
-        n_exact = exact.count()
-    _jd("corpus: scrub+count survivors")
-    n_near = clean.count()
-    _jd(None)
-    # clean is materialized now, so every upstream cache can go: the
-    # drop-list persists only existed to keep their counts and the
-    # survivor anti-joins on one computation each
-    exact.unpersist()
-    if despanned is not None:
-        despanned.unpersist()
-    if sem_dropped is not None:
-        sem_dropped.unpersist()
-    if flagged_ids is not None:
-        flagged_ids.unpersist()
+        # budget mixing LAST among the selection stages: budgets should
+        # be met with clean, deduped, decontaminated documents, and the
+        # token accounting the budgets consume must be the final
+        # (scrubbed, masked) n_tokens the pack stage will lay on the tape
+        n_mix_selected = None
+        to_pack = clean
+        if mix_budgets is not None:
+            from geoestate_etl_spark.operators.sampling import (
+                sample_to_token_budget,
+            )
 
-    # budget mixing LAST among the selection stages: budgets should be
-    # met with clean, deduped, decontaminated documents, and the token
-    # accounting the budgets consume must be the final (scrubbed,
-    # masked) n_tokens the pack stage will lay on the tape
-    n_mix_selected = None
-    to_pack = clean
-    if mix_budgets is not None:
-        from geoestate_etl_spark.operators.sampling import (
-            sample_to_token_budget,
+            to_pack = sample_to_token_budget(
+                clean, mix_domain_col, "n_tokens", mix_budgets, id_col=id_col
+            ).drop("domain_start")
+
+        # cumsum bucketing sized from the MEASURED survivor count: at
+        # bench/test scale one bucket packs in a single cheap window
+        # (and skips the boundary-sampling job); growth re-engages the
+        # distributed two-phase path at ~50k rows per bucket
+        pack_parts = max(1, min(parallelism, n_near // 50_000 + 1))
+        packed = pack_sequences(
+            to_pack, id_col, "n_tokens", token_budget, num_partitions=pack_parts
         )
+        with labelled(spark, "corpus: pack totals"):
+            totals = packed.agg(
+                F.sum("n_tokens").alias("toks"),
+                (F.countDistinct("chunk_id")).alias("chunks"),
+                F.count(F.lit(1)).alias("n_rows"),
+            ).first()
+        if mix_budgets is not None:
+            n_mix_selected = int(totals["n_rows"])
 
-        to_pack = sample_to_token_budget(
-            clean, mix_domain_col, "n_tokens", mix_budgets, id_col=id_col
-        ).drop("domain_start")
+        shard_manifest = None
+        if shards_path is not None:
+            from geoestate_etl_spark.sources.shards import write_shards
 
-    # cumsum bucketing sized from the MEASURED survivor count: at
-    # bench/test scale one bucket packs in a single cheap window (and
-    # skips the boundary-sampling job); growth re-engages the
-    # distributed two-phase path at ~50k rows per bucket
-    pack_parts = max(1, min(parallelism, n_near // 50_000 + 1))
-    packed = pack_sequences(
-        to_pack, id_col, "n_tokens", token_budget, num_partitions=pack_parts
-    )
-    _jd("corpus: pack totals")
-    totals = packed.agg(
-        F.sum("n_tokens").alias("toks"),
-        (F.countDistinct("chunk_id")).alias("chunks"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).first()
-    # clear the stage label before the tail work — it would otherwise
-    # leak onto the shard write and every later job the caller runs in
-    # this session (r9 ADVICE)
-    _jd(None)
-    if mix_budgets is not None:
-        n_mix_selected = int(totals["n_rows"])
-
-    shard_manifest = None
-    if shards_path is not None:
-        from geoestate_etl_spark.sources.shards import write_shards
-
-        shard_manifest = write_shards(
-            packed, shards_path, rows_per_shard, order_col=id_col
-        )
+            shard_manifest = write_shards(
+                packed, shards_path, rows_per_shard, order_col=id_col
+            )
 
     # safe to read now: n_exact/n_near above were real actions over the
-    # observed node, so the metrics row has been delivered. Spark 4.1
-    # quirk: when the input is a driver-local relation (tiny
-    # createDataFrame frames in tests), the delivered metrics row
-    # trips an assertion in the Python-side row conversion
-    # (PythonSQLUtils.toPyRow wants a schema'd row) — fall back to the
-    # direct aggregate there; such inputs are by definition tiny, so
-    # the extra scan the observation exists to avoid costs nothing.
-    try:
-        funnel = obs.get
-    except Exception:
-        funnel = flagged.agg(
-            F.count(F.lit(1)).alias("n_input"),
-            F.sum(F.col("_pass").cast("long")).alias("n_gated"),
-        ).first()
+    # observed node, so the metrics row has been delivered
+    funnel = read_funnel()
     return CorpusResult(
         packed=packed,
         cached=clean,

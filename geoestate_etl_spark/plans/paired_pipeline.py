@@ -53,10 +53,13 @@ this is the engine's training-data extension tier.
 
 from __future__ import annotations
 
+import contextlib
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from geoestate_etl_spark.stage import labelled, observed, on_error
 
 #: image decoded-stats columns, in fingerprint order (the media
 #: pipeline's re-encode tier uses the same six; captions have no
@@ -210,7 +213,10 @@ def run_paired_corpus(
     from geoestate_etl_spark.operators.components import (
         connected_components,
     )
-    from geoestate_etl_spark.operators.dedup import minhash_near_dups
+    from geoestate_etl_spark.operators.dedup import (
+        minhash_near_dups,
+        minhash_signatures,
+    )
     from geoestate_etl_spark.operators.multimodal import (
         decode_media_content,
     )
@@ -224,11 +230,8 @@ def run_paired_corpus(
     if caption_gate is None:
         caption_gate = quality_gate(caption_col, min_tokens=3)
 
-    # stage labels for the UI / event log (guide §1.5); thread-local,
-    # cleared before returning
-    _jd = spark.sparkContext.setJobDescription
-    _jd("paired: input count")
-    n_pairs = pairs.count()
+    with labelled(spark, "paired: input count"):
+        n_pairs = pairs.count()
 
     # ONE decode pass over the payload bytes produces everything the
     # gate and every edge tier needs: stats + perceptual hash from the
@@ -247,174 +250,176 @@ def run_paired_corpus(
         passthrough=("_chash", caption_col),
     ).withColumnRenamed("media_id", id_col)
 
-    gated = skinny.filter(
-        F.col("n_px").isNotNull() & caption_gate
-    ).persist()
-    _jd("paired: gate (decode+quality)")
-    n_gated = gated.count()
+    # every cache below is released when this block exits, on success
+    # or failure, except the returned survivor frame's, which only a
+    # failure releases
+    with contextlib.ExitStack() as caches:
+        gated = skinny.filter(
+            F.col("n_px").isNotNull() & caption_gate
+        ).persist()
+        caches.callback(gated.unpersist)
+        with labelled(spark, "paired: gate (decode+quality)"):
+            n_gated = gated.count()
 
-    # incremental tier: pairs whose image payload OR caption already
-    # exists in the standing corpus leave before any in-batch dedup
-    # work — two O(batch) anti-joins against the standing keys
-    if seen_image_hashes is not None or seen_caption_fps is not None:
-        unseen = gated
-        if seen_image_hashes is not None:
-            unseen = unseen.join(
-                seen_image_hashes.select(
-                    F.col("chash").alias("_chash")
-                ),
-                "_chash",
-                "left_anti",
-            )
-        if seen_caption_fps is not None:
-            unseen = unseen.withColumn(
-                "_tfp0", fingerprint_md5(caption_col)
-            ).join(
-                seen_caption_fps.select(F.col("fp").alias("_tfp0")),
-                "_tfp0",
-                "left_anti",
-            ).drop("_tfp0")
-        unseen = unseen.persist()
-        _jd("paired: unseen anti-joins")
-        n_unseen = unseen.count()
-        gated.unpersist()
-        gated = unseen
-    else:
-        n_unseen = n_gated
+        # incremental tier: pairs whose image payload OR caption already exists
+        # in the standing corpus leave before any in-batch dedup work — two
+        # O(batch) anti-joins against the standing keys
+        if seen_image_hashes is not None or seen_caption_fps is not None:
+            unseen = gated
+            if seen_image_hashes is not None:
+                unseen = unseen.join(
+                    seen_image_hashes.select(
+                        F.col("chash").alias("_chash")
+                    ),
+                    "_chash",
+                    "left_anti",
+                )
+            if seen_caption_fps is not None:
+                unseen = unseen.withColumn(
+                    "_tfp0", fingerprint_md5(caption_col)
+                ).join(
+                    seen_caption_fps.select(F.col("fp").alias("_tfp0")),
+                    "_tfp0",
+                    "left_anti",
+                ).drop("_tfp0")
+            unseen = unseen.persist()
+            caches.callback(unseen.unpersist)
+            with labelled(spark, "paired: unseen anti-joins"):
+                n_unseen = unseen.count()
+            gated.unpersist()
+            gated = unseen
+        else:
+            n_unseen = n_gated
 
-    # --- edge tiers (all on the skinny relation) ---
-    # the three EQUALITY tiers (image exact, image re-encode, caption
-    # exact) share ONE window shuffle (r10 — guide §2.4): their
-    # (tag, key, id) rows stack into a single min-over-partition
-    # window instead of one exchange per tier
-    fp = F.xxhash64(
-        *[F.coalesce(F.col(c), F.lit(-1)) for c in _STAT_COLS]
-    )
-    eq_edges = _star_edges_tagged(
-        gated.withColumn("_fp", fp).withColumn(
-            "_tfp", fingerprint_md5(caption_col)
-        ),
-        _EQ_TIERS,
-        id_col,
-    ).select(F.substring("tag", 1, 1).alias("_src"), "id_a", "id_b")
-    txt_near = (
-        minhash_near_dups(
-            gated.select(id_col, caption_col),
-            text_col=caption_col,
-            id_col=id_col,
-            k_shingle=k_shingle,
-            num_hashes=num_hashes,
-            bands=bands,
-            jaccard_threshold=jaccard_threshold,
-            max_bucket_size=text_bucket_cap,
+        # --- edge tiers (all on the skinny relation) --- the three EQUALITY
+        # tiers (image exact, image re-encode, caption exact) share ONE window
+        # shuffle (r10 — guide §2.4): their (tag, key, id) rows stack into a
+        # single min-over-partition window instead of one exchange per tier
+        fp = F.xxhash64(
+            *[F.coalesce(F.col(c), F.lit(-1)) for c in _STAT_COLS]
         )
-        .select("id_a", "id_b")
-        .withColumn("_src", F.lit("t"))
-    )
-    edges_all = eq_edges.unionByName(txt_near)
-    if perceptual_hamming is not None:
-        img_perc = (
-            phash_near_dups(
-                gated.select(id_col, "phash"),
+        eq_edges = _star_edges_tagged(
+            gated.withColumn("_fp", fp).withColumn(
+                "_tfp", fingerprint_md5(caption_col)
+            ),
+            _EQ_TIERS,
+            id_col,
+        ).select(F.substring("tag", 1, 1).alias("_src"), "id_a", "id_b")
+        captions = gated.select(id_col, caption_col)
+        txt_near = (
+            minhash_near_dups(
+                captions,
+                text_col=caption_col,
                 id_col=id_col,
-                max_hamming=perceptual_hamming,
-                bucket_cap=perceptual_cap,
+                k_shingle=k_shingle,
+                num_hashes=num_hashes,
+                bands=bands,
+                jaccard_threshold=jaccard_threshold,
+                max_bucket_size=text_bucket_cap,
             )
             .select("id_a", "id_b")
-            .withColumn("_src", F.lit("i"))
+            .withColumn("_src", F.lit("t"))
         )
-        edges_all = edges_all.unionByName(img_perc)
+        # the edge cache below holds all that is needed of the signature
+        # cache minhash_near_dups keeps; Spark keys caches by plan, so
+        # rebuilding that plan finds it
+        sigs = minhash_signatures(captions, caption_col, id_col, k_shingle, num_hashes)
+        caches.callback(sigs.unpersist)
+        edges_all = eq_edges.unionByName(txt_near)
+        if perceptual_hamming is not None:
+            img_perc = (
+                phash_near_dups(
+                    gated.select(id_col, "phash"),
+                    id_col=id_col,
+                    max_hamming=perceptual_hamming,
+                    bucket_cap=perceptual_cap,
+                )
+                .select("id_a", "id_b")
+                .withColumn("_src", F.lit("i"))
+            )
+            edges_all = edges_all.unionByName(img_perc)
 
-    # diagnostic counts on the (tiny) edge relations: ONE tagged union
-    # cache + ONE aggregation job computes both sides' counts (r9 —
-    # two separate caches/count jobs before), and the CC stage
-    # consumes the same cached union. The per-side dedup is ONE
-    # distinct over (_src, id_a, id_b) — tags keep the sides disjoint,
-    # so this equals the r9 shape's two per-side distincts in a single
-    # exchange (r10).
-    tagged_edges = edges_all.distinct().persist()
-    _jd("paired: image+text edges")
-    edge_counts = {
-        r["_src"]: r["n"]
-        for r in tagged_edges.groupBy("_src")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_image_edges = int(edge_counts.get("i", 0))
-    n_text_edges = int(edge_counts.get("t", 0))
+        # diagnostic counts on the (tiny) edge relations: ONE tagged union
+        # cache + ONE aggregation job computes both sides' counts (r9 — two
+        # separate caches/count jobs before), and the CC stage consumes the
+        # same cached union. The per-side dedup is ONE distinct over (_src,
+        # id_a, id_b) — tags keep the sides disjoint, so this equals the r9
+        # shape's two per-side distincts in a single exchange (r10).
+        tagged_edges = edges_all.distinct().persist()
+        caches.callback(tagged_edges.unpersist)
+        with labelled(spark, "paired: image+text edges"):
+            edge_counts = {
+                r["_src"]: r["n"]
+                for r in tagged_edges.groupBy("_src")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            n_image_edges = int(edge_counts.get("i", 0))
+            n_text_edges = int(edge_counts.get("t", 0))
 
-    # --- union-closure election ---
-    # no distinct here (r10): connected_components symmetrizes and
-    # dedups its edge input itself, so a pre-dedup exchange of the
-    # cross-tier union bought nothing
-    all_edges = tagged_edges.select("id_a", "id_b")
-    if n_image_edges + n_text_edges > 0:
-        drops = (
-            connected_components(all_edges)
-            .filter(F.col("id") != F.col("component"))
-            .select(F.col("id").alias(id_col))
+            # --- union-closure election ---
+            # no distinct here (r10): connected_components symmetrizes
+            # and dedups its edge input itself, so a pre-dedup exchange
+            # of the cross-tier union bought nothing
+            all_edges = tagged_edges.select("id_a", "id_b")
+            drops = None
+            if n_image_edges + n_text_edges > 0:
+                drops = (
+                    connected_components(all_edges)
+                    .filter(F.col("id") != F.col("component"))
+                    .select(F.col("id").alias(id_col))
+                    .persist()
+                )
+                caches.callback(drops.unpersist)
+        if drops is not None:
+            with labelled(spark, "paired: cc election"):
+                n_joint_dropped = drops.count()
+            survivors_sk = gated.join(drops, id_col, "left_anti")
+        else:
+            n_joint_dropped = 0
+            survivors_sk = gated
+        # drops is now materialized, so the edge cache has served the CC
+        tagged_edges.unpersist()
+
+        # --- paired shards: bytes re-enter via ONE keeper equi-join ---
+        survivors = (
+            survivors_sk.join(pairs.select(id_col, content_col), id_col)
             .persist()
         )
-        _jd("paired: cc election")
-        n_joint_dropped = drops.count()
-        survivors_sk = gated.join(drops, id_col, "left_anti")
-    else:
-        drops = None
-        n_joint_dropped = 0
-        survivors_sk = gated
-    # drops is now materialized, so the edge cache has served the CC
-    tagged_edges.unpersist()
-
-    # --- paired shards: bytes re-enter via ONE keeper equi-join ---
-    from pyspark.sql import Observation
-
-    survivors = (
-        survivors_sk.join(pairs.select(id_col, content_col), id_col)
-        .persist()
-    )
-    # the final funnel count rides the shard write's materialization
-    # of the survivor cache via the Observation API — no dedicated
-    # count job (r10; the corpus n_exact discipline). The write is the
-    # action that populates the cache either way.
-    obs_final = Observation()
-    to_shard = survivors.observe(
-        obs_final, F.count(F.lit(1)).alias("n_final")
-    ).select(
-        F.format_string("%016x", F.col(id_col)).alias("key"),
-        F.col(content_col),
-        F.col(caption_col),
-        F.to_json(
-            F.struct(F.col(id_col), "format", *_STAT_COLS)
-        ).alias("_meta"),
-    )
-    _jd("paired: shard write")
-    manifest = write_tar_shards(
-        to_shard,
-        shards_path,
-        n_shards,
-        member_cols={
-            "bin": content_col,
-            "txt": caption_col,
-            "json": "_meta",
-        },
-    )
-    _jd("paired: audit")
-    audit = verify_tar_shards(spark, shards_path)
-    audit_ok = audit.filter(~F.col("ok")).limit(1).count() == 0
-    try:
-        n_final = int(obs_final.get["n_final"])
-    except Exception:
-        # driver-local-relation quirk (see corpus_pipeline): tiny test
-        # inputs fall back to the direct (cached) count
-        _jd("paired: final count")
-        n_final = survivors.count()
-    # survivors is materialized (shard write + count) — only now are
-    # the upstream caches safe to release without recompute exposure
-    gated.unpersist()
-    if drops is not None:
-        drops.unpersist()
-
-    _jd(None)
+        on_error(caches, survivors.unpersist)
+        # the final funnel count rides the shard write's
+        # materialization of the survivor cache via the Observation API
+        # — no dedicated count job (r10; the corpus n_exact discipline).
+        # The write is the action that populates the cache either way.
+        to_shard, read_final = observed(
+            survivors, F.count(F.lit(1)).alias("n_final")
+        )
+        to_shard = to_shard.select(
+            F.format_string("%016x", F.col(id_col)).alias("key"),
+            F.col(content_col),
+            F.col(caption_col),
+            F.to_json(
+                F.struct(F.col(id_col), "format", *_STAT_COLS)
+            ).alias("_meta"),
+        )
+        with labelled(spark, "paired: shard write"):
+            manifest = write_tar_shards(
+                to_shard,
+                shards_path,
+                n_shards,
+                member_cols={
+                    "bin": content_col,
+                    "txt": caption_col,
+                    "json": "_meta",
+                },
+            )
+        with labelled(spark, "paired: audit"):
+            audit = verify_tar_shards(spark, shards_path)
+            audit_ok = audit.filter(~F.col("ok")).limit(1).count() == 0
+        with labelled(spark, "paired: final count"):
+            n_final = int(read_final()["n_final"])
+        # survivors is materialized (shard write) — the upstream caches
+        # are released as the block exits
     return PairedCorpusResult(
         n_pairs=n_pairs,
         n_gated=n_gated,

@@ -25,6 +25,7 @@ top-25 SQL (:481-502)        ``top25_by_square``
 
 from __future__ import annotations
 
+import contextlib
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +44,7 @@ from geoestate_etl_spark.operators.windows import renumber_global, renumber_scal
 from geoestate_etl_spark.schema import HOUSES_RAW_SCHEMA
 from geoestate_etl_spark.sources.csv_source import read_dirty_csv
 from geoestate_etl_spark.sources.parquet_io import write_sorted_table
+from geoestate_etl_spark.stage import labelled, on_error
 
 
 @dataclass
@@ -61,6 +63,16 @@ class PipelineResult:
 def load_stage(spark: SparkSession, csv_path: str, encoding: str = "UTF-16") -> DataFrame:
     """load_csv: dirty CSV → all-string raw frame (S1)."""
     return read_dirty_csv(spark, csv_path, schema=HOUSES_RAW_SCHEMA, encoding=encoding)
+
+
+def _flagged(raw: DataFrame) -> DataFrame:
+    """``raw`` spread over every core with the validity predicate as a
+    boolean column; rebuilt by :func:`run_pipeline` to release
+    :func:`validate_stage`'s cache of it (Spark keys caches by plan)."""
+    parallelism = raw.sparkSession.sparkContext.defaultParallelism
+    return raw.repartition(parallelism).withColumn(
+        "_valid", F.coalesce(houses_valid_predicate(raw), F.lit(False))
+    )
 
 
 def validate_stage(raw: DataFrame, scalable: bool = True) -> tuple[DataFrame, int, int]:
@@ -83,28 +95,20 @@ def validate_stage(raw: DataFrame, scalable: bool = True) -> tuple[DataFrame, in
     unsplittable-scan cliff the reference hits at ``dags/main.py:
     153-158``.
     """
-    parallelism = raw.sparkSession.sparkContext.defaultParallelism
-    _jd = raw.sparkSession.sparkContext.setJobDescription
     # Evaluate the ~20-regex predicate ONCE into a cached boolean: the
     # counts agg, the range-partitioner sampling job inside
     # renumber_scalable, and the main pass would otherwise each re-run
     # the full regex battery over every row.
-    pred = houses_valid_predicate(raw)
-    flagged = (
-        raw.repartition(parallelism)
-        .withColumn("_valid", F.coalesce(pred, F.lit(False)))
-        .persist()
-    )
+    flagged = _flagged(raw).persist()
     valid = flagged.filter(F.col("_valid")).drop("_valid")
     # both counts in ONE pass (conditional aggregation) instead of two
     # filter+count scans; this action also materializes the cache
-    _jd("houses: validate counts")
-    counts = flagged.agg(
-        F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("v"),
-        F.count("*").alias("n"),
-    ).collect()[0]
+    with labelled(raw.sparkSession, "houses: validate counts"):
+        counts = flagged.agg(
+            F.sum(F.when(F.col("_valid"), 1).otherwise(0)).alias("v"),
+            F.count("*").alias("n"),
+        ).collect()[0]
     n_valid, n_invalid = int(counts.v or 0), int(counts.n) - int(counts.v or 0)
-    _jd(None)
     renumber = renumber_scalable if scalable else renumber_global
     renumbered = renumber(
         valid.withColumn("house_id", F.col("house_id").cast("int")), "house_id", "new_id"
@@ -165,33 +169,29 @@ def run_pipeline(
     executor-parallel instead of a driver-side INSERT loop; otherwise
     ``serving_path`` lands the sorted-parquet emulation."""
     raw = load_stage(spark, csv_path, encoding)
-    validated, n_valid, n_invalid = validate_stage(raw, scalable=scalable_renumber)
-    clean = cast_houses(validated).persist()
+    # on success the result keeps ``clean`` and the validation cache
+    # behind it; a failure releases both
+    with contextlib.ExitStack() as caches:
+        on_error(caches, lambda: _flagged(raw).unpersist())
+        validated, n_valid, n_invalid = validate_stage(raw, scalable=scalable_renumber)
+        clean = cast_houses(validated).persist()
+        on_error(caches, clean.unpersist)
 
-    analytics = analytics_stage(clean)
-    if jdbc_url is not None:
-        from geoestate_etl_spark.sources.jdbc_sink import write_serving_table
+        analytics = analytics_stage(clean)
+        if jdbc_url is not None:
+            from geoestate_etl_spark.sources.jdbc_sink import write_serving_table
 
-        kw = {"driver": jdbc_driver} if jdbc_driver else {}
-        spark.sparkContext.setJobDescription("houses: serving write (jdbc)")
-        try:
-            write_serving_table(
-                clean, "house_id", jdbc_url=jdbc_url, table=jdbc_table,
-                mode="overwrite", **kw,
-            )
-        finally:
-            # both serving branches must clear the label — it would
-            # otherwise leak onto every later job in the session (r9
-            # ADVICE)
-            spark.sparkContext.setJobDescription(None)
-    elif serving_path is not None:
-        # replaces collect()+batched INSERT (S7): partition-parallel,
-        # clustered by the MergeTree sort key
-        spark.sparkContext.setJobDescription("houses: serving write")
-        try:
-            write_sorted_table(clean, serving_path, "house_id")
-        finally:
-            spark.sparkContext.setJobDescription(None)
+            kw = {"driver": jdbc_driver} if jdbc_driver else {}
+            with labelled(spark, "houses: serving write (jdbc)"):
+                write_serving_table(
+                    clean, "house_id", jdbc_url=jdbc_url, table=jdbc_table,
+                    mode="overwrite", **kw,
+                )
+        elif serving_path is not None:
+            # replaces collect()+batched INSERT (S7): partition-parallel,
+            # clustered by the MergeTree sort key
+            with labelled(spark, "houses: serving write"):
+                write_sorted_table(clean, serving_path, "house_id")
 
     return PipelineResult(
         clean=clean,

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geoestate_etl_spark.plans.corpus_pipeline import quality_gate, run_corpus
+from tests.pipeline_trace import tracing
 
 #: 41 English words with stopwords — passes every gate comfortably.
 GOOD = (
@@ -61,8 +62,15 @@ def _corpus(spark):
 
 
 @pytest.fixture(scope="module")
-def result(spark):
-    return run_corpus(_corpus(spark), token_budget=64)
+def traced_result(spark):
+    with tracing(spark) as trace:
+        res = run_corpus(_corpus(spark), token_budget=64)
+    return res, trace
+
+
+@pytest.fixture(scope="module")
+def result(traced_result):
+    return traced_result[0]
 
 
 def test_funnel_accounts_for_every_stage(result):
@@ -382,3 +390,72 @@ def test_mix_budget_stage(spark):
     max_doc = max(r.n_tokens for r in out)
     assert toks - max_doc < 150 <= toks + max_doc
     res.unpersist()
+
+
+def _batch2(spark):
+    new_doc = (
+        "deep in the forest a narrow path wound between tall pines and "
+        "mossy stones where the light fell in long green stripes and the "
+        "only sound was the wind moving slowly through the high branches "
+        "of the silent trees"
+    )
+    return spark.createDataFrame(
+        [(100, GOOD), (101, PII_DOC), (102, new_doc)], ["doc_id", "text"]
+    )
+
+
+def test_seen_chain_empty_metrics_row_falls_back(spark, result, monkeypatch):
+    """The incremental chain is where Spark delivers an empty metrics
+    row: batch 2's exact-dedup observation sits under a cache whose
+    plan embeds batch 1's observed nodes. The reader then recomputes
+    the same aggregate, so the funnel stays exact."""
+    from pyspark.sql import Observation
+
+    import geoestate_etl_spark.stage as stage
+
+    made = []
+
+    class Recorded(Observation):
+        def __init__(self, *args):
+            super().__init__(*args)
+            made.append(self)
+
+    monkeypatch.setattr(stage, "Observation", Recorded)
+    res2 = run_corpus(_batch2(spark), token_budget=64, seen=result.fingerprints())
+    try:
+        assert any(o._jo.getRow().length() == 0 for o in made)
+        assert (res2.n_input, res2.n_gated, res2.n_unseen) == (3, 3, 1)
+        assert (res2.n_exact_unique, res2.n_near_unique) == (1, 1)
+    finally:
+        res2.unpersist()
+
+
+def test_run_leaves_no_label_and_stays_in_job_budget(traced_result):
+    """The fixture run clears its labels, keeps the session conf,
+    keeps only the result's cache, and launches no more jobs (nor
+    unlabelled jobs) than the ceilings measured before the stage
+    helpers replaced the hand-set labels."""
+    _, trace = traced_result
+    trace.assert_no_state_left()
+    assert len(trace.new_rdds) == 1  # CorpusResult.cached
+    assert trace.jobs <= 33
+    assert trace.unlabelled_jobs == 0
+
+
+def test_pack_fault_leaves_nothing_behind(spark, monkeypatch):
+    """A fault after the survivor cache is counted (here: in sequence
+    packing) propagates and leaves no label, conf change or cache. The
+    ids are shifted: Spark keys caches by plan, so a run over the
+    fixture's own rows would share (and release) the module result's
+    cache."""
+    import geoestate_etl_spark.plans.corpus_pipeline as CP
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected pack fault")
+
+    docs = _corpus(spark).withColumn("doc_id", F.col("doc_id") + 100)
+    monkeypatch.setattr(CP, "pack_sequences", boom)
+    with tracing(spark) as trace, pytest.raises(RuntimeError, match="injected"):
+        run_corpus(docs, token_budget=64)
+    trace.assert_no_state_left()
+    assert not trace.new_rdds

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from geoestate_etl_spark.plans.media_pipeline import run_media_corpus
 from tests.media_corpus_fixture import generate_media_landing
+from tests.pipeline_trace import tracing
 
 
 @pytest.fixture(scope="module")
@@ -24,12 +25,18 @@ def landing(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def run(spark, landing, tmp_path_factory):
+def traced_run(spark, landing, tmp_path_factory):
     d, pred = landing
     work = str(tmp_path_factory.mktemp("media_work"))
-    res = run_media_corpus(spark, d, work, n_shards=2)
-    yield res, pred, work
+    with tracing(spark) as trace:
+        res = run_media_corpus(spark, d, work, n_shards=2)
+    yield res, pred, work, trace
     res.unpersist()
+
+
+@pytest.fixture(scope="module")
+def run(traced_run):
+    return traced_run[:3]
 
 
 def test_predicted_funnel_exact(run):
@@ -280,6 +287,33 @@ def test_semantic_negative_control_is_a_real_stage(spark, run):
     rows = {r.media_id: r.embedding for r in emb.collect()}
     a, b = list(rows.values())
     assert a == b  # identical bytes ⇒ identical embedding
+
+
+def test_run_leaves_no_label_and_stays_in_job_budget(traced_run):
+    """The fixture run clears its labels, keeps the session conf,
+    keeps only the survivor cache it returns, and launches no more jobs
+    (nor unlabelled jobs) than the ceilings measured before the stage
+    helpers replaced the hand-set labels."""
+    trace = traced_run[3]
+    trace.assert_no_state_left()
+    assert len(trace.new_rdds) == 1  # MediaCorpusResult.survivors
+    assert trace.jobs <= 66
+    assert trace.unlabelled_jobs == 0
+
+
+def test_shard_write_fault_leaves_nothing_behind(spark, landing, tmp_path, monkeypatch):
+    """A failing shard write propagates and leaves no label, conf
+    change or cache behind."""
+    import geoestate_etl_spark.sources.tar_shards as TS
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected shard fault")
+
+    monkeypatch.setattr(TS, "write_tar_shards", boom)
+    with tracing(spark) as trace, pytest.raises(RuntimeError, match="injected"):
+        run_media_corpus(spark, landing[0], str(tmp_path / "work"), n_shards=2)
+    trace.assert_no_state_left()
+    assert not trace.new_rdds
 
 
 @pytest.mark.slow

@@ -16,6 +16,7 @@ from tests.paired_corpus_fixture import (
     make_caption,
     mutate_caption,
 )
+from tests.pipeline_trace import tracing
 
 
 def _run(spark, tmp_path, rows, **kw):
@@ -50,54 +51,90 @@ def test_fixture_minhash_matches_engine_kernel(spark):
         assert sig == list(row.ss.sig), t
 
 
-def test_paired_funnel_prediction_exact(spark, tmp_path):
+@pytest.fixture(scope="module")
+def traced_funnel_run(spark, tmp_path_factory):
+    rows, pred = generate_paired_rows()
+    tmp = tmp_path_factory.mktemp("paired")
+    with tracing(spark) as trace:
+        res = _run(spark, tmp, rows)
+    yield res, pred, tmp, trace
+    res.unpersist()
+
+
+def test_paired_funnel_prediction_exact(spark, traced_funnel_run):
     """The full e2e: every funnel count equals the fixture prediction,
     every planted tier participates, and the shards carry the paired
     members (.bin + .txt + .json) under one key per sample."""
     from geoestate_etl_spark.sources.tar_shards import read_tar_samples
 
-    rows, pred = generate_paired_rows()
+    res, pred, tmp_path, _ = traced_funnel_run
     # every tier is a live positive control on this corpus
     assert pred.n_txt_near_detected > 0
     assert pred.n_joint_dropped > 0
-    res = _run(spark, tmp_path, rows)
-    try:
-        assert (
-            res.n_pairs,
-            res.n_gated,
-            res.n_image_edges,
-            res.n_text_edges,
-            res.n_joint_dropped,
-            res.n_final,
-        ) == (
-            pred.n_pairs,
-            pred.n_gated,
-            pred.n_image_edges,
-            pred.n_text_edges,
-            pred.n_joint_dropped,
-            pred.n_final,
-        )
-        assert res.audit_ok
-        assert res.shard_manifest["total_samples"] == pred.n_final
+    assert (
+        res.n_pairs,
+        res.n_gated,
+        res.n_image_edges,
+        res.n_text_edges,
+        res.n_joint_dropped,
+        res.n_final,
+    ) == (
+        pred.n_pairs,
+        pred.n_gated,
+        pred.n_image_edges,
+        pred.n_text_edges,
+        pred.n_joint_dropped,
+        pred.n_final,
+    )
+    assert res.audit_ok
+    assert res.shard_manifest["total_samples"] == pred.n_final
 
-        samples = read_tar_samples(spark, str(tmp_path / "shards"))
-        got = samples.select(
-            "key", F.map_keys("members").alias("exts")
-        ).collect()
-        assert len(got) == pred.n_final
-        for r in got:
-            assert sorted(r.exts) == ["bin", "json", "txt"], r.key
-        # survivors' captions round-trip through the txt member
-        kept_caps = {
-            bytes(r.members["txt"]).decode("utf-8")
-            for r in samples.select("members").collect()
-        }
-        surv_caps = {
-            r.caption for r in res.survivors.select("caption").collect()
-        }
-        assert kept_caps == surv_caps
-    finally:
-        res.unpersist()
+    samples = read_tar_samples(spark, str(tmp_path / "shards"))
+    got = samples.select(
+        "key", F.map_keys("members").alias("exts")
+    ).collect()
+    assert len(got) == pred.n_final
+    for r in got:
+        assert sorted(r.exts) == ["bin", "json", "txt"], r.key
+    # survivors' captions round-trip through the txt member
+    kept_caps = {
+        bytes(r.members["txt"]).decode("utf-8")
+        for r in samples.select("members").collect()
+    }
+    surv_caps = {
+        r.caption for r in res.survivors.select("caption").collect()
+    }
+    assert kept_caps == surv_caps
+
+
+def test_run_leaves_no_label_and_stays_in_job_budget(traced_funnel_run):
+    """The fixture run clears its labels, keeps the session conf,
+    keeps only the survivor cache it returns, and launches no more jobs
+    (nor unlabelled jobs) than the ceilings measured before the stage
+    helpers replaced the hand-set labels."""
+    trace = traced_funnel_run[3]
+    trace.assert_no_state_left()
+    assert len(trace.new_rdds) == 1  # PairedCorpusResult.survivors
+    assert trace.jobs <= 48
+    assert trace.unlabelled_jobs == 0
+
+
+def test_shard_write_fault_leaves_nothing_behind(spark, tmp_path, monkeypatch):
+    """A failing shard write propagates and leaves no label, conf
+    change or cache behind. One row is left out: Spark keys caches by
+    plan, so a run over the module fixture's rows would share (and
+    release) its result's cache."""
+    import geoestate_etl_spark.sources.tar_shards as TS
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected shard fault")
+
+    rows, _ = generate_paired_rows()
+    monkeypatch.setattr(TS, "write_tar_shards", boom)
+    with tracing(spark) as trace, pytest.raises(RuntimeError, match="injected"):
+        _run(spark, tmp_path, rows[1:])
+    trace.assert_no_state_left()
+    assert not trace.new_rdds
 
 
 def test_closure_semantics_chain(spark, tmp_path):

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import gc
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,13 +177,23 @@ def test_sssp_equals_bfs_on_unit_weights(spark):
 def test_failing_level_releases_edge_cache(spark, monkeypatch):
     """A fault after the edge cache is built (here: the first
     checkpoint of the level loop) propagates and leaves no persisted
-    RDD behind."""
+    RDD behind, in both the BFS and the weighted SSSP loop."""
+    from geoestate_etl_spark.operators.paths import sssp_distances
+
     def boom(self, eager=True):
         raise RuntimeError("injected level fault")
 
-    e = _edges(spark, [(0, 1), (1, 2), (2, 3)])
-    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    e = spark.createDataFrame(
+        [(0, 1, 1), (1, 2, 1), (2, 3, 1)], "src long, dst long, w long"
+    )
     monkeypatch.setattr(type(e), "localCheckpoint", boom)
-    with pytest.raises(RuntimeError, match="injected"):
-        bfs_distances(e, 0)
-    assert set(spark.sparkContext._jsc.getPersistentRDDs()) == before
+    for distances in (bfs_distances, sssp_distances):
+        # let Spark's context cleaner drop the RDDs of earlier tests'
+        # collected frames first, so only this call changes the set
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+        before = set(spark.sparkContext._jsc.getPersistentRDDs())
+        with pytest.raises(RuntimeError, match="injected"):
+            distances(e, 0)
+        assert set(spark.sparkContext._jsc.getPersistentRDDs()) == before, distances

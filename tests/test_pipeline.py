@@ -11,6 +11,7 @@ import pytest
 from geoestate_etl_spark.plans.pipeline import run_pipeline
 from geoestate_etl_spark.schema import HOUSES_SCHEMA
 from tests.houses_fixture import generate
+from tests.pipeline_trace import tracing
 
 
 @pytest.fixture(scope="module")
@@ -20,9 +21,16 @@ def fixture(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def result(spark, fixture, tmp_path_factory):
+def traced_result(spark, fixture, tmp_path_factory):
     serving = tmp_path_factory.mktemp("serving") / "houses_table"
-    return run_pipeline(spark, fixture.path, serving_path=str(serving))
+    with tracing(spark) as trace:
+        res = run_pipeline(spark, fixture.path, serving_path=str(serving))
+    return res, trace
+
+
+@pytest.fixture(scope="module")
+def result(traced_result):
+    return traced_result[0]
 
 
 def test_valid_invalid_split(result, fixture):
@@ -140,3 +148,35 @@ def test_multi_file_ingest_parallel_parse_identical_results(
         map(tuple, result.min_max_square.collect())
     )
     assert r2.year_stats.collect() == result.year_stats.collect()
+
+
+def test_run_leaves_no_label_and_stays_in_job_budget(traced_result):
+    """The fixture run clears its labels, keeps the session conf, keeps
+    only the result's cache and the validation cache behind it, and
+    launches no more jobs (nor unlabelled jobs) than the ceilings
+    measured before the stage helpers replaced the hand-set labels."""
+    _, trace = traced_result
+    trace.assert_no_state_left()
+    assert len(trace.new_rdds) == 2  # clean + the validation cache
+    assert trace.jobs <= 12
+    assert trace.unlabelled_jobs <= 2
+
+
+def test_serving_write_fault_leaves_nothing_behind(spark, fixture, tmp_path, monkeypatch):
+    """A failing serving write propagates and leaves no label, conf
+    change or cache behind. The input is a copy: Spark keys caches by
+    plan, so a run over the fixture's own file would share (and
+    release) the module result's caches."""
+    import shutil
+
+    import geoestate_etl_spark.plans.pipeline as P
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected serving fault")
+
+    path = shutil.copy(fixture.path, tmp_path / "houses.csv")
+    monkeypatch.setattr(P, "write_sorted_table", boom)
+    with tracing(spark) as trace, pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, str(path), serving_path=str(tmp_path / "t"))
+    trace.assert_no_state_left()
+    assert not trace.new_rdds
