@@ -21,9 +21,8 @@ column ``mq_margin_micro``). The sigmoid is monotone, so thresholding
 the margin is thresholding the probability; serve
 ``sigmoid(margin_micro / 1e6)`` where a probability is wanted.
 
-The hashed-feature :class:`operators.quality_model.QualityModel` is
-the general tier (open vocabulary, ml-trained, artifact lifecycle);
-this module is the frozen-literal deployment of one such model.
+:func:`operators.quality_model.token_margin_micro` serves these
+weights as one map-side Column.
 """
 
 from __future__ import annotations

@@ -25,9 +25,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: default-stripped tracking parameters (prefix match for utm_*)
-TRACKING_PARAMS = ("utm_", "fbclid", "gclid", "ref")
-
 #: multi-part public suffixes the simplified registered-domain
 #: extraction recognizes (real pipelines broadcast-join the full PSL)
 MULTI_SUFFIXES = ("co.uk", "com.au", "co.jp", "com.br", "co.in")

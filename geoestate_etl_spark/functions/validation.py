@@ -2,9 +2,7 @@
 
 All predicates are Column expressions evaluated JVM-side; invalid rows
 are *dropped not repaired*, exactly like the reference (filter at
-``dags/main.py:228``). ``split_valid_invalid`` gives both halves of
-the filter with one cached scan so the valid/invalid accounting the
-reference logs (``dags/main.py:241-247``) costs one pass.
+``dags/main.py:228``).
 """
 
 from __future__ import annotations
@@ -110,20 +108,3 @@ def houses_valid_predicate(df: DataFrame) -> Column:
         & castable(csid, T.IntegerType())
     )
     return pred
-
-
-def split_valid_invalid(
-    df: DataFrame, predicate: Column
-) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, invalid) halves of one predicate.
-
-    Caller should ``persist()`` ``df`` if both halves are acted on —
-    mirrors the reference's persist-count-write pattern
-    (``dags/main.py:228,249``) without forcing materialization here.
-
-    The predicate is coalesced to false so the two halves always
-    partition the input exactly (a NULL-evaluating predicate would
-    exclude its row from both).
-    """
-    safe = F.coalesce(predicate, F.lit(False))
-    return df.filter(safe), df.filter(~safe)

@@ -23,19 +23,10 @@ def global_median(df: DataFrame, col: str, alias: str) -> DataFrame:
     """A2 (exact variant): ``F.median`` — oracle-hashable.
 
     The reference uses the Greenwald-Khanna sketch
-    (``percentile_approx``, dags/main.py:301-302); see
-    ``global_median_approx`` for that faithful variant.
+    (``percentile_approx``, dags/main.py:301-302), whose output need
+    not bit-match other engines; the exact median does.
     """
     return df.agg(F.median(col).alias(alias))
-
-
-def global_median_approx(df: DataFrame, col: str, alias: str) -> DataFrame:
-    """A2 (faithful variant): ``percentile_approx(col, 0.5)`` sketch.
-
-    Sketch output need not bit-match other engines → verified
-    rows-only (SURVEY §7.4).
-    """
-    return df.agg(F.percentile_approx(col, 0.5).alias(alias))
 
 
 def group_min_max(

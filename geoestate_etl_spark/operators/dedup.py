@@ -207,28 +207,13 @@ def cap_hot_buckets(
 # --- shingles + minhash -----------------------------------------------------
 
 
-def shingles(c: Column | str, k: int = 3) -> Column:
-    """k-word shingle set of the normalized text (distinct, sorted).
-
-    Built with higher-order functions: split → sliding windows via
-    transform over an index sequence → array_distinct.
-    """
-    col = F.col(c) if isinstance(c, str) else c
-    words = F.split(normalize_text(col), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, k))
-    )
-    return F.array_sort(F.array_distinct(sh))
-
-
 def shingle_ids(c: Column | str, k: int = 3) -> Column:
     """Numeric k-shingle ids: hash each word once, combine k word
     hashes arithmetically — no per-shingle string building. Same
-    set-semantics as :func:`shingles` modulo negligible hash-collision
-    probability; 2-3x cheaper, and downstream set ops (minhash,
-    intersect/union for Jaccard) run on longs instead of strings.
+    set-semantics as the distinct k-word shingle strings modulo
+    negligible hash-collision probability; 2-3x cheaper, and
+    downstream set ops (minhash, intersect/union for Jaccard) run on
+    longs instead of strings.
 
     Masks keep every intermediate within signed-64 range (ANSI mode
     throws on overflow): word hashes 31 bits, and the accumulator is
@@ -397,8 +382,9 @@ def shingle_sig_batch(
 
 
 def _simhash_kernel(texts):
-    """Batch 32-bit SimHash: same sign-sum construction as
-    :func:`simhash32` over splitmix64-mixed token hashes."""
+    """Batch 32-bit SimHash over splitmix64-mixed token hashes: bit
+    b is set when more of a document's tokens have bit b set than
+    not."""
     word_h, offsets = _token_hashes(texts)
     word_h = _mix64(word_h)
     bit_idx = np.arange(32, dtype=np.uint64)
@@ -415,7 +401,7 @@ def _simhash_kernel(texts):
 
 
 def simhash_batch(text_col: Column | str) -> Column:
-    """Arrow-batched 32-bit SimHash column (fast path of ``simhash32``)."""
+    """Arrow-batched 32-bit SimHash column (:func:`_simhash_kernel`)."""
     @F.pandas_udf(T.LongType())
     def _f(s: pd.Series) -> pd.Series:
         return pd.Series(_simhash_kernel(s.fillna("").tolist()))
@@ -442,8 +428,8 @@ def minhash_signatures(
     arrow: bool = True,
 ) -> DataFrame:
     """The materializable signature relation ``(id, sh, sig)`` — the
-    standing table an incremental near-dup deployment persists between
-    batches (see :func:`incremental_near_dups`).
+    standing table a near-dup deployment can persist between
+    batches.
 
     ``sh`` is the shingle-id set (for the exact-Jaccard rescore),
     ``sig`` the MinHash signature (for LSH banding). Both are pure
@@ -509,10 +495,9 @@ def minhash_pairs_exact(
 
     100 TB shape is unchanged from the live path: one band-explode of
     the signature table, an equi-join on band buckets, and a rescore
-    join that touches only candidate ids — the signature table is
-    exactly the standing relation :func:`incremental_near_dups`
-    maintains, so this is also the query you run over a persisted
-    signature store without re-reading any text.
+    join that touches only candidate ids, so this is also the query
+    you run over a persisted signature store without re-reading any
+    text.
     """
     banded = band_explode(sigs, num_hashes, bands)
     banded = cap_hot_buckets(banded, ["band_hash"], max_bucket_size)
@@ -543,152 +528,6 @@ def minhash_pairs_exact(
             "id_b",
             F.expr("_i * 10000 div greatest(_u, 1)").alias("score_bp"),
         )
-    )
-
-
-def incremental_near_dups(
-    batch: DataFrame,
-    standing_sigs: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    k_shingle: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    max_bucket_size: int | None = 256,
-    arrow: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """History-aware near-dup pairs: O(batch), not O(history).
-
-    Returns ``(pairs, batch_sigs)``. ``pairs`` are every near-dup pair
-    with AT LEAST ONE side in ``batch`` — batch-vs-batch and
-    batch-vs-history; history-vs-history pairs were already reported
-    when those batches arrived, so they are never recomputed (that is
-    the entire point: per-batch cost is the batch's bucket joins, not
-    a corpus-wide rescan). ``batch_sigs`` is the batch's signature
-    relation — union it into the standing table
-    (:func:`update_signatures`) to make the next batch incremental.
-
-    Contract: ids are unique across history ∪ batch (same id space),
-    and the standing table was built with the SAME
-    (k_shingle, num_hashes, arrow) parameters — signatures from
-    different parameterizations never produce comparable band hashes
-    (run-to-run determinism is the signature functions' contract).
-
-    100 TB shape: the standing table is a plain columnar table keyed
-    by id; the per-batch work is one signature scan of the batch, one
-    band-explode of each side, and an equi-join on ``band_hash``
-    whose LEFT side is only the batch — with the standing banded
-    relation bucketed/partitioned by ``band_hash`` at rest, that join
-    prunes to the batch's buckets. The hot-bucket cap bounds the
-    quadratic-in-bucket term exactly as in the full-corpus path
-    (capped on combined occupancy, so a bucket that went hot across
-    history stops generating pairs instead of blowing up).
-
-    Equivalence invariant (pinned in tests): full-corpus
-    ``minhash_near_dups(history ∪ batch)`` == pairs reported by the
-    batch sequence, for any split of the corpus into batches, modulo
-    pairs suppressed by a cap that fires at different times.
-    """
-    batch_sigs = minhash_signatures(
-        batch, text_col, id_col, k_shingle, num_hashes, arrow
-    ).persist()  # feeds banding + rescore + the returned standing-update
-    banded_new = band_explode(batch_sigs, num_hashes, bands)
-    if standing_sigs is None:
-        banded_all = banded_new
-        all_sigs = batch_sigs
-    else:
-        # prune history to the buckets this batch actually touches
-        # BEFORE the cap groupBy and pair join — untouched buckets can
-        # produce no pairs, so semantics (incl. cap occupancy of the
-        # touched buckets) are unchanged while the join and cap stop
-        # scaling with history size. A deployment additionally stores
-        # the standing table PRE-banded and partitioned by band_hash,
-        # making this semi-join partition pruning at rest.
-        banded_hist = band_explode(standing_sigs, num_hashes, bands).join(
-            banded_new.select("band_hash").distinct(), "band_hash", "semi"
-        )
-        banded_all = banded_new.unionByName(banded_hist)
-        # the rescore join prunes itself: only pair ids are looked up,
-        # and the session's runtime Bloom-filter injection keeps the
-        # standing side's shuffle bounded by the candidate set
-        all_sigs = batch_sigs.unionByName(standing_sigs)
-    # cap on COMBINED occupancy; the batch side needs no separate cap —
-    # its rows in hot buckets match nothing once the right side drops
-    # the bucket, which is exactly the full-corpus path's behavior
-    banded_all = cap_hot_buckets(banded_all, ["band_hash"], max_bucket_size)
-    left, right = banded_new.alias("l"), banded_all.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") != F.col("r.id")),
-        )
-        .select(
-            F.least("l.id", "r.id").alias("id_a"),
-            F.greatest("l.id", "r.id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sets = all_sigs.select("id", "sh")
-    cands = pairs.join(
-        sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    out = (
-        cands.withColumn(
-            "jaccard", F.round(inter / F.greatest(union, F.lit(1)), 4)
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out, batch_sigs
-
-
-def batch_drop_ids(
-    pairs: DataFrame, batch_ids: DataFrame, id_col: str
-) -> DataFrame:
-    """Which BATCH ids a pair relation eliminates, under the streaming
-    keeper policy: history always wins (it is already served and
-    immutable), the smaller id wins within the batch — an id is never
-    resurrected by its eliminator itself being dropped (greedy against
-    the ordering, the SemDeDup rule).
-
-    ``pairs`` carries ``(id_a, id_b)`` with ``id_a < id_b`` and at
-    least one batch side; ``batch_ids`` is a one-column frame of this
-    batch's ids named ``id_col``. Shared by the streaming ingest's
-    near-dup stage and ``incremental_semantic_dedup`` so the policy
-    lives in exactly one place.
-    """
-    ids = batch_ids.select(F.col(id_col).alias("_bid"))
-    tagged = pairs.join(
-        ids.withColumnRenamed("_bid", "id_a").withColumn("_a_new", F.lit(True)),
-        "id_a",
-        "left",
-    ).join(
-        ids.withColumnRenamed("_bid", "id_b").withColumn("_b_new", F.lit(True)),
-        "id_b",
-        "left",
-    )
-    return tagged.select(
-        F.when(F.col("_a_new") & F.col("_b_new").isNull(), F.col("id_a"))
-        .otherwise(F.col("id_b"))  # vs-history (new side) or in-batch id_b
-        .alias(id_col)
-    ).distinct()
-
-
-def update_signatures(
-    standing: DataFrame | None, batch_sigs: DataFrame
-) -> DataFrame:
-    """Fold a batch's signatures into the standing table. Re-ingested
-    ids keep their FIRST row (min-id-free dedupe on the id itself):
-    signatures are content-deterministic, so a true re-crawl is
-    byte-identical anyway and the keeper choice is immaterial."""
-    if standing is None:
-        return batch_sigs
-    return standing.unionByName(
-        batch_sigs.join(standing.select("id"), "id", "left_anti")
     )
 
 
@@ -773,82 +612,14 @@ def minhash_near_dups(
 # --- simhash ----------------------------------------------------------------
 
 
-def simhash32(c: Column | str) -> Column:
-    """32-bit SimHash of the whitespace tokens.
-
-    bit b = sign of Σ_tokens (2·((xxhash64(tok)>>b)&1) − 1). Pure
-    higher-order aggregation — per-bit sums fold over the token array.
-    """
-    col = F.col(c) if isinstance(c, str) else c
-    toks = F.split(normalize_text(col), " ")
-    h = F.transform(toks, lambda t: F.xxhash64(t))
-
-    zero = F.lit(0).cast(T.LongType())
-
-    # ONE fold over the token hashes: accumulator = vector of 32 signed
-    # bit-sums, each token contributes ±1 per bit (literal-unrolled
-    # shifts keep everything JVM-side; a fold-per-bit re-walks the
-    # tokens 32 times).
-    def merge(acc, x):
-        contrib = F.array(
-            *[
-                (F.shiftright(x, b).bitwiseAND(F.lit(1)) * 2 - 1).cast(T.LongType())
-                for b in range(32)
-            ]
-        )
-        return F.zip_with(acc, contrib, lambda a, v: a + v)
-
-    # pack in the aggregate's finish fn: `acc` is a bound variable there,
-    # so the fold runs once no matter how many bits reference it
-    def pack(acc):
-        out = zero
-        for b in range(32):
-            out = out + F.when(
-                acc.getItem(b) > 0, F.lit(1 << b).cast(T.LongType())
-            ).otherwise(zero)
-        return out
-
-    return F.aggregate(h, F.array_repeat(zero, 32), merge, pack)
-
-
-def simhash_near_dups(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 1024,
-    arrow: bool = True,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ ``max_hamming``.
-
-    LSH on 4 byte-blocks of the 32-bit hash; by pigeonhole, distance
-    ≤ 3 guarantees at least one identical 8-bit block, so candidate
-    recall is exact. Candidates equi-join on (block_id, block_value),
-    then exact popcount rescore — never an all-pairs comparison.
-
-    ``max_bucket_size`` caps block-bucket occupancy like the MinHash
-    path (see :func:`cap_hot_buckets`); the exact-recall pigeonhole
-    guarantee holds for every pair whose shared blocks all stay under
-    the cap. Default is looser than MinHash's because an 8-bit block
-    has only 256 values — benign buckets run bigger.
-    """
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    sh_col = simhash_batch(text_col) if arrow else simhash32(text_col)
-    # base feeds three plan branches (bucket-cap count + both join
-    # sides); persist so the hash scan runs once (lifetime: session,
-    # same contract as the minhash path's signature cache).
-    base = df.select(F.col(id_col).alias("id"), sh_col.alias("sh")).persist()
-    return simhash_pairs(base, max_hamming, max_bucket_size)
-
-
 def simhash_pairs(
     hashed: DataFrame,
     max_hamming: int = 3,
     max_bucket_size: int | None = 1024,
 ) -> DataFrame:
     """Block-LSH + popcount rescore over a precomputed hash relation
-    ``(id, sh)`` (``sh`` = 32-bit SimHash as long) — the join half of
-    :func:`simhash_near_dups`, split out so a MATERIALIZED hash table
+    ``(id, sh)`` (``sh`` = 32-bit SimHash as long, see
+    :func:`simhash_batch`), so a MATERIALIZED hash table
     (e.g. the committed signature artifact the certified registry
     query reads) goes straight to pairs without re-hashing text, and
     so a SQL oracle can reproduce the byte-block bucketing, cap, and

@@ -2423,7 +2423,7 @@ def embed_media_stub(
     production shape: binary payloads cross the Arrow boundary once
     per batch via ``mapInPandas``, the batch is embedded as ONE numpy
     matrix (the GPU-inference batch shape), and the output feeds the
-    similarity tier unchanged (`ivf_build`/`knn_join`/`semantic_dedup`
+    similarity tier unchanged (`ivf_build`/`ivf_probe`/`semantic_dedup`
     consume it as-is — composition pinned in tests). Identical bytes
     ⇒ identical embedding, so exact-dup media dedup via this column is
     content-addressed and layout-independent.

@@ -35,34 +35,19 @@ from pyspark.sql import types as T
 
 
 def symmetrized_edges(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    directed: bool,
-    extra_cols: tuple[str, ...] = (),
-    dedup: bool = True,
+    edges: DataFrame, src_col: str, dst_col: str, directed: bool
 ) -> DataFrame:
-    """Canonical edge prep shared by the path/walk family: cast ids to
-    long, mirror when undirected, dedup. One home for the contract
-    (r4 review: three copies had drifted into being).
-
-    ``dedup=False`` (r10) skips the trailing ``distinct()`` for
-    callers that fold the dedup into their own keyed exchange (the BFS
-    and SSSP loops repartition by ``u`` anyway, and HashPartitioning
-    on ``u`` already co-locates every (u, v) duplicate, so their
-    dropDuplicates needs no second shuffle)."""
-    cols = [
+    """Edge prep for the BFS loop: cast ids to long and mirror when
+    undirected. No dedup here: the loop folds it into its own keyed
+    exchange (HashPartitioning on ``u`` already co-locates every
+    (u, v) duplicate, so its dropDuplicates needs no second shuffle)."""
+    e = edges.select(
         F.col(src_col).cast("long").alias("u"),
         F.col(dst_col).cast("long").alias("v"),
-    ] + [F.col(c) for c in extra_cols]
-    e = edges.select(*cols)
-    if not directed:
-        e = e.union(
-            e.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), *extra_cols
-            )
-        )
-    return e.distinct() if dedup else e
+    )
+    if directed:
+        return e
+    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
 
 def bfs_distances(
@@ -105,7 +90,7 @@ def bfs_distances(
     from geoestate_etl_spark.stage import observed
 
     e = (
-        symmetrized_edges(edges, src_col, dst_col, directed, dedup=False)
+        symmetrized_edges(edges, src_col, dst_col, directed)
         .repartition(F.col("u"))
         .dropDuplicates()
         .sortWithinPartitions("u")
@@ -150,111 +135,5 @@ def bfs_distances(
                 visited = visited.union(nxt)
                 frontier = nxt.select("id")
         return visited
-    finally:
-        e.unpersist()
-
-
-def sssp_distances(
-    edges: DataFrame,
-    source: int,
-    max_hops: int = 8,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-    directed: bool = False,
-) -> DataFrame:
-    """``(id, cost)`` minimum-cost distances over ≤ ``max_hops`` edges
-    (hop-bounded Bellman–Ford) — the weighted sibling of
-    :func:`bfs_distances`.
-
-    Weights are INTEGER (micro-unit doctrine, docs/ORACLE_NOTES.md):
-    min() over exact integer path costs is associative and
-    order-independent, so the fixpoint is bit-deterministic under any
-    partitioning — the property a float-weighted relax loop lacks.
-
-    Per round: relax every edge out of the CURRENT distance set (one
-    keyed join), fold candidates into the set with a node-keyed
-    ``min`` aggregate (node-bounded, never path-bounded — the reason
-    Bellman-Ford maps to data-parallel frameworks while Dijkstra's
-    priority queue does not), early-stop when no cost improved.
-    Negative edges are tolerated up to the hop bound (no negative-
-    cycle divergence: the bound caps path length).
-    """
-    # same keyed one-exchange edge layout as bfs_distances (r10):
-    # repartition by the join key, dedup and sort riding that exchange
-    e = (
-        symmetrized_edges(
-            edges.select(
-                F.col(src_col).alias("src"),
-                F.col(dst_col).alias("dst"),
-                F.col(weight_col).cast("long").alias("w"),
-            ),
-            "src",
-            "dst",
-            directed,
-            extra_cols=("w",),
-            dedup=False,
-        )
-        .repartition(F.col("u"))
-        .dropDuplicates()
-        .sortWithinPartitions("u")
-        .persist()
-    )
-
-    spark = edges.sparkSession
-    # same iteration discipline as bfs_distances (r10): materialize the
-    # edge cache, size the relax loop's checkpoint shuffles from the
-    # measured edge count (no-op at scale), and let the convergence
-    # check ride the eager checkpoint via Observation instead of a
-    # dedicated isEmpty join job per round.
-    from geoestate_etl_spark.operators.components import (
-        _iteration_shuffle_window,
-    )
-    from geoestate_etl_spark.stage import observed
-
-    # released in ``finally``, as in bfs_distances: the returned frame
-    # is checkpoint-truncated, and a failing round leaves no cache
-    # registered
-    try:
-        n_edges = e.count()
-        dist = spark.createDataFrame(
-            [(int(source), 0)],
-            T.StructType(
-                [
-                    T.StructField("id", T.LongType()),
-                    T.StructField("cost", T.LongType()),
-                ]
-            ),
-        ).localCheckpoint(eager=True)
-        with _iteration_shuffle_window(spark, n_edges):
-            for _ in range(max_hops):
-                relaxed = (
-                    dist.join(e, dist["id"] == e["u"])
-                    .select(F.col("v").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
-                )
-                # convergence = no node improved and none appeared: the
-                # old cost rides the aggregate (min over cost carries the
-                # pair (cost, old) per node), observed during the
-                # checkpoint's materialization
-                new_dist, read_improved = observed(
-                    dist.withColumnRenamed("cost", "old")
-                    .withColumn("cost", F.col("old"))
-                    .unionByName(relaxed.withColumn("old", F.lit(None).cast("long")))
-                    .groupBy("id")
-                    .agg(
-                        F.min("cost").alias("cost"),
-                        F.min("old").alias("_old"),
-                    ),
-                    F.sum(
-                        (
-                            F.col("_old").isNull()
-                            | (F.col("cost") < F.col("_old"))
-                        ).cast("long")
-                    ).alias("improved"),
-                )
-                dist = new_dist.drop("_old").localCheckpoint(eager=True)
-                if int(read_improved()["improved"] or 0) == 0:
-                    break
-        return dist
     finally:
         e.unpersist()

@@ -374,8 +374,7 @@ def consume_token_budget(
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental twin of :func:`sample_to_token_budget`: consume the
     remaining per-domain budgets with one ARRIVING batch, carrying a
-    standing ``consumed`` state table across batches (the mixture-
-    construction shape of `incremental_near_dups` / `ivf_append`).
+    standing ``consumed`` state table across batches.
 
     ``consumed`` is a ``(domain, tokens)`` relation (None = fresh
     start). Within the batch, docs are taken in md5(id) order; a doc

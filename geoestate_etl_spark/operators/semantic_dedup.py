@@ -148,10 +148,9 @@ def incremental_semantic_dedup(
     """SemDeDup for arriving batches: O(batch), history immutable.
 
     Both inputs carry ``(id, cell, vector)`` with cells assigned by the
-    SAME frozen centroids (``operators.similarity.assign_cells`` — the
-    add-after-train lifecycle `ivf_append` uses; retrain on a slower
-    cadence re-materializes the standing table). Returns
-    ``(pairs, decisions)``: every ≥-threshold pair with at least one
+    SAME frozen centroids (``operators.similarity.assign_cells``;
+    retrain on a slower cadence re-materializes the standing table).
+    Returns ``(pairs, decisions)``: every ≥-threshold pair with at least one
     batch side, and one decision row per BATCH item — history items'
     decisions were made when they arrived and never change.
 
@@ -210,9 +209,7 @@ def incremental_semantic_dedup(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    from geoestate_etl_spark.operators.dedup import batch_drop_ids
-
-    dropped = batch_drop_ids(pairs, batch_clustered.select(id_col), id_col)
+    dropped = _batch_drop_ids(pairs, batch_clustered.select(id_col), id_col)
     decisions = (
         batch_clustered.join(
             dropped.withColumn("_dropped", F.lit(True)), id_col, "left"
@@ -224,6 +221,35 @@ def incremental_semantic_dedup(
         )
     )
     return pairs, decisions
+
+
+def _batch_drop_ids(
+    pairs: DataFrame, batch_ids: DataFrame, id_col: str
+) -> DataFrame:
+    """Which BATCH ids a pair relation eliminates: history always wins
+    (it is already served and immutable), the smaller id wins within
+    the batch — an id is never resurrected by its eliminator itself
+    being dropped (greedy against the ordering, the SemDeDup rule).
+
+    ``pairs`` carries ``(id_a, id_b)`` with ``id_a < id_b`` and at
+    least one batch side; ``batch_ids`` is a one-column frame of this
+    batch's ids named ``id_col``.
+    """
+    ids = batch_ids.select(F.col(id_col).alias("_bid"))
+    tagged = pairs.join(
+        ids.withColumnRenamed("_bid", "id_a").withColumn("_a_new", F.lit(True)),
+        "id_a",
+        "left",
+    ).join(
+        ids.withColumnRenamed("_bid", "id_b").withColumn("_b_new", F.lit(True)),
+        "id_b",
+        "left",
+    )
+    return tagged.select(
+        F.when(F.col("_a_new") & F.col("_b_new").isNull(), F.col("id_a"))
+        .otherwise(F.col("id_b"))  # vs-history (new side) or in-batch id_b
+        .alias(id_col)
+    ).distinct()
 
 
 def semantic_dedup(

@@ -1,7 +1,7 @@
 """Point-in-time (temporal) join: facts against a versioned dimension.
 
-The read-side companion of ``merge.scd2_apply``: given a dimension
-with [valid_from, valid_to) versions, attach to each fact row the
+The read side of a slowly-changing (SCD2) dimension: given a
+dimension with [valid_from, valid_to) versions, attach to each fact row the
 version that was current at the fact's timestamp — the correctness
 primitive for ML feature assembly (no leakage from the future) and
 for reproducing reports as-of a date.

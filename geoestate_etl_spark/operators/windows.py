@@ -1,10 +1,9 @@
-"""Window-function operators (reference W1, SURVEY §2.5) + the standard
-ranking/analytic family.
+"""Window-function operators (reference W1, SURVEY §2.5).
 
 The reference's one window op is a *global* renumbering:
 ``row_number().over(Window.orderBy("house_id"))`` with no partitionBy
 (``dags/main.py:230-231``) — Catalyst collapses that to ONE partition,
-a single-task total sort. We ship it three ways:
+a single-task total sort. We ship it two ways:
 
 - ``renumber_global``   — faithful semantics (fine ≤ ~10M rows).
 - ``renumber_scalable`` — identical output, computed distributed:
@@ -12,8 +11,6 @@ a single-task total sort. We ship it three ways:
   partition, broadcast the per-partition offsets, add to an intra-
   partition row_number. Two narrow passes, no single-task stage —
   this is the 100 TB path.
-- ``rank_features``     — rank/dense_rank/lag/lead/ntile declared as
-  engine capability (partitioned windows, shuffle on partition keys).
 """
 
 from __future__ import annotations
@@ -181,30 +178,4 @@ def renumber_scalable(df: DataFrame, order_key: str, id_alias: str) -> DataFrame
         local.join(F.broadcast(offsets), "_bkt")
         .withColumn(id_alias, (F.col("_local_rn") + F.col("_offset")).cast(T.LongType()))
         .drop("_bkt", "_local_rn", "_offset")
-    )
-
-
-def rank_features(
-    df: DataFrame,
-    part_keys: list[str],
-    order: list[Column],
-    value: str,
-) -> DataFrame:
-    """Ranking + analytic window family over partitioned windows.
-
-    rank / dense_rank / row_number / lag / lead / running sum on
-    ``value`` within each partition. One shuffle on the partition keys;
-    frames are explicit where semantics need them.
-    """
-    w = Window.partitionBy(*part_keys).orderBy(*order)
-    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.select(
-        *part_keys,
-        value,
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("dense_rnk"),
-        F.lag(value, 1).over(w).alias("prev_value"),
-        F.lead(value, 1).over(w).alias("next_value"),
-        F.sum(value).over(running).alias("running_sum"),
     )

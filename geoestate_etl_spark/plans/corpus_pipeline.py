@@ -147,11 +147,10 @@ def run_corpus(
     fingerprints (column ``fp``) from previously ingested batches;
     gated rows whose fingerprint already exists leave via a left-anti
     join before the in-batch dedup stages, so processing stays
-    O(batch), not O(history). History-aware *near*-dup removal needs
-    the standing table to carry MinHash signatures too — that tier
-    lives in :func:`operators.dedup.incremental_near_dups` (and the
-    streaming ingest's ``sig_dir`` stage), keeping this corpus-wide
-    job the slower-cadence full re-cluster. Maintain the table with
+    O(batch), not O(history). History-aware *near*-dup removal would
+    need the standing table to carry MinHash signatures too; near
+    dups are found by this corpus-wide job's slower-cadence full
+    re-cluster instead. Maintain the table with
     :meth:`CorpusResult.fingerprints`.
 
     Three to five actions total: the span-drop count (only when

@@ -204,8 +204,8 @@ def run_paired_corpus(
     election, at the exact tiers. Processing stays O(batch); like the
     media pipeline's ``seen_hashes``, historical re-encodes /
     perceptual / near-dup twins are the in-batch tiers' job on a full
-    re-cluster (history-aware NEAR-dup needs standing signatures —
-    ``operators/dedup.incremental_near_dups``). Maintain the tables
+    re-cluster (history-aware NEAR-dup would need standing
+    signatures). Maintain the tables
     with :meth:`PairedCorpusResult.image_hashes` /
     :meth:`PairedCorpusResult.caption_fingerprints`.
     """

@@ -947,8 +947,8 @@ def _similarity_ann_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus pass for all three variants (r4 perf pass): the
     # bucketize scan tags every row with its LSH-candidate flag, a
     # broadcast join against the cell-pruned assignment adds the IVF
-    # flag, and the union-filtered rows are scored once. Composing
-    # lsh_topk + ivf_probe + hybrid_topk would bucketize/scan the
+    # flag, and the union-filtered rows are scored once. Three
+    # separate probes (LSH, IVF, their union) would bucketize/scan the
     # corpus three times for identical candidate sets. The scored
     # frame (~scan-fraction of N) is eagerly checkpointed so the three
     # top-10s don't re-run the scan; semantics are the operators' own:

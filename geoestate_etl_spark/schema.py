@@ -40,8 +40,6 @@ HOUSES_RAW_SCHEMA = T.StructType(
     [T.StructField(f.name, T.StringType()) for f in HOUSES_SCHEMA.fields]
 )
 
-HOUSES_COLUMNS = [f.name for f in HOUSES_SCHEMA.fields]
-
 #: Text columns that must be non-null and non-blank (dags/main.py:189-194).
 #: Exactly the reference's ``valid_text_fields`` set — note it does NOT
 #: require ``full_address`` (a derived display column), and it DOES

@@ -11,9 +11,6 @@ from geoestate_etl_spark.operators.dedup import (
     dedup_by_key,
     dedup_exact,
     minhash_near_dups,
-    shingles,
-    simhash32,
-    simhash_near_dups,
 )
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
@@ -56,19 +53,6 @@ def test_minhash_finds_near_dups(docs):
     assert (1, 4) in pairs or (1, 2) in pairs  # near/exact dups surface
     assert pairs.get((1, 2)) == 1.0  # exact dup -> jaccard 1
     assert all(not (a == 5 or b == 5) for a, b in pairs)  # OTHER matches nothing
-
-
-def test_simhash_exact_dup_distance_zero(docs, spark):
-    out = {r.doc_id: r.sh for r in docs.select("doc_id", simhash32("text").alias("sh")).collect()}
-    assert out[1] == out[2] == out[3]  # identical normalized text -> same hash
-    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_near_dups(docs, "text", "doc_id").collect()}
-    assert pairs[(1, 2)] == 0 and pairs[(1, 3)] == 0
-
-
-def test_shingles_short_doc(spark):
-    df = spark.createDataFrame([(1, "one two")], ["id", "text"])
-    out = df.select(shingles("text", 3).alias("sh")).collect()[0].sh
-    assert out == ["one two"]  # shorter than k -> single whole-doc shingle
 
 
 def test_minhash_survives_short_and_empty_docs(spark):

@@ -129,135 +129,3 @@ def test_ivf_sq8_index_recall_and_size(emb, probe, tmp_path):
         )
 
     assert size(p_q) < 0.5 * size(p_f)
-
-
-def test_ivf_probe_batch_matches_single_probes(emb, probe):
-    """Batch probing must return exactly what looping ivf_probe over
-    the same probe vectors returns (same index, same n_probe)."""
-    from geoestate_etl_spark.operators.similarity import (
-        ivf_build,
-        ivf_probe,
-        ivf_probe_batch,
-    )
-
-    spark = emb.sparkSession
-    assigned, cents = ivf_build(emb, n_cells=16)
-    assigned = assigned.persist()
-    try:
-        probe_rows = emb.filter(F.col("vec_id").isin([0, 7, 19])).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("probe_vec"),
-        )
-        batch = ivf_probe_batch(
-            assigned, cents, probe_rows, k=5, n_probe=4
-        ).collect()
-        got = {}
-        for r in batch:
-            got.setdefault(r.probe_id, []).append((r.vec_id, r.cos_sim))
-        for pid in (0, 7, 19):
-            vec = [
-                float(x)
-                for x in emb.filter(F.col("vec_id") == pid).first().embedding
-            ]
-            single = [
-                (r.vec_id, r.cos_sim)
-                for r in ivf_probe(assigned, cents, vec, k=5, n_probe=4).collect()
-            ]
-            assert sorted(got[pid]) == sorted(single), f"probe {pid}"
-            assert len(got[pid]) == 5
-    finally:
-        assigned.unpersist()
-
-
-def test_ivf_append_equals_full_probe_and_is_idempotent(emb, probe, tmp_path, spark):
-    """Serving-index append lifecycle: build on half the corpus, append
-    the other half — full-probe over the appended index must equal
-    brute force over the WHOLE corpus (frozen centroids cannot break
-    exactness, only balance), and a retried append is a no-op."""
-    from geoestate_etl_spark.operators.similarity import (
-        ivf_append,
-        ivf_probe,
-        ivf_read_index,
-        ivf_write_index,
-    )
-
-    path = str(tmp_path / "idx")
-    old = emb.filter(F.col("vec_id") % 2 == 0)
-    new = emb.filter(F.col("vec_id") % 2 == 1)
-    ivf_write_index(old, path, n_cells=8)
-
-    report = ivf_append(spark, path, new)
-    assert report["n_appended"] == new.count()
-    assert report["rows_total"] == emb.count()
-    assert report["max_cell"] >= report["avg_cell"] > 0
-
-    assigned, cents = ivf_read_index(spark, path)
-    got = [
-        r.vec_id
-        for r in ivf_probe(assigned, cents, probe, k=10, n_probe=8).collect()
-    ]
-    exact = [r.vec_id for r in brute_force_topk(emb, probe, k=10).collect()]
-    assert got == exact  # full probe == brute force over old ∪ new
-
-    # retry: same batch appends nothing and the census is unchanged
-    again = ivf_append(spark, path, new)
-    assert again["n_appended"] == 0
-    assert again["rows_total"] == emb.count()
-
-
-def test_ivf_append_quantized_index_keeps_code_layout(emb, tmp_path, spark):
-    from geoestate_etl_spark.operators.similarity import (
-        _QUANT_COL,
-        ivf_append,
-        ivf_read_index,
-        ivf_write_index,
-    )
-
-    path = str(tmp_path / "idx8")
-    ivf_write_index(emb.filter(F.col("vec_id") < 100), path, n_cells=4, quantize=True)
-    ivf_append(spark, path, emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 200)))
-    assigned, _ = ivf_read_index(spark, path)
-    assert _QUANT_COL in assigned.columns and "embedding" not in assigned.columns
-    assert assigned.count() == 200
-
-
-def test_knn_join_full_probe_equals_brute_force(emb, spark):
-    """kNN graph with n_probe = n_cells must equal per-vector brute
-    force exactly (rounding and tiebreaks aligned); partial probe is a
-    subset relation per query."""
-    import numpy as np
-
-    from geoestate_etl_spark.operators.similarity import ivf_build, knn_join
-
-    sub = emb.filter(F.col("vec_id") < 60)
-    assigned, cents = ivf_build(sub, n_cells=4)
-    full = knn_join(assigned, cents, k=5, n_probe=4)
-    rows = full.collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r.vec_id, []).append((r.cos_sim, r.neighbor_id))
-
-    data = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in sub.collect()}
-    for qid, qv in data.items():
-        sims = []
-        for cid, cv in data.items():
-            if cid == qid:
-                continue
-            denom = float(np.sqrt(qv @ qv) * np.sqrt(cv @ cv))
-            c = float(qv @ cv) / denom if denom else 0.0
-            sims.append((round(c, 4), cid))
-        want = sorted(sims, key=lambda t: (-t[0], t[1]))[:5]
-        have = sorted(got[qid], key=lambda t: (-t[0], t[1]))
-        assert [i for _, i in have] == [i for _, i in want], qid
-    # every vector has exactly k graph edges
-    assert all(len(v) == 5 for v in got.values())
-
-    partial = knn_join(assigned, cents, k=5, n_probe=1)
-    pg = {}
-    for r in partial.collect():
-        pg.setdefault(r.vec_id, set()).add(r.neighbor_id)
-    # partial probe returns <= k neighbors, all of them real vectors
-    assert all(len(v) <= 5 and v <= set(data) for v in pg.values())
-    plan = full._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan

@@ -205,7 +205,7 @@ def test_embed_media_feeds_similarity_tier(spark, tmp_path):
     deterministically (content-addressed), identical payloads dedup to
     cosine 1.0, and the column plugs into ivf_build unchanged."""
     from geoestate_etl_spark.operators.multimodal import embed_media_stub, make_png
-    from geoestate_etl_spark.operators.similarity import ivf_build, knn_join
+    from geoestate_etl_spark.operators.similarity import ivf_build, ivf_probe
     from geoestate_etl_spark.sources.binary_source import (
         media_table,
         read_binary_files,
@@ -228,13 +228,14 @@ def test_embed_media_feeds_similarity_tier(spark, tmp_path):
     assert rows[ids_by_path["a.png"]] != rows[ids_by_path["c.png"]]
 
     # and the embedding column is similarity-tier-ready as-is
-    assigned, cents = ivf_build(emb, n_cells=2, id_col="media_id")
-    graph = knn_join(assigned, cents, k=2, n_probe=2, id_col="media_id")
-    pairs = {
-        (r.media_id, r.neighbor_id): r.cos_sim for r in graph.collect()
-    }
     a, b = ids_by_path["a.png"], ids_by_path["b.png"]
-    assert pairs[(a, b)] == 1.0 and pairs[(b, a)] == 1.0  # exact dup media
+    assigned, cents = ivf_build(emb, n_cells=2, id_col="media_id")
+    top = ivf_probe(
+        assigned, cents, [float(x) for x in rows[a]], k=2, n_probe=2,
+        id_col="media_id",
+    )
+    hits = {r.media_id: r.cos_sim for r in top.collect()}
+    assert hits == {a: 1.0, b: 1.0}  # exact dup media
 
 
 def test_sniff_mp4_box_walk():

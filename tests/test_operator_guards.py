@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 from geoestate_etl_spark.operators.asof import asof_join
-from geoestate_etl_spark.operators.similarity import embedding_near_dups
 from geoestate_etl_spark.operators.spatial import radius_join
 
 
@@ -22,21 +21,6 @@ def test_radius_join_rejects_shared_names(spark):
     b = spark.createDataFrame([(2, 0.0, 0.0)], ["id2", "lat", "lon"])
     with pytest.raises(ValueError, match="must differ"):
         radius_join(a, b, 10.0, 1.0)
-
-
-def test_embedding_near_dups_derives_dim(spark):
-    # 8-dim vectors with NO dim argument: must bucket correctly (a
-    # wrong fixed dim would NULL every hyperplane dot and collapse
-    # all rows into one bucket)
-    rows = [
-        (1, [1.0] * 8),
-        (2, [1.0] * 7 + [1.001]),
-        (3, [-1.0, 1.0] * 4),
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    pairs = {(r.id_a, r.id_b) for r in
-             embedding_near_dups(df, num_planes=6, cosine_threshold=0.99).collect()}
-    assert (1, 2) in pairs and not any(3 in p for p in pairs)
 
 
 def test_temporal_join_rejects_shared_columns(spark):
@@ -55,25 +39,10 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(df).count() == 0
 
 
-def test_embedding_near_dups_empty_input(spark):
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    df = spark.createDataFrame([], schema)
-    assert embedding_near_dups(df).count() == 0
-
-
 def test_no_row_at_a_time_udf_in_package():
     """Engine discipline (VERDICT r5 #6): row-at-a-time ``F.udf`` is
     the slow path and is banned from the package — Arrow-batched
-    ``pandas_udf`` / ``mapInPandas`` are the only Python seams. The
-    last site (quality_model's VectorUDT densifier) was replaced with
-    ``pyspark.ml.functions.array_to_vector`` in r6."""
+    ``pandas_udf`` / ``mapInPandas`` are the only Python seams."""
     import pathlib
     import re
 

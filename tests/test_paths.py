@@ -94,106 +94,22 @@ def test_registry_histogram_is_connected_smallworld(spark):
     assert len(hist) >= 3  # at least source, its orders, co-suppliers
 
 
-# ---- weighted hop-bounded Bellman-Ford --------------------------------
-
-
-def _wedges(spark, triples):
-    return spark.createDataFrame(triples, "src long, dst long, w long")
-
-
-def test_sssp_prefers_cheap_long_path(spark):
-    from geoestate_etl_spark.operators.paths import sssp_distances
-
-    # 0->3 direct costs 10; 0->1->2->3 costs 3 — more hops, cheaper
-    e = _wedges(spark, [(0, 3, 10), (0, 1, 1), (1, 2, 1), (2, 3, 1)])
-    got = {r.id: r.cost for r in sssp_distances(e, 0, max_hops=5).collect()}
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3}
-
-
-def test_sssp_hop_bound_truncates(spark):
-    from geoestate_etl_spark.operators.paths import sssp_distances
-
-    e = _wedges(spark, [(0, 3, 10), (0, 1, 1), (1, 2, 1), (2, 3, 1)])
-    got = {r.id: r.cost for r in sssp_distances(e, 0, max_hops=2).collect()}
-    # within 2 hops the direct edge wins for node 3
-    assert got == {0: 0, 1: 1, 2: 2, 3: 10}
-
-
-def test_sssp_cycle_terminates(spark):
-    from geoestate_etl_spark.operators.paths import sssp_distances
-
-    e = _wedges(spark, [(0, 1, 2), (1, 2, 2), (2, 0, 2)])
-    got = {r.id: r.cost for r in sssp_distances(e, 0, max_hops=10).collect()}
-    assert got == {0: 0, 1: 2, 2: 2}  # undirected: 2 reachable both ways
-
-
-def test_sssp_matches_reference_bellman_ford(spark):
-    from geoestate_etl_spark.operators.paths import sssp_distances
-
-    import random
-
-    rnd = random.Random(11)
-    triples = [
-        (rnd.randrange(30), rnd.randrange(30), rnd.randrange(1, 20))
-        for _ in range(60)
-    ]
-    e = _wedges(spark, triples)
-    H = 8
-    got = {r.id: r.cost for r in sssp_distances(e, 0, max_hops=H).collect()}
-
-    # pure-python hop-bounded Bellman-Ford on the symmetrized edges
-    adj = triples + [(v, u, w) for u, v, w in triples]
-    INF = float("inf")
-    want = {0: 0}
-    for _ in range(H):
-        new = dict(want)
-        for u, v, w in adj:
-            if want.get(u, INF) + w < new.get(v, INF):
-                new[v] = want[u] + w
-        if new == want:
-            break
-        want = new
-    assert got == want
-
-
-def test_sssp_equals_bfs_on_unit_weights(spark):
-    from geoestate_etl_spark.operators.paths import bfs_distances, sssp_distances
-
-    import random
-
-    rnd = random.Random(3)
-    pairs = [(rnd.randrange(25), rnd.randrange(25)) for _ in range(50)]
-    e = _wedges(spark, [(u, v, 1) for u, v in pairs])
-    sp = {r.id: r.cost for r in sssp_distances(e, 0, max_hops=25).collect()}
-    bf = {
-        r.id: r.dist
-        for r in bfs_distances(
-            spark.createDataFrame(pairs, "src long, dst long"), 0, max_hops=25
-        ).collect()
-    }
-    assert sp == {k: v for k, v in bf.items()}
-
-
 def test_failing_level_releases_edge_cache(spark, monkeypatch):
     """A fault after the edge cache is built (here: the first
     checkpoint of the level loop) propagates and leaves no persisted
-    RDD behind, in both the BFS and the weighted SSSP loop."""
-    from geoestate_etl_spark.operators.paths import sssp_distances
+    RDD behind."""
 
     def boom(self, eager=True):
         raise RuntimeError("injected level fault")
 
-    e = spark.createDataFrame(
-        [(0, 1, 1), (1, 2, 1), (2, 3, 1)], "src long, dst long, w long"
-    )
+    e = _edges(spark, [(0, 1), (1, 2), (2, 3)])
     monkeypatch.setattr(type(e), "localCheckpoint", boom)
-    for distances in (bfs_distances, sssp_distances):
-        # let Spark's context cleaner drop the RDDs of earlier tests'
-        # collected frames first, so only this call changes the set
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.5)
-        before = set(spark.sparkContext._jsc.getPersistentRDDs())
-        with pytest.raises(RuntimeError, match="injected"):
-            distances(e, 0)
-        assert set(spark.sparkContext._jsc.getPersistentRDDs()) == before, distances
+    # let Spark's context cleaner drop the RDDs of earlier tests'
+    # collected frames first, so only this call changes the set
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.5)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+    with pytest.raises(RuntimeError, match="injected"):
+        bfs_distances(e, 0)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) == before

@@ -134,20 +134,6 @@ def test_minhash_hot_bucket_cap_bounds_skew(spark):
     assert len(hot) >= 1 and all(r.n_members >= 5000 for r in hot)
 
 
-def test_embedding_near_dups_planes_scale_with_n(spark):
-    """planes_for_size keeps expected bucket occupancy ~constant."""
-    from geoestate_etl_spark.operators.similarity import planes_for_size
-
-    assert planes_for_size(100) == 8
-    assert planes_for_size(1_000_000) == 16
-    assert planes_for_size(1_000_000_000) == 26
-    assert planes_for_size(10**13) == 28  # clamped
-    # monotone non-decreasing
-    sizes = [10**k for k in range(2, 12)]
-    ps = [planes_for_size(s) for s in sizes]
-    assert ps == sorted(ps)
-
-
 def test_temporal_bucketed_hot_key_200k_versions(spark):
     """One key with 200k one-day versions (the many-versions regime the
     bucketed variant exists for): facts resolve analytically — the
@@ -346,52 +332,6 @@ def test_adaptive_skew_join_matches_direct_10m(spark, big):
     direct = checksum(big.join(dim, ["key"], "inner"))
     got = checksum(none_hot)
     assert (direct.n, direct.h) == (got.n, got.h)
-
-
-def test_incremental_neardup_fold_at_10k_docs(spark):
-    """Fold invariant at working scale: 10k synthetic docs with planted
-    cross-batch near-dup families, split into 3 arrival batches —
-    per-batch pairs must sum to exactly the full-corpus rerun."""
-    from geoestate_etl_spark.operators.dedup import (
-        incremental_near_dups,
-        minhash_near_dups,
-        update_signatures,
-    )
-
-    docs = spark.range(10_000).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(
-            " ",
-            # family = id//4: a 12-word template per family, drawn from
-            # a vocabulary keyed by the family itself (fam*13+j) so no
-            # two families share words -> high overlap within a family,
-            # none across, and no bucket ever nears the hot cap (the
-            # cap fires on arrival-time occupancy, which legitimately
-            # differs between full and incremental runs — out of scope
-            # here, covered by the cap-consistency unit test)
-            *[
-                F.concat(
-                    F.lit("w"),
-                    (F.col("id") / 4).cast("long") * 13 + j,
-                )
-                for j in range(12)
-            ],
-            # one per-doc word so family members are near, not exact
-            F.concat(F.lit("uniq"), F.col("id")),
-        ).alias("text"),
-    )
-    kw = dict(jaccard_threshold=0.5, num_hashes=24, bands=8)
-    full = minhash_near_dups(docs, "text", "doc_id", **kw)
-    n_full = full.count()
-    assert n_full > 5_000  # the planted families really produce pairs
-
-    standing, n_inc = None, 0
-    for b in range(3):
-        batch = docs.filter(F.col("doc_id") % 3 == b)
-        pairs, sigs = incremental_near_dups(batch, standing, "text", "doc_id", **kw)
-        n_inc += pairs.count()
-        standing = update_signatures(standing, sigs)
-    assert n_inc == n_full
 
 
 def test_spatial_join_1m_points_1k_polygons(spark):

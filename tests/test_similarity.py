@@ -1,5 +1,5 @@
-"""Similarity-search semantics on constructed vectors + LSH recall
-against the brute-force ground truth on the real embeddings table."""
+"""Similarity-search semantics on constructed vectors and the exact
+top-k paths on the real embeddings table."""
 
 from __future__ import annotations
 
@@ -12,8 +12,6 @@ from pyspark.sql import types as T
 from geoestate_etl_spark.functions.vectors import cosine, dot, norm
 from geoestate_etl_spark.operators.similarity import (
     brute_force_topk,
-    embedding_near_dups,
-    lsh_topk,
     make_hyperplanes,
 )
 from tests.conftest import SF_ORACLE
@@ -65,31 +63,6 @@ def test_hyperplanes_deterministic():
     b = make_hyperplanes(4, 8)
     assert a == b
     assert all(v in (-1.0, 1.0) for row in a for v in row)
-
-
-def test_lsh_recall_vs_bruteforce(spark):
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
-    exact = [r.vec_id for r in brute_force_topk(emb, probe, k=10).collect()]
-    approx = [r.vec_id for r in lsh_topk(emb, probe, k=10).collect()]
-    # multi-probe LSH on 8 planes, radius 2: the probe's own vector must
-    # rank first; overlap floor is the measured value on this (near-random,
-    # LSH-adversarial) synthetic data — deterministic given fixed planes
-    assert approx[0] == exact[0] == 0
-    assert len(set(exact) & set(approx)) >= 2
-
-
-def test_embedding_near_dups_planted(spark):
-    rows = [
-        (1, [1.0, 2.0, 3.0, 4.0]),
-        (2, [1.0001, 2.0001, 3.0001, 4.0001]),  # planted near-dup
-        (3, [-4.0, 3.0, -2.0, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, VEC_SCHEMA)
-    pairs = {(r.id_a, r.id_b): r.cos_sim for r in
-             embedding_near_dups(df, num_planes=6, dim=4, cosine_threshold=0.99).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 0.99
-    assert not any(3 in p for p in pairs)
 
 
 def test_batch_topk_matches_per_probe(spark):
@@ -153,46 +126,3 @@ def test_topk_per_group_partial_matches_window(spark):
                                   ["g", "score", "tie", "payload"])
     out = top_k_per_group_partial(small, ["g"], "score", "tie", 10).collect()
     assert [r.score for r in out] == [5, 3] or sorted(r.score for r in out) == [3, 5]
-
-
-def test_hybrid_recall_superset_of_both_paths(spark):
-    """Hybrid = exact re-rank over (LSH ∪ IVF) candidates: its recall
-    vs brute force must be >= each constituent's, and with full
-    coverage (all cells + radius=planes) it must equal brute force."""
-    from geoestate_etl_spark.operators.similarity import (
-        hybrid_topk,
-        ivf_build,
-        ivf_probe,
-    )
-
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
-    exact = [r.vec_id for r in brute_force_topk(emb, probe, k=10).collect()]
-    lsh = [r.vec_id for r in lsh_topk(emb, probe, k=10).collect()]
-    assigned, cents = ivf_build(emb, n_cells=16)
-    assigned = assigned.persist()
-    try:
-        ivf = [
-            r.vec_id
-            for r in ivf_probe(assigned, cents, probe, k=10, n_probe=4).collect()
-        ]
-        hyb = [
-            r.vec_id
-            for r in hybrid_topk(emb, probe, assigned, cents, k=10).collect()
-        ]
-        r_lsh = len(set(exact) & set(lsh))
-        r_ivf = len(set(exact) & set(ivf))
-        r_hyb = len(set(exact) & set(hyb))
-        assert hyb[0] == 0  # the probe's own vector ranks first
-        assert r_hyb >= max(r_lsh, r_ivf)
-        # exhaustive configuration degenerates to exact brute force
-        full = [
-            r.vec_id
-            for r in hybrid_topk(
-                emb, probe, assigned, cents, k=10,
-                probe_radius=8, n_probe=16,
-            ).collect()
-        ]
-        assert full == exact
-    finally:
-        assigned.unpersist()
