@@ -6,8 +6,7 @@ does DOM-aware main-content detection; none of those ship here, and
 the 80% answer — drop scripts/styles/comments/tags, unescape the
 common entities, collapse whitespace — is exactly expressible as
 chained ``regexp_replace`` Columns: JVM-side, codegen-friendly, no
-Python in the hot path. The link extractor feeds
-``functions.urls.canonical_url`` for URL-keyed dedup of a crawl.
+Python in the hot path.
 
 Honest limits (documented, tested): no DOM means no main-content
 vs nav/footer separation (the quality gate's stopword/length signals
@@ -20,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["strip_markup", "extract_links", "looks_like_markup"]
+__all__ = ["strip_markup", "looks_like_markup"]
 
 _ENTITIES = [
     ("&nbsp;", " "),
@@ -54,17 +53,6 @@ def strip_markup(c: Column | str) -> Column:
     # numeric character references: decimal + hex, common plane only
     col = F.regexp_replace(col, r"&#x?[0-9a-fA-F]{1,6};", " ")
     return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
-def extract_links(c: Column | str) -> Column:
-    """``array<string>`` of href/src values (both quote styles),
-    document order, duplicates kept — dedup belongs to the URL layer
-    (``urls.dedup_by_url``), which also canonicalizes."""
-    col = _c(c)
-    raw = F.regexp_extract_all(
-        col, F.lit(r"""(?i)\b(?:href|src)\s*=\s*["']([^"']+)["']"""), F.lit(1)
-    )
-    return raw
 
 
 def looks_like_markup(c: Column | str, min_tags: int = 2) -> Column:

@@ -1,11 +1,10 @@
-"""URL parsing, canonicalization, and URL-keyed dedup — the web-corpus
-hygiene layer (CommonCrawl-style pipelines dedup by canonical URL
-before any content-based pass; it is the cheapest dedup signal there
-is: one string op per row, no content hashing).
+"""URL parsing and canonicalization — the web-corpus hygiene layer
+(CommonCrawl-style pipelines dedup by canonical URL before any
+content-based pass; it is the cheapest dedup signal there is: one
+string op per row, no content hashing).
 
 Everything is built-in column expressions (regexp + array ops), so the
-whole path stays inside whole-stage codegen — no UDF, no shuffle until
-the final keyed dedup, which groups by the canonical URL hash.
+whole path stays inside whole-stage codegen — no UDF, no shuffle.
 
 Canonicalization rules (the common production subset):
 - scheme and host lowercased; fragment dropped
@@ -22,7 +21,7 @@ join) in production.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: multi-part public suffixes the simplified registered-domain
@@ -101,32 +100,4 @@ def registered_domain(host: Column) -> Column:
     take = F.when(is_multi, F.lit(3)).otherwise(F.lit(2))
     return F.when(n <= take, host).otherwise(
         F.array_join(F.slice(labels, n - take + 1, take), ".")
-    )
-
-
-def dedup_by_url(
-    df: DataFrame, url_col: str = "url", order_col: str | None = None
-) -> DataFrame:
-    """One row per canonical URL — the keeper is the min ``order_col``
-    (default: min of ``url_col`` itself, deterministic). Same
-    hash-groupBy shape as ``dedup.dedup_by_key``: shuffles only the
-    canonical-url key + keeper id, resolves via one self-semi-join.
-
-    Unparseable URLs (``canonical_url`` → NULL) fall back to their raw
-    string as the key, so they dedup only on exact raw equality —
-    keying the NULL itself would hash every malformed URL into one
-    group and silently drop all but one row."""
-    key = F.xxhash64(
-        F.coalesce(canonical_url(F.col(url_col)), F.col(url_col))
-    ).alias("_curl_hash")
-    order = F.col(order_col) if order_col else F.col(url_col)
-    with_key = df.withColumn("_curl_hash", key).withColumn("_ord", order)
-    keepers = with_key.groupBy("_curl_hash").agg(F.min("_ord").alias("_keep_ord"))
-    return (
-        with_key.join(keepers, "_curl_hash")
-        .filter(F.col("_ord") == F.col("_keep_ord"))
-        .drop("_curl_hash", "_ord", "_keep_ord")
-        # a canonical URL can still carry two rows if _ord ties across
-        # distinct raw rows — callers needing strict 1-per-key add a
-        # unique order_col (dedup_by_key's contract, same trade)
     )

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["bloom_word", "bloom_mask", "bloom_build", "bloom_probe", "bloom_merge"]
+__all__ = ["bloom_word", "bloom_mask", "bloom_build", "bloom_probe"]
 
 #: in-word probe bits per element (6 bits of hash each; 4×6=24 < 64
 #: hash bits consumed, independent of the word-index hash by seed)
@@ -119,19 +119,3 @@ def bloom_probe(
         .filter(F.col("_bb").bitwiseAND(F.col("_pm")) == F.col("_pm"))
         .drop("_pw", "_pm", "_bw", "_bb")
     )
-
-
-def bloom_merge(*filters: DataFrame) -> DataFrame:
-    """Union of filters built with the SAME (num_words, k): element-wise
-    ``bit_or`` over word rows. EXACTLY equals building one filter over
-    the unioned inputs (bit_or is associative/commutative — pinned in
-    tests), which makes per-epoch delta filters a mergeable sketch:
-    build per streaming epoch / per partition-batch, merge for
-    serving, the CMS/HLL store lifecycle (`streaming/sketch_store`)
-    applied to membership."""
-    if not filters:
-        raise ValueError("bloom_merge needs at least one filter")
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))

@@ -39,7 +39,7 @@ import re
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -149,31 +149,6 @@ class BpeModel:
         inv = {i: s for s, i in self.vocab.items()}
         text = "".join(inv.get(i, "�") for i in ids)
         return text.replace(EOW, " ").strip()
-
-    # -- persistence as plain relations ------------------------------------
-
-    def to_frames(self, spark: SparkSession) -> tuple[DataFrame, DataFrame]:
-        """(merges_df(rank, left, right), vocab_df(token, id)) — plain
-        tables; any engine (or a later session) rebuilds the model from
-        them with :func:`model_from_frames`."""
-        merges_df = spark.createDataFrame(
-            [(i, a, b) for i, (a, b) in enumerate(self.merges)],
-            "rank int, left string, right string",
-        )
-        vocab_df = spark.createDataFrame(
-            sorted(self.vocab.items(), key=lambda kv: kv[1]),
-            "token string, id int",
-        )
-        return merges_df, vocab_df
-
-
-def model_from_frames(merges_df: DataFrame, vocab_df: DataFrame) -> BpeModel:
-    merges = [
-        (r.left, r.right)
-        for r in merges_df.select("rank", "left", "right").orderBy("rank").collect()
-    ]
-    vocab = {r.token: r.id for r in vocab_df.select("token", "id").collect()}
-    return BpeModel(merges=merges, vocab=vocab)
 
 
 def train_bpe(

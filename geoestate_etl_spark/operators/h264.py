@@ -18,7 +18,7 @@ What decodes FOR REAL here (r7):
   grid-sum oracles composable).
 
 What stays closed — permanently, by the r7 cost/benefit decision
-recorded in ``multimodal.pixel_decode_unavailable``: entropy-coded
+recorded in the ``operators/multimodal.py`` docstring: entropy-coded
 residual macroblocks (CAVLC/CABAC prediction+transform coding). Any
 slice containing one returns None — honest None, never garbage
 pixels. This split demonstrates concretely which part of "H.264

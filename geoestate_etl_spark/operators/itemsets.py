@@ -1,21 +1,13 @@
 """Frequent-itemset mining (market-basket analysis) — co-occurrence
 analytics over (basket, item) relations.
 
-Two tiers:
-
-- :func:`frequent_pairs` — exact 2-itemset support counting as a pure
-  DataFrame self-join: baskets are deduped to their item SET, the
-  within-basket pair explosion is bounded by (basket size choose 2)
-  — baskets in transactional data are small (orders hold ≤7 parts in
-  the testdata; retail baskets tens) so the blow-up is a constant per
-  basket, never corpus-quadratic — and the pair count is one hash
-  aggregation. Fully SQL-expressible, driver-oracled.
-- :func:`frequent_itemsets_fp` — arbitrary-k itemsets via stock
-  ``pyspark.ml.fpm.FPGrowth`` (the quality_model/Word2Vec pattern:
-  pyspark.ml fits the bounded model, everything corpus-scale stays
-  declarative). Its k=2 slice must agree exactly with
-  :func:`frequent_pairs` — pinned by test, which certifies the ml
-  bridge against the oracled path.
+:func:`frequent_pairs` — exact 2-itemset support counting as a pure
+DataFrame self-join: baskets are deduped to their item SET, the
+within-basket pair explosion is bounded by (basket size choose 2) —
+baskets in transactional data are small (orders hold ≤7 parts in the
+testdata; retail baskets tens) so the blow-up is a constant per
+basket, never corpus-quadratic — and the pair count is one hash
+aggregation. Fully SQL-expressible, driver-oracled.
 
 Scale: the self-join keys on the basket id, so the shuffle moves one
 row per (basket, item) — input-sized. Support filtering pushes into
@@ -75,116 +67,3 @@ def frequent_pairs(
         .agg(F.count("*").alias("support"))
         .filter(F.col("support") >= min_support)
     )
-
-
-def association_rules(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_support: int = 2,
-    min_confidence_pct: int = 20,
-    max_basket_size: int | None = None,
-) -> DataFrame:
-    """``(antecedent, consequent, support, confidence_pct_e2, lift_e6)``
-    — both directions of every frequent pair, thresholded with EXACT
-    integer cross-multiplication (``s_ab·100 ≥ pct·s_a``, the
-    micro-unit doctrine: no float in any predicate), confidence and
-    lift exported as scaled integers derived from the exact counts.
-
-    lift > 1e6 (i.e. > 1.0) means the pair co-occurs more than
-    independence predicts — the curation signal for bundling /
-    co-occurrence features.
-
-    ``max_basket_size`` passes the hot-basket guard through (r4
-    review) and applies it CONSISTENTLY: dropped mega-baskets are
-    excluded from item supports and the basket count too, so
-    confidence/lift stay internally coherent rather than mixing a
-    capped numerator with uncapped denominators."""
-    base = df.select(
-        F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-    ).distinct()
-    if max_basket_size is not None:
-        small = (
-            base.groupBy("b")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") <= max_basket_size)
-            .select("b")
-        )
-        base = base.join(small, "b", "left_semi")
-    n_baskets = base.select("b").distinct().count()
-    item_support = base.groupBy("i").agg(F.count("*").alias("s_i"))
-    pairs = frequent_pairs(
-        base, "b", "i", min_support, max_basket_size=None
-    )
-    both = pairs.select(
-        F.col("item_a").alias("antecedent"),
-        F.col("item_b").alias("consequent"),
-        "support",
-    ).union(
-        pairs.select(
-            F.col("item_b").alias("antecedent"),
-            F.col("item_a").alias("consequent"),
-            "support",
-        )
-    )
-    return (
-        both.join(
-            item_support.select(
-                F.col("i").alias("antecedent"), F.col("s_i").alias("s_a")
-            ),
-            "antecedent",
-        )
-        .join(
-            item_support.select(
-                F.col("i").alias("consequent"), F.col("s_i").alias("s_c")
-            ),
-            "consequent",
-        )
-        .filter(
-            F.col("support") * 100 >= F.lit(min_confidence_pct) * F.col("s_a")
-        )
-        .select(
-            "antecedent",
-            "consequent",
-            "support",
-            F.round(F.col("support") * 10_000.0 / F.col("s_a"))
-            .cast("long")
-            .alias("confidence_pct_e2"),
-            F.round(
-                F.col("support")
-                * F.lit(float(n_baskets))
-                * 1_000_000.0
-                / (F.col("s_a") * F.col("s_c"))
-            )
-            .cast("long")
-            .alias("lift_e6"),
-        )
-    )
-
-
-def frequent_itemsets_fp(
-    df: DataFrame,
-    basket_col: str,
-    item_col: str,
-    min_support_frac: float,
-) -> DataFrame:
-    """``(items array, freq)`` for all itemset sizes via FPGrowth.
-    ``min_support_frac`` is FPGrowth's relative support (fraction of
-    baskets). Items are stringified for the ml API; callers keep
-    their own id mapping."""
-    from pyspark.ml.fpm import FPGrowth
-
-    baskets = (
-        df.select(
-            F.col(basket_col).alias("b"),
-            F.col(item_col).cast("string").alias("i"),
-        )
-        .groupBy("b")
-        .agg(F.array_sort(F.collect_set("i")).alias("items"))
-    )
-    # no minConfidence: it only shapes associationRules, never the
-    # freqItemsets this returns (r4 review — dead configuration)
-    model = FPGrowth(itemsCol="items", minSupport=min_support_frac).fit(
-        baskets
-    )
-    return model.freqItemsets

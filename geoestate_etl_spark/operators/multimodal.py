@@ -4,19 +4,32 @@ Media are opaque ``binary`` columns + a typed metadata struct. The
 Spark-side plumbing — schema, Arrow batch shape, ``mapInPandas``
 signatures, partition sizing — is real and tested.
 
-Two decode tiers:
+Two decode tiers, both pure Python/stdlib:
 
-- ``decode_media_real`` — REAL container-header decoding, pure
-  Python/stdlib: PNG (IHDR), BMP (DIB), GIF (logical screen), WAV
-  (RIFF fmt/data chunks), MP4 (ISO-BMFF box walk), JPEG (SOFn marker
-  walk — r5). True dimensions / channels / sample rate /
-  frame counts from actual bytes — no codec library needed for
-  container metadata, so this path is fully live in this container.
-- ``decode_media`` — deterministic pseudo-metadata stub kept for
-  plumbing tests and as the documented seam where PIXEL-level work
-  (decompression, resampling, frame extraction) would plug in; that
-  part genuinely needs PIL/ffmpeg, which are absent here, and is
-  marked by ``pixel_decode_unavailable``.
+- ``decode_media_real`` — REAL container-header decoding: PNG (IHDR),
+  BMP (DIB), GIF (logical screen), WAV (RIFF fmt/data chunks), MP4
+  (ISO-BMFF box walk), JPEG (SOFn marker walk — r5). True dimensions /
+  channels / sample rate / frame counts from actual bytes — no codec
+  library needed for container metadata, so this path is fully live
+  in this container.
+- ``decode_media_content`` — REAL pixel/sample decoding: PNG/BMP/GIF
+  pixels, baseline AND progressive JPEG (:func:`jpeg_pixels` — full
+  Huffman + IDCT, spectral selection, successive approximation), WAV
+  PCM samples, AVI DIB/MJPEG frames, and MP4 Motion-JPEG tracks via
+  the full stsd/stsz/stsc/stco sample-table walk (:func:`mp4_frames`).
+
+The codec boundary (r7, VERDICT r6 #6): entropy-coded H.264/H.265
+sample bodies are not decoded — ``mp4_frames``/``avi_frames`` return
+None for avc1/hvc1/hev1 bodies while their sample TABLES parse fully
+(``tests/test_multimodal.py::test_avc1_honest_none_contract`` pins
+this). Baseline I-frame CAVLC alone needs the coeff_token/total_zeros/
+run_before VLC families, nC neighbor tracking, Intra_4x4/16x16/chroma
+prediction, the 4x4 inverse transform and deblocking — an estimated
+1,500+ lines plus an independent test encoder, still leaving CABAC,
+inter frames and H.265 out. At scale that stage is a codec library
+(PyAV/ffmpeg) whose batch-fn body drops into the SAME mapInPandas
+plan. ``operators/h264.py`` ships the bitstream layer (NAL plumbing,
+SPS/PPS, slice headers) and real decode of I_PCM macroblocks.
 
 Scale notes: binary payloads make rows wide — keep
 ``spark.sql.files.maxPartitionBytes`` moderate and use
@@ -34,68 +47,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-#: Metadata produced by the (stub) decoder.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha_prefix", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-    ]
-)
-
-
-def attach_fake_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic fake media: utf-8 bytes of the text as payload.
-
-    Stands in for reading real image/audio bytes; keeps the binary
-    column type and size distribution realistic enough to exercise
-    the plumbing.
-    """
-    return df.select(
-        F.col(id_col).cast(T.LongType()).alias("media_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("content"),
-    )
-
-
-def decode_media(df: DataFrame) -> DataFrame:
-    """STUB decoder over ``mapInPandas`` (Arrow-batched).
-
-    Computes deterministic pseudo-metadata from the payload bytes
-    (sizes, sha prefix, fake dimensions derived from byte content).
-    Real codec integration replaces ``_fake_decode`` only.
-    """
-
-    def _fake_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            content = pdf["content"]
-            n_bytes = content.map(len)
-            sha = content.map(lambda b: hashlib.sha256(b).hexdigest()[:16])
-            # fake dimensions: stable function of the payload hash
-            h = content.map(lambda b: int.from_bytes(hashlib.sha256(b).digest()[:4], "big"))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "sha_prefix": sha,
-                    "width": (h % 1920 + 1).astype("int32"),
-                    "height": (h // 1920 % 1080 + 1).astype("int32"),
-                    "n_frames": (n_bytes % 240 + 1).astype("int32"),
-                }
-            )
-
-    # spread Arrow batches across cores — media tables often arrive as
-    # few large files, and decode is the CPU stage. Capped fan-out: each
-    # partition spawns a Python worker, and worker spin-up dominates on
-    # small inputs (at real scale, input partitioning already exceeds this)
-    parallelism = min(df.sparkSession.sparkContext.defaultParallelism, 8)
-    df = df.repartition(parallelism)
-    return df.mapInPandas(_fake_decode, MEDIA_META_SCHEMA)
 
 
 #: Metadata produced by the REAL container-header decoder.
@@ -680,7 +631,7 @@ def avi_frames(b: bytes):
     frame chunk is a baseline JPEG handed to :func:`jpeg_pixels`.
     Returns ``(n_frames, height, width, 3)`` uint8 or None. Remaining
     entropy-coded codecs (H.264 CAVLC/CABAC etc.) return None — the
-    honest no-codec boundary (see ``pixel_decode_unavailable``)."""
+    honest no-codec boundary (see the module docstring)."""
     import struct
 
     if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
@@ -1560,55 +1511,6 @@ def decode_media_content(
     return df.mapInPandas(_decode, out_schema)
 
 
-def resize_image_nearest(df: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize (nearest-neighbor) for stdlib-decodable
-    payloads: decode PNG/BMP pixels, index-map to the target grid, and
-    re-encode as grayscale PNG bytes (channel-mean luminance). Rows
-    whose payload this path cannot decode pass through with NULL
-    content — the caller decides whether to route them to a codec
-    service. Output: (media_id, content[binary PNG], width, height).
-    """
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = sniff_media(b)["format"]
-                px = png_pixels(b) if fmt == "png" else (
-                    bmp_pixels(b) if fmt == "bmp" else (
-                        gif_pixels(b) if fmt == "gif" else None
-                    )
-                )
-                if px is None:
-                    out.append((int(mid), None, width, height))
-                    continue
-                h0, w0 = px.shape[:2]
-                ys = (np.arange(height) * h0) // height
-                xs = (np.arange(width) * w0) // width
-                gray = px.mean(axis=2).astype(np.uint8)[ys][:, xs]
-                out.append(
-                    (int(mid), _encode_gray_png(gray), width, height)
-                )
-            yield pd.DataFrame(
-                out, columns=["media_id", "content", "width", "height"]
-            )
-
-    parallelism = min(df.sparkSession.sparkContext.defaultParallelism, 8)
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
-    return df.mapInPandas(_resize, out_schema)
-
-
 def _encode_gray_png(gray) -> bytes:
     """Re-encode a 2-D uint8 array as a valid grayscale PNG (filter 0
     rows, one IDAT) — the :func:`make_png` chunk writer over real data."""
@@ -1631,59 +1533,6 @@ def _encode_gray_png(gray) -> bytes:
         + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
-    )
-
-
-def pixel_decode_unavailable() -> None:
-    """The remaining genuinely-stubbed step, narrowed to one CODEC
-    class (r6): H.264/H.265 sample decoding needs ffmpeg, absent in
-    this container and far beyond stdlib scope. Everything else
-    decodes for real — PNG/BMP/GIF pixels, baseline AND progressive
-    JPEG (:func:`jpeg_pixels` — full Huffman + IDCT, spectral
-    selection, successive approximation), WAV PCM samples, AVI
-    DIB/MJPEG frames, and MP4 Motion-JPEG tracks via the full
-    stsd/stsz/stsc/stco sample-table walk (:func:`mp4_frames` — the
-    walk itself runs for EVERY codec; only compressed sample bodies
-    return None). Container METADATA decodes for every format.
-
-    **r7 boundary decision (VERDICT r6 #6) — the entropy-coded H.264/
-    H.265 boundary is closed PERMANENTLY, by explicit cost/benefit:**
-
-    - *Cost*: baseline I-frame CAVLC alone needs the context-adaptive
-      coeff_token/total_zeros/run_before VLC table families, nC
-      neighbor tracking, 9-mode Intra_4x4 + Intra_16x16 + chroma
-      prediction with availability logic, the 4x4 integer inverse
-      transform + DC Hadamard, and the in-loop deblocking filter for
-      conformant output — an estimated 1,500+ lines of entropy/DSP
-      code PLUS an equally large independent test encoder (the
-      container has no ffmpeg to validate against). That is a second
-      JPEG-sized project targeting one codec generation, and it still
-      leaves CABAC (the profile real crawl video actually uses),
-      inter frames, and H.265 out.
-    - *Benefit*: at 100 TB the video-decode stage is never stdlib
-      Python — a production deployment attaches a codec library
-      (PyAV/ffmpeg) whose batch-fn body drops into the SAME
-      mapInPandas plan (schema, partitioning, Arrow batch shape all
-      already real and tested here). The engine-side work — the part
-      this repo is graded on — is complete without it.
-    - *Contract*: ``mp4_frames``/``avi_frames`` return None for
-      entropy-coded avc1/hvc1/hev1 sample bodies while their sample
-      TABLES parse fully; ``tests/test_multimodal.py::test_avc1_
-      honest_none_contract`` pins this permanently.
-    - *What r7 DID ship instead* (``operators/h264.py``): the full
-      H.264 BITSTREAM layer — Annex-B + avcC NAL plumbing, emulation
-      unescape, Exp-Golomb, SPS/PPS with cropping, IDR slice headers,
-      and real decode of **I_PCM macroblocks** (raw uncompressed
-      samples). That is the engine-plumbing half of "H.264 support",
-      demonstrably real; the entropy-DSP half is the part a codec
-      library owns.
-    """
-    raise NotImplementedError(
-        "H.264/H.265 codecs are not installed; JPEG (baseline + "
-        "progressive), PNG/BMP/GIF pixel decode, WAV PCM decode, AVI "
-        "DIB/MJPEG and MP4 MJPEG-track frame decode, and container-"
-        "header decoding are fully functional — a codec library would "
-        "replace only the batch-fn body, same mapInPandas plan shape"
     )
 
 
@@ -2305,107 +2154,6 @@ def attach_real_media(df: DataFrame, id_col: str) -> DataFrame:
     base = df.select(F.col(id_col).cast(T.LongType()).alias("media_id"))
     parallelism = min(df.sparkSession.sparkContext.defaultParallelism, 8)
     return base.repartition(parallelism).mapInPandas(_gen, gen_schema)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize placeholder: passes metadata through with target dims.
-
-    A real implementation transforms the binary payload per Arrow
-    batch; the plan shape (mapInPandas over the same schema) is
-    already what production would run.
-    """
-    return df.withColumn("width", F.lit(width).cast(T.IntegerType())).withColumn(
-        "height", F.lit(height).cast(T.IntegerType())
-    )
-
-
-def frame_sample_stub(df: DataFrame, every_nth: int = 24) -> DataFrame:
-    """Frame-sampling placeholder: derives sampled frame indices from
-    the fake frame count — the explode pattern is the real plan."""
-    idx = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_nth))
-    return df.select("media_id", F.explode(idx).alias("frame_idx"))
-
-
-#: One row per SAMPLED video frame (see :func:`sample_video_frames`).
-VIDEO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("px_sum", T.LongType()),
-        T.StructField("px_max", T.IntegerType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-
-
-def sample_video_frames(
-    df: DataFrame, every_nth: int = 24, encode_png: bool = True
-) -> DataFrame:
-    """REAL video frame sampling (no longer the stub — late r5): AVI
-    payloads decode via :func:`avi_frames` and every ``every_nth``-th
-    frame becomes a row with exact integer pixel stats and (optionally)
-    the frame re-encoded as a grayscale PNG in ``content`` — so a
-    sampled frame feeds the image tier unchanged
-    (:func:`embed_media_stub`, :func:`resize_image_nearest`,
-    :func:`decode_media_content`). AVI (DIB or Motion-JPEG), MP4 with
-    a Motion-JPEG track (r6), and MP4 avc1 I_PCM streams (r7) all
-    decode; rows whose payload is not decodable video produce no
-    frames — the honest codec boundary (entropy-coded H.264/H.265
-    needs a codec library). Input: (media_id, content).
-
-    Scale shape: Arrow-batched ``mapInPandas``; output row count is
-    bounded by total-frames/every_nth, never payload size; per-frame
-    work is numpy, no per-pixel Python.
-    """
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(payload) if payload is not None else b""
-                frames = avi_frames(b) if b[:4] == b"RIFF" else mp4_frames(b)
-                if frames is None:
-                    continue
-                n, h, w = frames.shape[:3]
-                for fi in range(0, n, every_nth):
-                    fr = frames[fi].astype(np.int64)
-                    png = (
-                        _encode_gray_png(
-                            frames[fi].mean(axis=2).astype(np.uint8)
-                        )
-                        if encode_png
-                        else None
-                    )
-                    rows.append(
-                        (
-                            int(mid),
-                            fi,
-                            int(w),
-                            int(h),
-                            int(fr.sum()),
-                            int(fr.max()),
-                            png,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "px_sum", "px_max", "content",
-                ],
-            ).astype(
-                {"frame_idx": "Int32", "width": "Int32", "height": "Int32",
-                 "px_sum": "Int64", "px_max": "Int32"}
-            )
-
-    parallelism = min(df.sparkSession.sparkContext.defaultParallelism, 8)
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
-    return df.select("media_id", "content").mapInPandas(
-        _sample, VIDEO_FRAME_SCHEMA
-    )
 
 
 def embed_media_stub(

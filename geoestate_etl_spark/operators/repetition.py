@@ -1,8 +1,8 @@
 """Intra-document repetition signals (Gopher-style quality filters).
 
 Rae et al. 2021 ("Scaling Language Models: ... Gopher", public) filter
-training documents on repetition: duplicate-line fractions and
-most-frequent-n-gram character fractions. These are standard
+training documents on repetition signals, among them the
+most-frequent-n-gram character fractions computed here. These are standard
 training-data curation gates (web text full of repeated boilerplate
 lines and chant-like n-gram loops scores high and gets dropped).
 
@@ -90,47 +90,4 @@ def ngram_repetition(
         top.getField("g").alias("top_gram"),
         top.getField("c").alias("top_n"),
         F.sum(F.col("c") - 1).alias("dup_occ"),
-    )
-
-
-def line_repetition(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\r?\n",
-) -> DataFrame:
-    """Per-doc duplicate-line stats over ``sep``-separated lines
-    (trimmed, empties dropped):
-
-    - ``n_lines`` — total non-empty lines;
-    - ``dup_lines`` — occurrences beyond each line's first;
-    - ``dup_line_chars`` / ``total_line_chars`` — the same, weighted
-      by line length (Gopher's duplicate-line character fraction is
-      ``dup_line_chars / total_line_chars``).
-
-    Docs with no non-empty lines are absent (left-join + coalesce).
-    ``sep`` is a regex (``F.split``); the default handles LF and CRLF
-    — ``F.trim`` strips spaces only, so a bare ``\\n`` split would
-    leave invisible ``\\r`` suffixes that break duplicate detection on
-    Windows-ending corpora (r4 review finding).
-    """
-    # no repartition here: split/explode/trim all codegen, so the
-    # single-partition map side is cheap and the groupBy shuffle
-    # spreads the aggregation anyway (r4 review — the HOF-spread rule
-    # applies to ngram_repetition's interpreted gram build, not this)
-    lines = (
-        docs.select(
-            F.col(id_col), F.explode(F.split(text_col, sep)).alias("_l")
-        )
-        .select(F.col(id_col), F.trim("_l").alias("line"))
-        .filter(F.col("line") != "")
-    )
-    lc = lines.groupBy(id_col, "line").agg(
-        F.count(F.lit(1)).alias("c")
-    ).withColumn("len", F.length("line"))
-    return lc.groupBy(id_col).agg(
-        F.sum("c").alias("n_lines"),
-        F.sum(F.col("c") - 1).alias("dup_lines"),
-        F.sum((F.col("c") - 1) * F.col("len")).alias("dup_line_chars"),
-        F.sum(F.col("c") * F.col("len")).alias("total_line_chars"),
     )

@@ -109,62 +109,3 @@ def bm25_topk(
         .limit(k)
         .withColumn("rn", F.row_number().over(w).cast("long"))
     )
-
-
-def rrf_fuse(
-    rankings: list[DataFrame],
-    k: int = 10,
-    c: int = 60,
-    id_col: str = "doc_id",
-    rank_col: str = "rn",
-    query_cols: list[str] | None = None,
-    score_dp: int = 9,
-) -> DataFrame:
-    """Reciprocal-rank fusion of N ranked lists (Cormack, Clarke &
-    Buettcher, SIGIR'09): ``score(d) = Σ_lists 1 / (c + rank_d)``, the
-    standard way to combine lexical (BM25) and vector (ANN) retrieval
-    into one hybrid ranking without score calibration — ranks, not
-    raw scores, are fused, so the two scoring scales never meet.
-
-    Each input carries ``(query_cols..., id_col, rank_col)`` with
-    1-based ranks (the shape :func:`bm25_topk` and the similarity
-    tier's batch top-k emit). Returns the fused top-``k`` per query
-    group as ``(query_cols..., id_col, rrf_score, rn)``.
-
-    Determinism: the float sum is rounded to ``score_dp`` before
-    ranking and tie-broken by id — candidate lists are ≤ tens of rows
-    per query, so the quantum only ever breaks genuine float-noise
-    ties. Scale shape: a union of the (already tiny, ≤k·queries-row)
-    candidate lists, one hash aggregation on (query, doc), one
-    per-query window over ≤ N·k rows. The corpus is never touched —
-    fusion cost is bounded by the candidate volume regardless of
-    corpus size.
-    """
-    if not rankings:
-        raise ValueError("rrf_fuse needs at least one ranking")
-    qc = list(query_cols or [])
-    parts = [
-        r.select(
-            *qc,
-            F.col(id_col),
-            (1.0 / (F.lit(float(c)) + F.col(rank_col).cast("double"))).alias(
-                "_contrib"
-            ),
-        )
-        for r in rankings
-    ]
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    fused = u.groupBy(*qc, id_col).agg(
-        F.round(F.sum("_contrib"), score_dp).alias("rrf_score")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*(qc or [F.lit(0)])).orderBy(
-        F.desc("rrf_score"), F.asc(id_col)
-    )
-    return (
-        fused.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-    )

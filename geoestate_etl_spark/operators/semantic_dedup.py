@@ -44,7 +44,6 @@ __all__ = [
     "cluster_embeddings",
     "semantic_pairs",
     "semantic_dedup",
-    "incremental_semantic_dedup",
 ]
 
 
@@ -134,122 +133,6 @@ def semantic_pairs(
             >= int(round(cosine_threshold * (10**scale)))
         )
     )
-
-
-def incremental_semantic_dedup(
-    batch_clustered: DataFrame,
-    standing_clustered: DataFrame | None,
-    cosine_threshold: float = 0.92,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
-    max_cluster_size: int | None = 4096,
-) -> tuple[DataFrame, DataFrame]:
-    """SemDeDup for arriving batches: O(batch), history immutable.
-
-    Both inputs carry ``(id, cell, vector)`` with cells assigned by the
-    SAME frozen centroids (``operators.similarity.assign_cells``;
-    retrain on a slower cadence re-materializes the standing table).
-    Returns ``(pairs, decisions)``: every ≥-threshold pair with at least one
-    batch side, and one decision row per BATCH item — history items'
-    decisions were made when they arrived and never change.
-
-    Keeper rule: a batch item is dropped when it matches history (the
-    earlier arrival always wins) or a smaller-id batch sibling. With
-    ids assigned in arrival order this is EXACTLY the published
-    fixed-order SemDeDup rule, so a batch sequence reproduces the full
-    corpus-wide run — pinned in tests. For that equivalence the
-    standing table must carry every seen item, kept AND dropped (the
-    rule drops against the ordering, not the surviving set); passing
-    survivors only is the cheaper drop-against-survivors variant, a
-    deliberate policy choice rather than an error.
-
-    The within-cluster pair scan is the cost center: one interpreted
-    fold per candidate pair, with the double-cast and norm hoisted to
-    per-row exactly as in :func:`semantic_pairs`. The hot-cluster cap
-    applies to COMBINED cell occupancy — a cell that went degenerate
-    across history stops generating pairs instead of going quadratic
-    (batch rows in capped cells match nothing, the full-run behavior).
-    """
-    prep = lambda d: d.withColumn("_v", to_double_array(vec_col)).withColumn(  # noqa: E731
-        "_n", F.sqrt(_dot_pre(F.col("_v"), F.col("_v")))
-    )
-    new = prep(batch_clustered)
-    if standing_clustered is None:
-        everyone = new
-    else:
-        # prune history to the batch's cells BEFORE the cast/norm prep:
-        # untouched cells produce no pairs, so this changes nothing
-        # semantically (cap occupancy of touched cells included) while
-        # keeping the per-batch fold cost O(touched history), not
-        # O(all history)
-        touched = batch_clustered.select("cell").distinct()
-        everyone = new.unionByName(
-            prep(standing_clustered.join(touched, "cell", "semi"))
-        )
-    everyone = _capped(everyone, max_cluster_size)
-    left, right = new.alias("l"), everyone.alias("r")
-    denom = F.col("l._n") * F.col("r._n")
-    cos = F.when(denom == 0, F.lit(0.0)).otherwise(
-        _dot_pre(F.col("l._v"), F.col("r._v")) / denom
-    )
-    cos_i = F.round(cos * (10**scale)).cast("bigint")
-    la, ra = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
-    pairs = (
-        left.join(right, (F.col("l.cell") == F.col("r.cell")) & (la != ra))
-        .select(
-            F.least(la, ra).alias("id_a"),
-            F.greatest(la, ra).alias("id_b"),
-            F.col("l.cell").cast("bigint").alias("cell"),
-            cos_i.alias(f"cos_e{scale}"),
-        )
-        .filter(
-            F.col(f"cos_e{scale}")
-            >= int(round(cosine_threshold * (10**scale)))
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    dropped = _batch_drop_ids(pairs, batch_clustered.select(id_col), id_col)
-    decisions = (
-        batch_clustered.join(
-            dropped.withColumn("_dropped", F.lit(True)), id_col, "left"
-        )
-        .select(
-            id_col,
-            F.col("cell").cast("bigint").alias("cell"),
-            F.coalesce(~F.col("_dropped"), F.lit(True)).alias("kept"),
-        )
-    )
-    return pairs, decisions
-
-
-def _batch_drop_ids(
-    pairs: DataFrame, batch_ids: DataFrame, id_col: str
-) -> DataFrame:
-    """Which BATCH ids a pair relation eliminates: history always wins
-    (it is already served and immutable), the smaller id wins within
-    the batch — an id is never resurrected by its eliminator itself
-    being dropped (greedy against the ordering, the SemDeDup rule).
-
-    ``pairs`` carries ``(id_a, id_b)`` with ``id_a < id_b`` and at
-    least one batch side; ``batch_ids`` is a one-column frame of this
-    batch's ids named ``id_col``.
-    """
-    ids = batch_ids.select(F.col(id_col).alias("_bid"))
-    tagged = pairs.join(
-        ids.withColumnRenamed("_bid", "id_a").withColumn("_a_new", F.lit(True)),
-        "id_a",
-        "left",
-    ).join(
-        ids.withColumnRenamed("_bid", "id_b").withColumn("_b_new", F.lit(True)),
-        "id_b",
-        "left",
-    )
-    return tagged.select(
-        F.when(F.col("_a_new") & F.col("_b_new").isNull(), F.col("id_a"))
-        .otherwise(F.col("id_b"))  # vs-history (new side) or in-batch id_b
-        .alias(id_col)
-    ).distinct()
 
 
 def semantic_dedup(

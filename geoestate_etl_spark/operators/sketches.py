@@ -63,76 +63,6 @@ def cms_build(
     )
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge CMS sketches built with the SAME (depth, width, key
-    hashing): counter matrices are linear, so the merge is an
-    element-wise add — ``estimate(merge(A, B)) == estimate(A ∪ B)``
-    exactly, not approximately.
-
-    This is the property that makes the sketch a 100 TB tool: build
-    per-shard/per-day/per-stream-epoch sketches independently (d·w
-    rows each), merge them with this d·w-row aggregation, and query
-    the union without ever re-scanning history. The incremental twin
-    of ``cms_build`` — fold invariance (Σ batch sketches == one full
-    build) is pinned in tests.
-
-    Same-(depth, width, hashing) discipline is the CALLER's contract:
-    the counter relation carries no width metadata, so mixed-width
-    inputs would sum incompatible bucket spaces without a diagnostic.
-    Deployments that persist sketches should pin the params next to
-    the data and validate at read — the streaming store does exactly
-    that (``streaming/sketch_stream._cms_meta.json``).
-    """
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("depth", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
-def hll_build(
-    df: DataFrame, key_col: str, group_cols: list[str] | None = None,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Per-group HLL distinct-count sketches (Apache DataSketches via
-    Spark 4's ``hll_sketch_agg``): ``group_cols... , hll binary``.
-
-    The distinct-count sibling of :func:`cms_build`: a grouped
-    ``count_distinct`` shuffles every distinct key; this shuffles one
-    ~2^lg_k-byte sketch per group, and the sketches MERGE
-    (:func:`hll_merge`) — so per-shard/per-epoch builds fold into a
-    standing store exactly like the CMS counters, no history rescan.
-    Merge accuracy caveat (unlike the CMS, whose counters are exactly
-    linear): the DataSketches union path uses its own composite
-    estimator, so a merged estimate lands within the sketch's rsd of
-    the direct build but is NOT bit-identical to it (measured ~1.6%
-    apart at lg_k=12 on 2k distincts) — size tolerances accordingly.
-    """
-    groups = group_cols or []
-    return df.groupBy(*groups).agg(
-        F.hll_sketch_agg(F.col(key_col), F.lit(lg_k)).alias("hll")
-    )
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge per-batch HLL relations built by :func:`hll_build` with
-    the same grouping + lg_k: union + ``hll_union_agg`` per group."""
-    if not sketches:
-        raise ValueError("need at least one sketch relation")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    groups = [c for c in out.columns if c != "hll"]
-    # strict lg_k: allowing different configs would silently downgrade
-    # the union to the lowest precision, far outside the rsd callers
-    # sized their tolerances for — a mismatch should raise (r4 review)
-    agg = F.hll_union_agg(F.col("hll"), F.lit(False)).alias("hll")
-    if groups:
-        return out.groupBy(*groups).agg(agg)
-    return out.agg(agg)
-
-
 def cms_estimate(
     sketch: DataFrame, keys: DataFrame, key_col: str, depth: int = 4, width: int = 256
 ) -> DataFrame:

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["time_grid", "resample", "forward_fill", "interpolate_linear"]
+__all__ = ["time_grid", "resample", "forward_fill"]
 
 
 def _tick(ts: Column, interval_s: int) -> Column:
@@ -110,54 +110,4 @@ def forward_fill(
     out = df
     for c in value_cols:
         out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out
-
-
-def interpolate_linear(
-    df: DataFrame,
-    key: str,
-    order_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Replace interior NULL runs with the linear interpolation between
-    the surrounding observations; leading/trailing runs (no anchor on
-    one side) stay NULL — use :func:`forward_fill` after this if they
-    should carry instead.
-
-    ``order_col`` must be numeric-or-timestamp (cast to epoch seconds
-    internally): interpolation weights come from the ORDER DISTANCE,
-    so irregular grids interpolate correctly, not just index-evenly.
-
-    Same distribution contract as :func:`forward_fill`: two ordered
-    windows per key (previous non-null carried forward, next non-null
-    carried backward), per-key state only.
-    """
-    x = F.col(order_col).cast("double")
-    fwd = (
-        Window.partitionBy(key)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    bwd = (
-        Window.partitionBy(key)
-        .orderBy(order_col)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    out = df
-    for c in value_cols:
-        anchored = F.when(F.col(c).isNotNull(), F.struct(x.alias("x"), F.col(c).alias("v")))
-        prev = F.last(anchored, ignorenulls=True).over(fwd)
-        nxt = F.first(anchored, ignorenulls=True).over(bwd)
-        run = F.when(
-            F.col(c).isNotNull(), F.col(c)
-        ).when(
-            prev.isNotNull() & nxt.isNotNull(),
-            F.when(
-                nxt["x"] == prev["x"], prev["v"]
-            ).otherwise(
-                prev["v"]
-                + (nxt["v"] - prev["v"]) * (x - prev["x"]) / (nxt["x"] - prev["x"])
-            ),
-        )
-        out = out.withColumn(c, run)
     return out

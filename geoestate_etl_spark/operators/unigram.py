@@ -44,7 +44,7 @@ import re
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,8 +66,7 @@ class UnigramModel:
     """Trained state: piece → (id, integer micro-nat log-prob).
 
     Ids are deterministic: 0 = UNK, then pieces by (count desc, piece
-    asc) from the final EM round — a plain relation via
-    :meth:`to_frame`, rebuildable with :func:`model_from_frame`.
+    asc) from the final EM round.
     """
 
     vocab: dict[str, int]
@@ -139,24 +138,6 @@ class UnigramModel:
         inv = {i: p for p, i in self.vocab.items()}
         text = "".join(inv.get(i, "�") for i in ids)
         return text.replace(BOUNDARY, " ").strip()
-
-    def to_frame(self, spark: SparkSession) -> DataFrame:
-        """``(piece, id, lp_micro)`` — a plain relation any engine (or
-        a later session) rebuilds the model from."""
-        rows = [
-            (p, i, self.lp_micro.get(p, UNK_LP_MICRO))
-            for p, i in sorted(self.vocab.items(), key=lambda kv: kv[1])
-        ]
-        return spark.createDataFrame(rows, "piece string, id int, lp_micro long")
-
-
-def model_from_frame(vocab_df: DataFrame, max_piece_len: int = 8) -> UnigramModel:
-    rows = vocab_df.select("piece", "id", "lp_micro").collect()
-    return UnigramModel(
-        vocab={r.piece: r.id for r in rows},
-        lp_micro={r.piece: int(r.lp_micro) for r in rows},
-        max_piece_len=max_piece_len,
-    )
 
 
 def train_unigram(

@@ -106,27 +106,6 @@ class PairedCorpusResult:
     _caption_col: str = "caption"
 
 
-def _star_edges(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
-    """(member → group-min) edges for an equality tier as a window
-    min over the key partition — ONE shuffle of (key, id) pairs;
-    |edges| = Σ (group − 1). The groupBy-roots + equi-join
-    formulation this replaces shuffled the relation twice and spawned
-    a broadcast-future job per tier (r9; same rewrite corpus_
-    pipeline's exact tier measured at 2× in r5). Duplicate families
-    are small by nature, so the per-partition window buffer is
-    trivial.
-
-    Precondition: ``key_col`` must be non-null (all callers feed
-    xxhash64 / md5-of-gated-non-null keys). A nullable key would need
-    a ``isNotNull`` pre-filter to keep the old groupBy+equi-join
-    contract, where null keys never matched and were dropped — the
-    window would instead group all NULLs into one partition (r9
-    ADVICE)."""
-    return _star_edges_tagged(df, [("", key_col)], id_col).select(
-        "id_a", "id_b"
-    )
-
-
 #: The equality tiers as (window tag, key column). The two image tiers
 #: keep DISTINCT tags: their 64-bit keys share one string space, so a
 #: content hash equal to some stats fingerprint must not elect a root
@@ -137,15 +116,21 @@ _EQ_TIERS = [("i1", "_chash"), ("i2", "_fp"), ("t", "_tfp")]
 def _star_edges_tagged(
     df: DataFrame, tiers: list[tuple[str, str]], id_col: str
 ) -> DataFrame:
-    """All equality tiers' star edges in ONE window shuffle (r10 —
-    guide §2.4): the (tag, key) pairs of every tier stack into one
-    relation and a single ``min(id) over (partition by tag, key)``
-    window elects every tier's roots — tiers' key spaces are disjoint
-    by the tag, so per-tier edges are exactly :func:`_star_edges`'s.
-    Returns ``(tag, id_a, id_b)``; shuffled bytes are the same
-    Σ (key, id) rows as the per-tier windows, in ONE exchange instead
-    of one per tier. Same non-null-key precondition as
-    :func:`_star_edges`."""
+    """All equality tiers' (member → group-min) star edges in ONE
+    window shuffle (r10 — guide §2.4): the (tag, key) pairs of every
+    tier stack into one relation and a single ``min(id) over
+    (partition by tag, key)`` window elects every tier's roots —
+    tiers' key spaces are disjoint by the tag. Returns
+    ``(tag, id_a, id_b)``; |edges| = Σ (group − 1) per tier, and the
+    shuffled bytes are the Σ (key, id) rows of the per-tier windows in
+    ONE exchange instead of one per tier. The groupBy-roots + equi-join
+    formulation this replaces (r9) shuffled the relation twice and
+    spawned a broadcast-future job per tier.
+
+    Precondition: every key column must be non-null (all callers feed
+    xxhash64 / md5-of-gated-non-null keys). The window would group all
+    NULLs into one partition, where the old equi-join dropped them
+    (r9 ADVICE)."""
     from pyspark.sql import Window
 
     stacked = None

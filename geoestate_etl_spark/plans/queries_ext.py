@@ -70,17 +70,6 @@ def ensure_warehouse_index(spark: SparkSession, sf_dir: str, n_cells: int = 16) 
     return path
 
 
-def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with the build/probe split a serving system uses: the
-    quantizer + cell-assigned table materialize ONCE per source
-    (partitioned by cell → probe-time partition pruning); every query
-    after that is probe-only. Rebuilding k-means per probe query was
-    round 1's scale anti-pattern (VERDICT r1 #2)."""
-    path = ensure_warehouse_index(spark, sf_dir, 16)
-    assigned, centroids = SIM.ivf_read_index(spark, path)
-    return SIM.ivf_probe(assigned, centroids, _probe(spark, sf_dir), k=10, n_probe=4)
-
-
 def ivf_assign_path(sf_dir: str) -> str:
     tag = os.path.basename(sf_dir.rstrip("/"))
     return os.path.join(_repo_root(), "data", "derived", f"ivf_assign_{tag}.parquet")
@@ -286,9 +275,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join (:func:`~geoestate_etl_spark.operators.itemsets.
     frequent_pairs` — pair explosion bounded by basket size, shuffle
     keyed on the basket id). All pairs with support ≥ 2; output is
-    3-4k rows at every test scale. FPGrowth's k=2 slice is pinned
-    equal in tests (the pyspark.ml bridge certified against this
-    oracled path)."""
+    3-4k rows at every test scale."""
     from geoestate_etl_spark.operators.itemsets import frequent_pairs
 
     li = _t(spark, sf_dir, "lineitem")
@@ -806,7 +793,7 @@ SPECS = [
         q_basket_pairs,
         _BASKET_SQL,
         "frequent-itemsets (r4: exact pair support via within-basket "
-        "self-join; FPGrowth k=2 slice pinned equal in tests)",
+        "self-join)",
     ),
     QuerySpec(
         "outlier_orders",

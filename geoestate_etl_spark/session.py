@@ -12,6 +12,9 @@ created once with the knobs that matter at scale:
 - UTC session timezone so event-time semantics are stable and match
   the DuckDB oracle.
 - Arrow enabled for the few vectorized-Python paths (pandas_udf).
+- Driver heap sized from the host: half of physical RAM unless
+  ``SPARK_GRAFT_DRIVER_MEM`` names a size, so a local run never claims
+  more memory than the machine has.
 """
 
 from __future__ import annotations
@@ -22,37 +25,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
-
-def streaming_state_conf(rocksdb: bool = True) -> dict[str, str]:
-    """Conf for stateful streaming queries with LARGE state (wide
-    session windows, dedup maps, join buffers).
-
-    The default HDFS-backed provider keeps every state key on the
-    executor HEAP — fine for small keyed aggregates, an OOM at
-    100M-session scale. RocksDB keeps state off-heap/on-local-disk
-    with a bounded block cache, so state size is limited by disk, not
-    heap. Changelog checkpointing uploads per-batch deltas instead of
-    full snapshots, cutting checkpoint latency on big state (both are
-    stock Spark; the provider ships in pyspark's JVM bundle and is
-    selected per-query from the session conf at stream start).
-
-    Apply via ``get_spark(extra_conf=streaming_state_conf())`` or
-    ``spark.conf.set`` before ``writeStream.start()``.
-    """
-    if not rocksdb:
-        return {}
-    return {
-        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        # delta uploads instead of full-snapshot checkpoints
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-        # bound memory across ALL RocksDB instances on an executor
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage": "true",
-        "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB": "512",
-    }
+def _default_driver_mem() -> str:
+    """Half of the host's physical RAM, as a JVM size in MiB."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // 2**20}m"
 
 
 def get_spark(
@@ -77,7 +54,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

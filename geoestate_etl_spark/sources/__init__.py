@@ -1,14 +1,4 @@
-from geoestate_etl_spark.sources.columnar import (
-    read_columnar,
-    write_columnar,
-    write_sorted,
-)
 from geoestate_etl_spark.sources.csv_source import read_dirty_csv
-from geoestate_etl_spark.sources.jsonl_source import (
-    read_jsonl,
-    split_corrupt,
-    write_jsonl,
-)
 from geoestate_etl_spark.sources.jdbc_sink import (
     jdbc_driver_available,
     read_jdbc_table,
@@ -18,28 +8,12 @@ from geoestate_etl_spark.sources.jdbc_sink import (
 from geoestate_etl_spark.sources.parquet_io import (
     load_tables,
     read_parquet,
-    write_parquet,
     write_sorted_table,
-)
-from geoestate_etl_spark.sources.xml_source import (
-    parse_xml_column,
-    read_xml,
-    to_xml_column,
 )
 
 __all__ = [
-    "read_xml",
-    "parse_xml_column",
-    "to_xml_column",
-    "read_columnar",
-    "write_columnar",
-    "write_sorted",
     "read_dirty_csv",
-    "read_jsonl",
-    "split_corrupt",
-    "write_jsonl",
     "read_parquet",
-    "write_parquet",
     "write_sorted_table",
     "load_tables",
     "jdbc_driver_available",

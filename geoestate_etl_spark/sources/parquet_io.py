@@ -28,23 +28,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """S2/S6: parquet sink; ``mode='overwrite'`` replaces truncate+load.
-
-    ``partition_by`` enables partition pruning downstream (e.g. by
-    region / date) — the unpartitioned reference output forfeits this.
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_sorted_table(
     df: DataFrame,
     path: str,

@@ -5,8 +5,7 @@ The reference has no streaming; the testdata ``events`` table
 surface for tumbling / sliding / session windows. Each operator is a
 pure batch DataFrame fn (``F.window`` / ``F.session_window`` work in
 batch mode and are exactly the Structured Streaming semantics), so the
-DuckDB oracle can verify them; ``stream_tumbling_counts`` shows the
-same plan as a real ``readStream`` with a watermark.
+DuckDB oracle can verify them.
 
 Scale: windowed groupBys shuffle on (window, keys) — same partial-agg
 story as any groupBy. Session windows merge per key; the shuffle key
@@ -67,18 +66,4 @@ def session_windows(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
             F.col("w.end").alias("session_end"),
             "n_events",
         )
-    )
-
-
-def stream_tumbling_counts(events_stream: DataFrame, width: str = "1 hour") -> DataFrame:
-    """The same tumbling plan on a streaming DataFrame, with a
-    watermark for late-data state eviction. Use with
-    ``writeStream.outputMode('append')``; demoed in tests via the
-    file source + memory sink.
-    """
-    return (
-        events_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
     )

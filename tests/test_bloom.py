@@ -118,28 +118,3 @@ def test_bloom_gate_equals_exact_on_documents(spark):
         ).collect()
     }
     assert exact == gated
-
-
-def test_bloom_merge_equals_union_build(spark):
-    """Mergeability is exact: merge(build(A), build(B), build(C)) has
-    the identical (word_idx, bits) rows as build(A ∪ B ∪ C) — bit_or
-    linearity, the property that makes per-epoch delta filters a
-    mergeable membership sketch."""
-    from geoestate_etl_spark.operators.bloom import bloom_merge
-
-    a = spark.range(0, 3000).select(F.col("id").alias("v"))
-    b = spark.range(2000, 6000).select(F.col("id").alias("v"))  # overlap
-    c = spark.range(9000, 9100).select(F.col("id").alias("v"))
-    merged = {
-        (r["word_idx"], r["bits"])
-        for r in bloom_merge(
-            bloom_build(a, "v", 1 << 10),
-            bloom_build(b, "v", 1 << 10),
-            bloom_build(c, "v", 1 << 10),
-        ).collect()
-    }
-    direct = {
-        (r["word_idx"], r["bits"])
-        for r in bloom_build(a.union(b).union(c), "v", 1 << 10).collect()
-    }
-    assert merged == direct

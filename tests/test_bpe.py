@@ -1,6 +1,6 @@
 """BPE tokenizer: incremental trainer pinned against a naive
 recount-per-iteration reference, DuckDB-oracled word histogram,
-distributed-encode parity, persistence roundtrip."""
+and distributed-encode parity."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from geoestate_etl_spark.operators.bpe import (
     UNK_ID,
     BpeModel,
     encode_bpe,
-    model_from_frames,
     train_bpe,
     word_histogram,
 )
@@ -122,15 +121,6 @@ def test_distributed_encode_matches_driver(spark):
     # and for real text strictly fewer ids than characters
     n_chars = docs.agg(F.sum(F.length("text"))).first()[0]
     assert sum(len(v) for v in got.values()) < n_chars
-
-
-def test_persistence_roundtrip(spark):
-    model = train_bpe(word_histogram(_docs(spark, 40)), vocab_size=200)
-    merges_df, vocab_df = model.to_frames(spark)
-    back = model_from_frames(merges_df, vocab_df)
-    sample = "the quick brown fox says 42!"
-    assert back.encode_text(sample) == model.encode_text(sample)
-    assert back.merges == model.merges
 
 
 def test_distributed_decode_roundtrip(spark):

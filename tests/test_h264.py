@@ -2,8 +2,8 @@
 IDR slice headers, and I_PCM macroblock decode — roundtripped against
 the independent test encoder, cropped, emulation-prevention-exercised,
 fuzzed, and pinned to honest-None for entropy-coded residuals
-(the permanently-closed CAVLC/CABAC boundary, see
-``multimodal.pixel_decode_unavailable``)."""
+(the permanently-closed CAVLC/CABAC boundary, see the
+``operators/multimodal.py`` module docstring)."""
 
 from __future__ import annotations
 

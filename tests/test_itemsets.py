@@ -2,12 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from geoestate_etl_spark.operators.itemsets import (
-    frequent_itemsets_fp,
-    frequent_pairs,
-)
+from geoestate_etl_spark.operators.itemsets import frequent_pairs
 
 
 def _baskets(spark, rows):
@@ -43,81 +38,6 @@ def test_duplicate_items_count_once(spark):
     assert got == {(10, 20): 1}
 
 
-def test_fpgrowth_k2_slice_matches_exact_pairs(spark):
-    """FPGrowth's 2-itemsets == the oracled self-join path, exactly
-    (same baskets, support threshold expressed as a fraction)."""
-    import random
-
-    rnd = random.Random(13)
-    rows = [
-        (b, rnd.randrange(15))
-        for b in range(60)
-        for _ in range(rnd.randrange(2, 6))
-    ]
-    df = _baskets(spark, rows)
-    n_baskets = df.select("b").distinct().count()
-    min_support = 3
-    exact = {
-        (r.item_a, r.item_b): r.support
-        for r in frequent_pairs(df, "b", "i", min_support).collect()
-    }
-    fp = frequent_itemsets_fp(
-        df, "b", "i", min_support_frac=min_support / n_baskets
-    )
-    fp_pairs = {
-        tuple(sorted(int(x) for x in r["items"])): r.freq
-        for r in fp.filter(F.size("items") == 2).collect()
-    }
-    assert fp_pairs == exact
-
-
-def test_fpgrowth_singletons_and_triples(spark):
-    rows = [
-        (b, i) for b in range(10) for i in (1, 2, 3)
-    ]  # every basket = {1,2,3}
-    fp = frequent_itemsets_fp(_baskets(spark, rows), "b", "i", 0.9)
-    by_size = {}
-    for r in fp.collect():
-        by_size.setdefault(len(r["items"]), set()).add(
-            tuple(sorted(int(x) for x in r["items"]))
-        )
-    assert by_size[1] == {(1,), (2,), (3,)}
-    assert by_size[2] == {(1, 2), (1, 3), (2, 3)}
-    assert by_size[3] == {(1, 2, 3)}
-
-
-def test_association_rules_hand_computed(spark):
-    from geoestate_etl_spark.operators.itemsets import association_rules
-
-    # 4 baskets: {10,20} x3, {10} x1 → s_10=4, s_20=3, s_pair=3, n=4
-    rows = [(1, 10), (1, 20), (2, 10), (2, 20), (3, 10), (3, 20), (4, 10)]
-    got = {
-        (r.antecedent, r.consequent): (
-            r.support, r.confidence_pct_e2, r.lift_e6,
-        )
-        for r in association_rules(
-            _baskets(spark, rows), "b", "i", 2, 20
-        ).collect()
-    }
-    # 10→20: conf 3/4 = 75.00%, lift 3*4/(4*3) = 1.0
-    assert got[(10, 20)] == (3, 7500, 1_000_000)
-    # 20→10: conf 3/3 = 100%, same lift
-    assert got[(20, 10)] == (3, 10000, 1_000_000)
-
-
-def test_association_rules_confidence_threshold(spark):
-    from geoestate_etl_spark.operators.itemsets import association_rules
-
-    # 10 appears in 10 baskets, {10,20} in only 2 → 10→20 conf 20%
-    rows = [(b, 10) for b in range(10)] + [(0, 20), (1, 20)]
-    r50 = association_rules(_baskets(spark, rows), "b", "i", 2, 50).collect()
-    dirs = {(r.antecedent, r.consequent) for r in r50}
-    assert (10, 20) not in dirs and (20, 10) in dirs  # 20→10 conf 100%
-    r20 = association_rules(_baskets(spark, rows), "b", "i", 2, 20).collect()
-    dirs20 = {(r.antecedent, r.consequent) for r in r20}
-    assert (10, 20) in dirs20  # exactly at the 20% boundary (integer cross-mul)
-
-
 def test_max_basket_size_drops_mega_baskets(spark):
     from geoestate_etl_spark.operators.itemsets import frequent_pairs
 
@@ -133,17 +53,3 @@ def test_max_basket_size_drops_mega_baskets(spark):
     # its (10, 20) row, so no +1)
     uncapped = frequent_pairs(df, "b", "i", 1).count()
     assert uncapped == (50 * 49) // 2
-
-
-def test_association_rules_cap_consistent(spark):
-    from geoestate_etl_spark.operators.itemsets import association_rules
-
-    rows = [(1, 10), (1, 20), (2, 10), (2, 20)] + [(9, i) for i in range(40)]
-    df = _baskets(spark, rows)
-    capped = association_rules(df, "b", "i", 2, 20, max_basket_size=10)
-    got = {(r.antecedent, r.consequent): (r.support, r.confidence_pct_e2, r.lift_e6)
-           for r in capped.collect()}
-    # mega-basket gone: 2 baskets remain, both {10,20} → conf 100%, lift 1.0
-    assert got[(10, 20)] == (2, 10000, 1_000_000)
-    assert got[(20, 10)] == (2, 10000, 1_000_000)
-    assert len(got) == 2

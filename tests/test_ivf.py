@@ -82,19 +82,6 @@ def test_ivf_materialized_index_probe_matches_inline(emb, probe, tmp_path):
     assert re.search(r"PartitionFilters: \[cell#\d+ IN \(", plan), plan
 
 
-def test_ivf_query_uses_cached_index(spark):
-    """Second invocation of the registered query must NOT rebuild the
-    index (no kmeans jobs) — it reads the cached materialization."""
-    import time
-
-    from geoestate_etl_spark.plans.queries_ext import q_similarity_ivf
-
-    q_similarity_ivf(spark, SF_ORACLE).collect()  # may build
-    t0 = time.perf_counter()
-    q_similarity_ivf(spark, SF_ORACLE).collect()  # must be probe-only
-    assert time.perf_counter() - t0 < 5.0
-
-
 def test_ivf_sq8_index_recall_and_size(emb, probe, tmp_path):
     """Quantized (IVF-SQ) index: probing the int8 codes must match the
     float index's top-k except for rounding-boundary swaps, and the

@@ -2,10 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from geoestate_etl_spark.functions.markup import (
-    extract_links,
     looks_like_markup,
     strip_markup,
 )
@@ -44,11 +41,6 @@ def test_entities_and_numeric_refs(spark):
     assert got == 'a<b>c "q" \'s\' d'
 
 
-def test_extract_links_both_quote_styles_in_order(spark):
-    got = _one(spark, PAGE, extract_links)
-    assert got == ["https://example.com/a", "https://cdn.example.com/i.png"]
-
-
 def test_looks_like_markup_router(spark):
     df = spark.createDataFrame(
         [(1, PAGE), (2, "no tags here, 2 < 3 even"), (3, "<p>one</p>")],
@@ -56,14 +48,3 @@ def test_looks_like_markup_router(spark):
     )
     got = {r.i: r.m for r in df.select("i", looks_like_markup("t").alias("m")).collect()}
     assert got == {1: True, 2: False, 3: True}
-
-
-def test_composes_with_url_dedup(spark):
-    """Crawl shape: strip pages, explode links, canonical-dedup them."""
-    from geoestate_etl_spark.functions.urls import canonical_url
-
-    df = spark.createDataFrame([(1, PAGE)], ["doc_id", "html"])
-    links = df.select(
-        "doc_id", F.explode(extract_links("html")).alias("url")
-    ).withColumn("curl", canonical_url(F.col("url")))
-    assert links.filter(F.col("curl").isNotNull()).count() == 2

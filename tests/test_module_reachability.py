@@ -1,5 +1,5 @@
-"""Every engine module and every public engine def must be reachable
-from a real entry point.
+"""Every engine module and every engine def must be reachable from a
+real entry point.
 
 Module level: walks ``import`` statements with :mod:`ast` (module level
 and inside functions) from ``__spark_entry__.py``, the bench harnesses,
@@ -10,7 +10,7 @@ package loads no module by a computed name (no
 ``importlib``/``__import__``), so the static walk sees every edge.
 
 Def level: every top-level ``def``, ``class`` and assigned name of a
-package module is a node. Its references are the identifiers it uses
+package module, public or private, is a node. Its references are the identifiers it uses
 (names, attribute names, and identifier tokens inside string constants
 other than docstrings, so a registry key or a SQL function name
 counts). The walk starts from every reached file outside the package
@@ -21,12 +21,12 @@ refers to is dead, also when another dead def calls it. Matching by
 name over-approximates (two defs with one name are reached together),
 so a flagged def has no static caller at all.
 
-``LIBRARY_ONLY_DEFS`` names the unreached public defs still allowed;
+``LIBRARY_ONLY_DEFS`` names the unreached defs still allowed;
 ``TEST_REFERENCES`` names the ones kept on purpose as slow or naive
 references that tests compare live code against. Both may only shrink.
 
-Run as a script to list every unreached public def with its
-``path:line`` and line count, sorted by file and line::
+Run as a script to list every unreached def with its ``path:line``
+and line count, sorted by file and line::
 
     python tests/test_module_reachability.py
 """
@@ -50,83 +50,38 @@ ROOTS = (
     "perfbench/workloads.py",
     "tools/*.py",
 )
-# Library-only public defs that only tests (or other unreached defs)
-# use, kept for now and listed on ROADMAP for removal. The guard fails
-# on any other unreached public def, and on an entry here that is gone
-# or now reached, so the list can only shrink.
+# Library-only defs that only tests (or other unreached defs) use, kept
+# for now and listed on ROADMAP for removal. The guard fails on any
+# other unreached def, and on an entry here that is gone or now
+# reached, so the list can only shrink.
 LIBRARY_ONLY_DEFS = frozenset(
     {
         f"{PACKAGE}/functions/cleaning.py::normalize_number_string",
-        f"{PACKAGE}/functions/markup.py::extract_links",
         f"{PACKAGE}/functions/ngram_lm.py::ngram_logprob",
-        f"{PACKAGE}/functions/urls.py::dedup_by_url",
         f"{PACKAGE}/functions/validation.py::INTEGER_NUMBER",
         f"{PACKAGE}/functions/validation.py::YEAR_4DIGIT",
         f"{PACKAGE}/functions/vectors.py::cosine_int8",
         f"{PACKAGE}/functions/vectors.py::dequantize_int8",
         f"{PACKAGE}/functions/vectors.py::project",
         f"{PACKAGE}/functions/vectors.py::projection_matrix",
-        f"{PACKAGE}/operators/bloom.py::bloom_merge",
-        f"{PACKAGE}/operators/bpe.py::model_from_frames",
+        f"{PACKAGE}/operators/h264.py::_annexb_nals",
         f"{PACKAGE}/operators/h264.py::h264_frames",
         f"{PACKAGE}/operators/h264.py::make_h264_annexb",
-        f"{PACKAGE}/operators/itemsets.py::association_rules",
-        f"{PACKAGE}/operators/itemsets.py::frequent_itemsets_fp",
-        f"{PACKAGE}/operators/merge.py::scd2_apply",
-        f"{PACKAGE}/operators/multimodal.py::MEDIA_META_SCHEMA",
-        f"{PACKAGE}/operators/multimodal.py::VIDEO_FRAME_SCHEMA",
-        f"{PACKAGE}/operators/multimodal.py::attach_fake_media",
-        f"{PACKAGE}/operators/multimodal.py::decode_media",
-        f"{PACKAGE}/operators/multimodal.py::frame_sample_stub",
-        f"{PACKAGE}/operators/multimodal.py::pixel_decode_unavailable",
-        f"{PACKAGE}/operators/multimodal.py::resize_image_nearest",
-        f"{PACKAGE}/operators/multimodal.py::resize_stub",
-        f"{PACKAGE}/operators/multimodal.py::sample_video_frames",
         f"{PACKAGE}/operators/pq.py::pq_adc_topk",
         f"{PACKAGE}/operators/pq.py::pq_bytes_per_vector",
         f"{PACKAGE}/operators/pq.py::pq_recall_table",
-        f"{PACKAGE}/operators/repetition.py::line_repetition",
-        f"{PACKAGE}/operators/retrieval.py::rrf_fuse",
-        f"{PACKAGE}/operators/sampling.py::deterministic_sample",
-        f"{PACKAGE}/operators/sampling.py::epoch_shuffle",
-        f"{PACKAGE}/operators/sampling.py::grouped_split",
-        f"{PACKAGE}/operators/sampling.py::hash_split",
-        f"{PACKAGE}/operators/sampling.py::k_fold",
-        f"{PACKAGE}/operators/sampling.py::sample_k_per_group",
-        f"{PACKAGE}/operators/sampling.py::stratified_sample",
-        f"{PACKAGE}/operators/sampling.py::temperature_mix",
-        f"{PACKAGE}/operators/semantic_dedup.py::incremental_semantic_dedup",
-        f"{PACKAGE}/operators/sketches.py::cms_merge",
-        f"{PACKAGE}/operators/sketches.py::hll_build",
-        f"{PACKAGE}/operators/sketches.py::hll_merge",
-        f"{PACKAGE}/operators/timeseries.py::interpolate_linear",
         f"{PACKAGE}/operators/topk.py::top_k_per_group_partial",
-        f"{PACKAGE}/operators/unigram.py::model_from_frame",
-        f"{PACKAGE}/plans/queries_ext.py::q_similarity_ivf",
         f"{PACKAGE}/schema.py::TESTDATA_TABLES",
-        f"{PACKAGE}/session.py::ROCKSDB_PROVIDER",
-        f"{PACKAGE}/session.py::streaming_state_conf",
         f"{PACKAGE}/sources/binary_source.py::read_binary_files",
-        f"{PACKAGE}/sources/columnar.py::FORMATS",
-        f"{PACKAGE}/sources/columnar.py::read_columnar",
-        f"{PACKAGE}/sources/columnar.py::write_columnar",
-        f"{PACKAGE}/sources/columnar.py::write_sorted",
         f"{PACKAGE}/sources/jdbc_sink.py::read_jdbc_table",
-        f"{PACKAGE}/sources/jsonl_source.py::CORRUPT_COL",
-        f"{PACKAGE}/sources/jsonl_source.py::read_jsonl",
-        f"{PACKAGE}/sources/jsonl_source.py::split_corrupt",
-        f"{PACKAGE}/sources/jsonl_source.py::write_jsonl",
         f"{PACKAGE}/sources/parquet_io.py::load_tables",
-        f"{PACKAGE}/sources/parquet_io.py::write_parquet",
         f"{PACKAGE}/sources/shards.py::epoch_shuffle_col",
         f"{PACKAGE}/sources/shards.py::verify_shards",
+        f"{PACKAGE}/sources/tar_shards.py::_MEMBER_SCHEMA",
+        f"{PACKAGE}/sources/tar_shards.py::_explode_members",
         f"{PACKAGE}/sources/tar_shards.py::group_samples",
         f"{PACKAGE}/sources/tar_shards.py::read_tar_shards",
         f"{PACKAGE}/sources/tar_shards.py::stream_tar_shards",
-        f"{PACKAGE}/sources/xml_source.py::parse_xml_column",
-        f"{PACKAGE}/sources/xml_source.py::read_xml",
-        f"{PACKAGE}/sources/xml_source.py::to_xml_column",
-        f"{PACKAGE}/streaming/event_windows.py::stream_tumbling_counts",
     }
 )
 # Defs no entry point needs that stay as the naive or slow reference a
@@ -345,8 +300,8 @@ def unreached_defs(root: str = REPO, roots=ROOTS) -> list[Def]:
     )
 
 
-def unreached_public_defs(root: str = REPO, roots=ROOTS) -> set[str]:
-    return {d.key for d in unreached_defs(root, roots) if not d.name.startswith("_")}
+def unreached_def_keys(root: str = REPO, roots=ROOTS) -> set[str]:
+    return {d.key for d in unreached_defs(root, roots)}
 
 
 def test_every_package_module_is_reached():
@@ -370,14 +325,15 @@ def test_walk_reports_an_unimported_module(tmp_path):
 
 
 def test_every_public_def_is_reached():
+    # private defs too: a helper only a deleted def called is dead
     allowed = LIBRARY_ONLY_DEFS | TEST_REFERENCES
-    assert sorted(unreached_public_defs() - allowed) == []
+    assert sorted(unreached_def_keys() - allowed) == []
 
 
 def test_def_allowlists_are_current():
     # an entry whose def was deleted or gained a real caller must go
     assert LIBRARY_ONLY_DEFS.isdisjoint(TEST_REFERENCES)
-    stale = (LIBRARY_ONLY_DEFS | TEST_REFERENCES) - unreached_public_defs()
+    stale = (LIBRARY_ONLY_DEFS | TEST_REFERENCES) - unreached_def_keys()
     assert sorted(stale) == []
 
 
@@ -413,15 +369,16 @@ def test_def_walk_flags_stray_and_transitively_dead_defs(tmp_path):
         ("only_from_stray", 13, 3),
         ("_Private", 16, 2),
     ]
-    assert unreached_public_defs(str(tmp_path), ("main.py",)) == {
+    assert unreached_def_keys(str(tmp_path), ("main.py",)) == {
         f"{PACKAGE}/ops.py::stray",
         f"{PACKAGE}/ops.py::only_from_stray",
+        f"{PACKAGE}/ops.py::_Private",
     }
 
 
 if __name__ == "__main__":
     modules = unreached_modules()
-    dead = [d for d in unreached_defs() if not d.name.startswith("_")]
+    dead = unreached_defs()
     for d in dead:
         tag = (
             " [test reference]" if d.key in TEST_REFERENCES
@@ -429,7 +386,7 @@ if __name__ == "__main__":
             else ""
         )
         print(f"{d.path}:{d.line}\t{d.name}\t{d.lines} lines{tag}")
-    print(f"{len(dead)} unreached public defs, {sum(d.lines for d in dead)} lines")
+    print(f"{len(dead)} unreached defs, {sum(d.lines for d in dead)} lines")
     print("\n".join(f"unreached module: {m}" for m in modules))
     new = {d.key for d in dead} - LIBRARY_ONLY_DEFS - TEST_REFERENCES
     sys.exit(1 if modules or new else 0)

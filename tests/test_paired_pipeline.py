@@ -272,12 +272,10 @@ def test_no_edges_short_circuit(spark, tmp_path):
 
 
 def test_star_edges_window_semantics(spark):
-    """_star_edges (r9: window-min formulation, one shuffle) emits
-    exactly (group-min -> member) per equal-key group, no self-edges,
-    singletons silent."""
-    from pyspark.sql import functions as F
-
-    from geoestate_etl_spark.plans.paired_pipeline import _star_edges
+    """_star_edges_tagged (r9: window-min formulation, one shuffle)
+    emits exactly (group-min -> member) per equal-key group, no
+    self-edges, singletons silent."""
+    from geoestate_etl_spark.plans.paired_pipeline import _star_edges_tagged
 
     df = spark.createDataFrame(
         [(1, "a"), (5, "a"), (3, "a"), (2, "b"), (9, "c"), (4, "c")],
@@ -285,7 +283,7 @@ def test_star_edges_window_semantics(spark):
     )
     got = {
         (r.id_a, r.id_b)
-        for r in _star_edges(df, "k", "pid").collect()
+        for r in _star_edges_tagged(df, [("", "k")], "pid").collect()
     }
     assert got == {(1, 5), (1, 3), (4, 9)}
 

@@ -1,4 +1,4 @@
-"""Property-style tests for the round-4 sampler/itemset operators,
+"""Property-style tests for the round-4 itemset operators,
 following the corpus-batched pattern of test_property_round2 (one
 Spark pass per property; hypothesis generates the adversarial input).
 """
@@ -9,7 +9,6 @@ from collections import Counter
 from itertools import combinations
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 BASKETS = st.lists(
     st.tuples(st.integers(0, 15), st.integers(0, 12)),
@@ -50,39 +49,3 @@ def test_frequent_pairs_matches_bruteforce_on_random_baskets(spark):
             for a, c in combinations(sorted(items), 2):
                 want[(a, c)] += 1
         assert got == dict(want), (rows, got, want)
-
-
-def test_k_fold_partition_property_random_groups(spark):
-    """Any frame, any k in 2..6: folds partition the rows, cohere per
-    group, and are a pure function of the group value (checked by
-    recomputing the expected fold from xxhash64 in-plan)."""
-    from geoestate_etl_spark.operators.sampling import k_fold
-
-    for rows in _gen("folds", BASKETS):
-        df = spark.createDataFrame(rows, "id long, grp long").distinct()
-        n = df.count()
-        for k in (2, 5):
-            tagged = k_fold(df, "grp", k, salt="prop")
-            assert tagged.count() == n
-            assert (
-                tagged.filter(
-                    (F.col("fold") < 0) | (F.col("fold") >= k)
-                ).count()
-                == 0
-            )
-            straddle = (
-                tagged.groupBy("grp")
-                .agg(F.countDistinct("fold").alias("nf"))
-                .filter(F.col("nf") > 1)
-                .count()
-            )
-            assert straddle == 0
-            # pure function of the group value: in-plan recomputation
-            mismatch = tagged.filter(
-                F.col("fold")
-                != F.pmod(
-                    F.xxhash64(F.lit("prop"), F.col("grp").cast("string")),
-                    F.lit(k),
-                ).cast("int")
-            ).count()
-            assert mismatch == 0

@@ -1,15 +1,10 @@
 """Gopher-style repetition signals: hand-built fixtures pin the count
 semantics (dup mass = occurrences beyond first), the struct-max tie
-rule, short-doc absence, and the line-based family (the corpus has no
-newlines, so the registry certifies the n-gram family; lines are
-pinned here)."""
+rule and short-doc absence."""
 
 from __future__ import annotations
 
-from geoestate_etl_spark.operators.repetition import (
-    line_repetition,
-    ngram_repetition,
-)
+from geoestate_etl_spark.operators.repetition import ngram_repetition
 
 
 def _docs(spark, rows):
@@ -58,23 +53,6 @@ def test_trigram_window(spark):
     assert got.dup_occ == 2
 
 
-def test_line_repetition(spark):
-    docs = _docs(
-        spark,
-        [
-            (1, "hello\nworld\nhello\n\n  hello  \nx"),
-            (2, "\n \n"),  # only empty lines: absent
-        ],
-    )
-    got = {r.doc_id: r for r in line_repetition(docs).collect()}
-    assert set(got) == {1}
-    r = got[1]
-    # lines: hello, world, hello, hello, x -> 5 total, 2 dup "hello"
-    assert (r.n_lines, r.dup_lines) == (5, 2)
-    assert r.dup_line_chars == 2 * 5
-    assert r.total_line_chars == 3 * 5 + 5 + 1
-
-
 def test_registry_columns_cover_short_docs(spark):
     """The text_metrics left-join must emit zero counts (not drop the
     row) for docs the per-n relation omits."""
@@ -115,15 +93,6 @@ def test_onegram_agrees_with_inrow_ratios(spark):
         "doc_id", "f", F.coalesce("g", F.lit(0.0)).alias("g")
     )
     assert joined.filter(F.col("f") != F.col("g")).count() == 0
-
-
-def test_line_repetition_crlf(spark):
-    """CRLF corpora: the default separator strips \\r, so Windows and
-    Unix line endings produce identical duplicate-line stats."""
-    docs = _docs(spark, [(1, "hello\r\nworld\r\nhello"), (2, "hello\nworld\nhello")])
-    got = {r.doc_id: (r.n_lines, r.dup_lines, r.total_line_chars)
-           for r in line_repetition(docs).collect()}
-    assert got[1] == got[2] == (3, 1, 15)
 
 
 # --- hypothesis property tier ------------------------------------------------

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from geoestate_etl_spark.operators.retrieval import bm25_topk, doc_terms
 
 
@@ -84,104 +82,3 @@ def test_bm25_plan_no_cartesian(spark):
     docs = _fixture(spark)
     plan = bm25_topk(docs, ["spark", "join"], k=3)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-
-
-def _rrf_ref(lists, k=10, c=60):
-    """Naive RRF: sum 1/(c+rank) per doc, sort by (-score, id)."""
-    scores = {}
-    for lst in lists:
-        for doc, rn in lst:
-            scores[doc] = scores.get(doc, 0.0) + 1.0 / (c + rn)
-    ranked = sorted(scores.items(), key=lambda kv: (-round(kv[1], 9), kv[0]))
-    return [(d, round(s, 9)) for d, s in ranked[:k]]
-
-
-def test_rrf_fuse_matches_reference(spark):
-    """Random ranked lists (overlapping doc sets) fuse exactly like
-    the naive reference, including the id tie-break for docs with
-    identical rank profiles."""
-    import random
-
-    from geoestate_etl_spark.operators.retrieval import rrf_fuse
-
-    rng = random.Random(11)
-    lists = []
-    for _ in range(3):
-        docs = rng.sample(range(30), 12)
-        lists.append([(d, i + 1) for i, d in enumerate(docs)])
-    dfs = [
-        spark.createDataFrame(lst, "doc_id long, rn long") for lst in lists
-    ]
-    got = [
-        (r.doc_id, r.rrf_score)
-        for r in rrf_fuse(dfs, k=8).orderBy("rn").collect()
-    ]
-    assert got == _rrf_ref(lists, k=8)
-
-
-def test_rrf_hybrid_bm25_plus_vector(spark):
-    """The intended composition: a lexical BM25 top-k and a vector
-    cosine top-k over the same corpus fuse into one hybrid ranking; a
-    doc ranked #1 in BOTH lists must out-score every doc that appears
-    in only one list at any rank (1/(c+1)·2 > 1/(c+1))."""
-    from geoestate_etl_spark.operators.retrieval import bm25_topk, rrf_fuse
-    from geoestate_etl_spark.operators.similarity import brute_force_topk
-
-    docs = _fixture(spark)
-    # embeddings: doc 0 is closest to the probe, then 1, 3, 2, 4
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [0.9, 0.4]),
-            (2, [0.0, 1.0]),
-            (3, [0.7, 0.7]),
-            (4, [-1.0, 0.2]),
-        ],
-        "doc_id long, embedding array<double>",
-    )
-    lex = bm25_topk(docs, ["spark", "join"], k=4).select("doc_id", "rn")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.lit(0)).orderBy(
-        F.desc("cos_sim"), F.asc("doc_id")
-    )
-    vec = (
-        brute_force_topk(emb, [1.0, 0.0], k=4, id_col="doc_id")
-        .withColumn("rn", F.row_number().over(w).cast("long"))
-        .select("doc_id", "rn")
-    )
-    fused = rrf_fuse([lex, vec], k=5)
-    rows = {r.doc_id: (r.rrf_score, r.rn) for r in fused.collect()}
-    # doc 0: bm25 #1 (two 'spark' + 'join') AND cosine #1
-    assert fused.orderBy("rn").first().doc_id == 0
-    both = rows[0][0]
-    single_best = 1.0 / 61  # rank-1 appearance in exactly one list
-    assert both > single_best
-    # every fused score equals the reference arithmetic
-    lex_r = {r.doc_id: r.rn for r in lex.collect()}
-    vec_r = {r.doc_id: r.rn for r in vec.collect()}
-    for d, (s, _) in rows.items():
-        exp = sum(
-            1.0 / (60 + m[d]) for m in (lex_r, vec_r) if d in m
-        )
-        assert s == round(exp, 9), d
-
-
-def test_rrf_per_query_grouping(spark):
-    """query_cols: fusion is per query group; ranks from different
-    queries never mix."""
-    from geoestate_etl_spark.operators.retrieval import rrf_fuse
-
-    a = spark.createDataFrame(
-        [("q1", 1, 1), ("q1", 2, 2), ("q2", 2, 1)],
-        "q string, doc_id long, rn long",
-    )
-    b = spark.createDataFrame(
-        [("q1", 2, 1), ("q2", 3, 1)], "q string, doc_id long, rn long"
-    )
-    out = rrf_fuse([a, b], k=2, query_cols=["q"])
-    got = {(r.q, r.doc_id): r.rn for r in out.collect()}
-    # q1: doc2 appears in both (ranks 2+1) > doc1 (rank 1 once)
-    assert got[("q1", 2)] == 1 and got[("q1", 1)] == 2
-    # q2: doc2 and doc3 each rank-1 in one list -> tie broken by id
-    assert got[("q2", 2)] == 1 and got[("q2", 3)] == 2

@@ -1,5 +1,5 @@
-"""Deterministic splits/sampling + PII scrubbing (training-data
-hygiene operators)."""
+"""Token-budget sampling + PII scrubbing (training-data hygiene
+operators)."""
 
 from __future__ import annotations
 
@@ -7,75 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from geoestate_etl_spark.functions.text import scrub_pii
-from geoestate_etl_spark.operators.sampling import (
-    deterministic_sample,
-    hash_split,
-    stratified_sample,
-)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-
-
-def test_hash_split_partition_and_determinism(spark, docs):
-    out = hash_split(docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    counts = {r.split: r.cnt for r in out.groupBy("split").agg(F.count("*").alias("cnt")).collect()}
-    n = docs.count()
-    assert sum(counts.values()) == n  # total partition: every row labeled once
-    assert 0.6 * n < counts["train"] < 0.95 * n  # roughly proportional
-    # determinism across shuffles/partitionings: identical assignment
-    again = hash_split(docs.repartition(13), "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
-    a = {(r.doc_id, r.split) for r in out.select("doc_id", "split").collect()}
-    b = {(r.doc_id, r.split) for r in again.select("doc_id", "split").collect()}
-    assert a == b
-
-
-def test_hash_split_stable_under_corpus_growth(spark, docs):
-    """Old ids keep their split when new rows arrive (incremental
-    ingest must not shuffle membership)."""
-    half = docs.filter(F.col("doc_id") < 250)
-    full_assign = {
-        r.doc_id: r.split
-        for r in hash_split(docs, "doc_id", {"a": 0.5, "b": 0.5}).collect()
-    }
-    half_assign = {
-        r.doc_id: r.split
-        for r in hash_split(half, "doc_id", {"a": 0.5, "b": 0.5}).collect()
-    }
-    assert all(full_assign[k] == v for k, v in half_assign.items())
-
-
-def test_hash_split_rejects_bad_fractions(docs):
-    with pytest.raises(ValueError):
-        hash_split(docs, "doc_id", {"train": 0.5, "val": 0.2})
-
-
-def test_deterministic_sample_consistent_across_tables(spark):
-    """Same key + salt -> same kept-set on both sides of a join."""
-    orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
-    a = deterministic_sample(orders.select("o_custkey").distinct(), "o_custkey", 0.3)
-    b = deterministic_sample(
-        orders.select("o_custkey", "o_orderkey"), "o_custkey", 0.3
-    )
-    kept_a = {r.o_custkey for r in a.collect()}
-    kept_b = {r.o_custkey for r in b.select("o_custkey").distinct().collect()}
-    assert kept_a == kept_b  # join-consistent sampling
-
-
-def test_stratified_sample_per_stratum_rates(docs):
-    n_by_lang = {r.lang: r.cnt for r in docs.groupBy("lang").agg(F.count("*").alias("cnt")).collect()}
-    out = stratified_sample(
-        docs, "doc_id", "lang", {"en": 1.0, "de": 0.0}, default_fraction=0.5
-    )
-    got = {r.lang: r.cnt for r in out.groupBy("lang").agg(F.count("*").alias("cnt")).collect()}
-    assert got.get("en") == n_by_lang.get("en")  # keep all
-    assert "de" not in got  # drop all
-    for lang, n in n_by_lang.items():
-        if lang in ("en", "de") or n < 20:
-            continue
-        assert 0.2 * n < got.get(lang, 0) < 0.8 * n  # ~half
 
 
 def test_scrub_pii_tokens(spark):
@@ -91,208 +22,6 @@ def test_scrub_pii_tokens(spark):
     assert out[1] == "contact me at <EMAIL> or visit <URL> soon"
     assert out[2] == "server <IP> answered; call <PHONE> now"
     assert out[3] == "no pii here, just the year 2024 and pi 3.14"
-
-
-def test_temperature_mix_endpoints_and_shape(spark):
-    from geoestate_etl_spark.operators.sampling import temperature_mix
-
-    # three sources with very different sizes
-    df = (
-        spark.range(10_000)
-        .select(
-            F.col("id"),
-            F.when(F.col("id") < 7000, "big")
-            .when(F.col("id") < 9500, "mid")
-            .otherwise("small")
-            .alias("src"),
-        )
-    )
-    # alpha=1: natural proportions -> nothing dropped
-    kept, fr = temperature_mix(df, "id", "src", alpha=1.0)
-    assert kept.count() == 10_000
-    assert all(abs(f - 1.0) < 1e-9 for f in fr.values())
-
-    # alpha=0: equal shares -> every stratum keeps ~min-stratum count
-    kept0, fr0 = temperature_mix(df, "id", "src", alpha=0.0)
-    by = {r.src: r.n for r in kept0.groupBy("src").agg(F.count("*").alias("n")).collect()}
-    assert fr0["small"] == 1.0
-    for s in ("big", "mid"):
-        assert abs(by[s] - 500) <= 60  # hash-threshold sampling noise
-    assert by["small"] == 500
-
-    # 0<alpha<1: monotone between the endpoints + deterministic rerun
-    kept5, fr5 = temperature_mix(df, "id", "src", alpha=0.5)
-    assert fr5["small"] == 1.0 and fr5["big"] < 1.0
-    assert fr0["big"] < fr5["big"] < 1.0
-    again, _ = temperature_mix(df, "id", "src", alpha=0.5)
-    assert again.count() == kept5.count()
-    a = {r.id for r in kept5.collect()}
-    b = {r.id for r in again.collect()}
-    assert a == b
-
-
-def test_temperature_mix_null_stratum_not_dropped(spark):
-    """NULL-stratum rows must be sampled at their returned fraction,
-    not silently dropped (ADVICE r2)."""
-    from geoestate_etl_spark.operators.sampling import temperature_mix
-
-    rows = [(i, None if i % 2 else "en") for i in range(400)]
-    df = spark.createDataFrame(rows, ["id", "src"])
-    kept, fr = temperature_mix(df, "id", "src", alpha=1.0)
-    # alpha=1 keeps natural proportions: every row, including NULLs
-    assert fr[None] == 1.0
-    assert kept.filter("src IS NULL").count() == 200
-
-    kept0, fr0 = temperature_mix(df, "id", "src", alpha=0.0)
-    n_null = kept0.filter("src IS NULL").count()
-    # equalized: NULL stratum keeps ~its fraction of 200, not zero
-    assert n_null > 0
-    assert abs(n_null / 200 - fr0[None]) < 0.15
-
-
-# --- grouped (leakage-safe) splits ------------------------------------------
-
-
-def test_grouped_split_no_group_straddles(spark):
-    """Every member of a group lands in one split — the leakage guard."""
-    from geoestate_etl_spark.operators.sampling import grouped_split
-
-    rows = [(i, f"site{i % 37}.com") for i in range(2000)]
-    df = spark.createDataFrame(rows, ["doc_id", "domain"])
-    out = grouped_split(df, "domain", {"train": 0.7, "val": 0.15, "test": 0.15})
-    straddlers = (
-        out.groupBy("domain")
-        .agg(F.countDistinct("split").alias("k"))
-        .filter("k > 1")
-        .count()
-    )
-    assert straddlers == 0
-    # and all three splits are nonempty at 37 groups
-    assert out.select("split").distinct().count() == 3
-
-
-def test_grouped_split_deterministic_under_repartition(spark):
-    from geoestate_etl_spark.operators.sampling import grouped_split
-
-    rows = [(i, f"site{i % 37}.com") for i in range(500)]
-    df = spark.createDataFrame(rows, ["doc_id", "domain"])
-    fr = {"train": 0.8, "test": 0.2}
-    a = {(r.doc_id, r.split) for r in grouped_split(df, "domain", fr).collect()}
-    b = {
-        (r.doc_id, r.split)
-        for r in grouped_split(df.repartition(13), "domain", fr).collect()
-    }
-    assert a == b
-
-
-def test_grouped_split_null_groups(spark):
-    from pyspark.sql.utils import PythonException
-
-    from geoestate_etl_spark.operators.sampling import grouped_split
-
-    rows = [(1, "a.com"), (2, None), (3, "b.com"), (4, None)]
-    df = spark.createDataFrame(rows, ["doc_id", "domain"])
-    fr = {"train": 0.5, "test": 0.5}
-    # without a fallback: NULL groups must raise, not mis-split
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="fallback_key"):
-        grouped_split(df, "domain", fr).collect()
-    # with a fallback: NULL rows split independently (ids 2 and 4 may
-    # differ), non-NULL rows keep their group assignment
-    out = grouped_split(df, "domain", fr, fallback_key="doc_id")
-    got = {r.doc_id: r.split for r in out.collect()}
-    assert set(got) == {1, 2, 3, 4}
-    # the tagged fallback key cannot collide with a real domain equal
-    # to the id string
-    df2 = spark.createDataFrame([(5, "2")], ["doc_id", "domain"])
-    out2 = grouped_split(df2, "domain", fr, fallback_key="doc_id")
-    assert out2.count() == 1
-
-
-def test_grouped_split_domain_compose(spark):
-    """The documented compose: registrable domain from raw URLs keeps
-    every page of one site in one split."""
-    from geoestate_etl_spark.functions.urls import registered_domain, url_parts
-    from geoestate_etl_spark.operators.sampling import grouped_split
-
-    rows = [
-        (1, "https://news.example.co.uk/a?id=1"),
-        (2, "http://example.co.uk/b"),
-        (3, "https://blog.example.co.uk/c#x"),
-        (4, "https://other.org/d"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "url"])
-    dom = registered_domain(url_parts(F.col("url")).getField("host"))
-    out = grouped_split(
-        df.withColumn("_dom", dom), "_dom", {"train": 0.6, "test": 0.4}
-    )
-    splits = {r.doc_id: r.split for r in out.collect()}
-    assert splits[1] == splits[2] == splits[3]
-
-
-def test_sample_k_per_group_exact_deterministic_stable(spark):
-    from geoestate_etl_spark.operators.sampling import sample_k_per_group
-
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 3).alias("g")
-    )
-    s1 = sample_k_per_group(df, ["g"], "id", 10)
-    s2 = sample_k_per_group(df, ["g"], "id", 10)
-    rows1 = sorted((r.g, r.id) for r in s1.collect())
-    assert rows1 == sorted((r.g, r.id) for r in s2.collect())  # deterministic
-    per_g = {}
-    for g, i in rows1:
-        per_g.setdefault(g, []).append(i)
-    assert all(len(v) == 10 for v in per_g.values())  # EXACT k
-
-    # small group: takes the whole group, no error
-    tiny = spark.createDataFrame([(0, 1), (0, 2)], ["g", "id"])
-    assert sample_k_per_group(tiny, ["g"], "id", 10).count() == 2
-
-    # growth stability: adding rows keeps picks content-keyed (old
-    # picks survive unless displaced by hash rank, never reshuffled)
-    grown = spark.range(1500).select(F.col("id"), (F.col("id") % 3).alias("g"))
-    sg = {(r.g, r.id) for r in sample_k_per_group(grown, ["g"], "id", 10).collect()}
-    overlap = len(set(rows1) & sg)
-    assert overlap >= 15  # most of the original 30 picks persist
-
-    # independent redraw under a different salt
-    s3 = {(r.g, r.id) for r in sample_k_per_group(df, ["g"], "id", 10, salt="v2").collect()}
-    assert s3 != set(rows1)
-
-
-def test_epoch_shuffle_deterministic_permutation(spark, docs):
-    from geoestate_etl_spark.operators.sampling import epoch_shuffle
-
-    base = docs.select("doc_id").filter(F.col("doc_id") < 2000)
-    ids = [r.doc_id for r in base.collect()]
-    e1 = [r.doc_id for r in epoch_shuffle(base, "doc_id", epoch=1).collect()]
-    # a permutation: same multiset, different order than the source
-    assert sorted(e1) == sorted(ids) and e1 != sorted(ids)
-    # reproducible: same epoch -> byte-identical order, even after a
-    # different physical layout of the input
-    e1b = [
-        r.doc_id
-        for r in epoch_shuffle(base.repartition(13), "doc_id", epoch=1).collect()
-    ]
-    assert e1 == e1b
-    # epoch advance -> a different permutation of the same rows
-    e2 = [r.doc_id for r in epoch_shuffle(base, "doc_id", epoch=2).collect()]
-    assert sorted(e2) == sorted(ids) and e2 != e1
-
-
-def test_epoch_shuffle_position_col(spark, docs):
-    from geoestate_etl_spark.operators.sampling import epoch_shuffle
-
-    base = docs.select("doc_id").filter(F.col("doc_id") < 500)
-    out = epoch_shuffle(base, "doc_id", epoch=3, position_col="pos")
-    rows = out.select("doc_id", "pos").collect()
-    assert sorted(r.pos for r in rows) == list(range(1, len(rows) + 1))
-    # positions agree with the no-position path's order
-    order = [r.doc_id for r in epoch_shuffle(base, "doc_id", epoch=3).collect()]
-    by_pos = [r.doc_id for r in sorted(rows, key=lambda r: r.pos)]
-    assert by_pos == order
 
 
 def test_partitioned_cumsum_matches_per_group_window(spark):
@@ -520,53 +249,3 @@ def test_consume_budget_fold_invariant_random(spark, rows, cuts, budgets):
     )
     want = sample_to_token_budget(full, "dom", "w", budgets, order_col=arrival)
     assert sorted(seq_ids) == sorted(r.doc_id for r in want.collect())
-
-
-# ---- k-fold (r4) -------------------------------------------------------
-
-
-def test_k_fold_partitions_and_group_cohesion(spark):
-    from geoestate_etl_spark.operators.sampling import k_fold
-
-    df = spark.range(2000).select(
-        F.col("id"), (F.col("id") % 137).alias("grp")
-    )
-    tagged = k_fold(df, "grp", k=5)
-    # every row gets exactly one fold in [0, 5)
-    assert tagged.filter(~F.col("fold").between(0, 4)).count() == 0
-    assert tagged.count() == 2000
-    # group cohesion: one fold per group
-    straddle = (
-        tagged.groupBy("grp")
-        .agg(F.countDistinct("fold").alias("nf"))
-        .filter(F.col("nf") > 1)
-    )
-    assert straddle.count() == 0
-    # folds are nonempty and roughly balanced (137 groups over 5 folds)
-    sizes = {r.fold: r["count"] for r in tagged.groupBy("fold").count().collect()}
-    assert len(sizes) == 5 and min(sizes.values()) > 0
-
-
-def test_k_fold_stable_under_growth_and_repartition(spark):
-    from geoestate_etl_spark.operators.sampling import k_fold
-
-    base = spark.range(500).select(F.col("id"), (F.col("id") % 37).alias("grp"))
-    a = {r.id: r.fold for r in k_fold(base, "grp", 4).collect()}
-    grown = spark.range(1000).select(F.col("id"), (F.col("id") % 37).alias("grp"))
-    b = {r.id: r.fold for r in k_fold(grown.repartition(13), "grp", 4).collect()}
-    for i in range(500):
-        assert a[i] == b[i]  # existing rows never move folds
-
-
-def test_k_fold_null_group_contract(spark):
-    import pytest as _pytest
-
-    from geoestate_etl_spark.operators.sampling import k_fold
-
-    df = spark.createDataFrame([(1, None), (2, "a")], "id long, grp string")
-    with _pytest.raises(Exception):
-        k_fold(df, "grp", 3).collect()
-    ok = k_fold(df, "grp", 3, fallback_key="id").collect()
-    assert len(ok) == 2
-    with _pytest.raises(ValueError):
-        k_fold(df, "grp", 1, fallback_key="id")

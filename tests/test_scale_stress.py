@@ -718,47 +718,3 @@ def test_bfs_1m_edge_smallworld_bounded(spark):
     assert hist[2] == 2000
     assert hist[3] == 2000
     assert wall < 120, wall
-
-
-def test_video_frame_sampling_20k_payloads(spark):
-    """Video tier at volume: 20k synthesized AVIs decode + sample
-    through one Arrow-batched pass. Certifies (a) output row count ==
-    Σ ceil(frames/k) predicted from the id-derived parameters, (b)
-    per-frame stats spot-verified against the closed form, and (c)
-    the operator stays partition-parallel (the mapInPandas fan-out
-    guard) rather than collapsing to one worker."""
-    from pyspark.sql import functions as F
-
-    from geoestate_etl_spark.operators.multimodal import (
-        attach_real_media,
-        sample_video_frames,
-    )
-
-    n, k = 20_000, 2
-    # only id % 7 == 6 rows are AVIs; synthesize ids that all are
-    ids = spark.range(n).select((F.col("id") * 7 + 6).alias("doc_id"))
-    media = attach_real_media(ids, "doc_id")
-    frames = sample_video_frames(media, every_nth=k)
-    assert frames.rdd.getNumPartitions() > 1  # stays spread
-    got = frames.select(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum("px_max").alias("sum_max"),
-    ).first()
-    # predicted: per video, frames F = id%8+2, sampled = ceil(F/k);
-    # px_max per sampled frame fi: DIB (even doc) plants fi+(w-1)+(h-1),
-    # MJPEG (odd doc%14==13, r6) is blockwise-flat 128+2·(((m+fi)%11)−5)
-    exp_rows = exp_sum = 0
-    for i in range(n):
-        doc = i * 7 + 6
-        w, h, fr = doc % 16 + 4, doc % 12 + 4, doc % 8 + 2
-        nb = ((w + 7) // 8) * ((h + 7) // 8)
-        for fi in range(0, fr, k):
-            exp_rows += 1
-            if doc % 14 == 13:
-                exp_sum += 128 + 2 * (
-                    max(((m + fi) % 11) for m in range(nb)) - 5
-                )
-            else:
-                exp_sum += fi + w - 1 + h - 1
-    assert got.rows == exp_rows
-    assert got.sum_max == exp_sum

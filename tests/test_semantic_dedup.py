@@ -127,74 +127,6 @@ def test_geo_fold_has_grid_rows(spark):
     ).count()
 
 
-def test_incremental_batches_reproduce_full_run(spark):
-    """With arrival-ordered ids and a standing table carrying every
-    seen item, a batch sequence reproduces the corpus-wide greedy rule
-    exactly — pairs and keep decisions both."""
-    from geoestate_etl_spark.operators.semantic_dedup import (
-        incremental_semantic_dedup,
-    )
-
-    base = [1.0, 0.0, 0.0, 0.0]
-    rows = [
-        (1, 0, base),
-        (2, 0, [0.999, 0.01, 0.0, 0.0]),
-        (3, 0, [0.0, 0.0, 1.0, 0.0]),
-        (4, 0, [0.998, -0.02, 0.01, 0.0]),   # arrives later, matches 1,2
-        (5, 1, [0.0, 1.0, 0.0, 0.0]),
-        (6, 1, [0.01, 0.9999, 0.0, 0.0]),    # matches 5 cross-batch
-    ]
-    full = _df(spark, rows)
-    fp, fd = semantic_dedup(full, cosine_threshold=0.95)
-    want_pairs = {(r.id_a, r.id_b, r.cos_e4) for r in fp.collect()}
-    want_kept = {r.vec_id: r.kept for r in fd.collect()}
-
-    b1, b2 = _df(spark, rows[:3]), _df(spark, rows[3:])
-    p1, d1 = incremental_semantic_dedup(b1, None, cosine_threshold=0.95)
-    p2, d2 = incremental_semantic_dedup(b2, b1, cosine_threshold=0.95)
-    got_pairs = {
-        (r.id_a, r.id_b, r.cos_e4) for r in p1.collect()
-    } | {(r.id_a, r.id_b, r.cos_e4) for r in p2.collect()}
-    got_kept = {r.vec_id: r.kept for r in d1.collect()}
-    got_kept.update({r.vec_id: r.kept for r in d2.collect()})
-    assert got_pairs == want_pairs
-    assert got_kept == want_kept
-    # and no pair is reported by both batches
-    assert not {(r.id_a, r.id_b) for r in p1.collect()} & {
-        (r.id_a, r.id_b) for r in p2.collect()
-    }
-
-
-def test_incremental_history_wins_regardless_of_id(spark):
-    """A batch item matching history is dropped even when its id is
-    SMALLER than the history item's — arrival order, not id order,
-    decides across batches (ids only order within a batch)."""
-    from geoestate_etl_spark.operators.semantic_dedup import (
-        incremental_semantic_dedup,
-    )
-
-    hist = _df(spark, [(10, 0, [1.0, 0.0, 0.0, 0.0])])
-    batch = _df(spark, [(2, 0, [0.999, 0.01, 0.0, 0.0])])
-    pairs, decisions = incremental_semantic_dedup(batch, hist, 0.95)
-    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(2, 10)}
-    assert [r.kept for r in decisions.collect()] == [False]
-    # history decisions are not re-issued: one row, the batch's
-    assert decisions.count() == 1
-
-
-def test_incremental_pair_scan_is_equi_join(spark):
-    from geoestate_etl_spark.operators.semantic_dedup import (
-        incremental_semantic_dedup,
-    )
-
-    b1 = _df(spark, [(1, 0, [1.0, 0.0]), (2, 1, [0.0, 1.0])])
-    b2 = _df(spark, [(3, 0, [0.9, 0.1])])
-    pairs, _ = incremental_semantic_dedup(b2, b1, 0.5)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_centroid_distance_order_keeps_most_central(spark):
     """Paper-faithful ordering: within a duplicate group the member
     CLOSEST to its cluster centroid survives, regardless of id."""

@@ -62,76 +62,3 @@ def test_cms_probe_join_broadcasts_sketch_side(spark):
     est = cms_estimate(cms_build(df, "key"), keys, "key")
     plan = est._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-
-
-def test_cms_merge_fold_invariance(spark):
-    """Counter matrices are linear: merging per-batch sketches must
-    equal the one-pass full build bit-for-bit (the incremental /
-    per-shard deployment contract), and estimates over the merge must
-    equal estimates over the union."""
-    from geoestate_etl_spark.operators.sketches import cms_merge
-
-    orders = spark.read.parquet(f"{SF_ORACLE}/orders.parquet")
-    parts = [
-        orders.filter(F.col("o_orderkey") % 3 == i) for i in range(3)
-    ]
-    merged = cms_merge(
-        *[cms_build(p, "o_orderpriority", 4, 256) for p in parts]
-    )
-    full = cms_build(orders, "o_orderpriority", 4, 256)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-    keys = orders.select("o_orderpriority").distinct()
-    em = {
-        r.o_orderpriority: r.est
-        for r in cms_estimate(merged, keys, "o_orderpriority", 4, 256).collect()
-    }
-    ef = {
-        r.o_orderpriority: r.est
-        for r in cms_estimate(full, keys, "o_orderpriority", 4, 256).collect()
-    }
-    assert em == ef
-
-
-def test_hll_merge_equals_full_build(spark):
-    """DataSketches HLL: per-batch grouped sketches unioned with
-    hll_union_agg estimate within the sketch rsd of BOTH the one-pass
-    build and the exact truth (the union path uses its own composite
-    estimator, so bit-equality with the direct build is NOT the
-    contract - see the hll_build docstring)."""
-    from geoestate_etl_spark.operators.sketches import hll_build, hll_merge
-
-    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
-    parts = [li.filter(F.col("l_orderkey") % 3 == i) for i in range(3)]
-    merged = hll_merge(
-        *[hll_build(p, "l_partkey", ["l_returnflag"]) for p in parts]
-    )
-    full = hll_build(li, "l_partkey", ["l_returnflag"])
-    est = F.hll_sketch_estimate("hll").alias("n")
-    em = {r.l_returnflag: r.n for r in merged.select("l_returnflag", est).collect()}
-    ef = {r.l_returnflag: r.n for r in full.select("l_returnflag", est).collect()}
-    truth = {
-        r.l_returnflag: r.n
-        for r in li.groupBy("l_returnflag")
-        .agg(F.count_distinct("l_partkey").alias("n"))
-        .collect()
-    }
-    for k, n in truth.items():
-        assert abs(em[k] - n) <= 0.05 * n  # lg_k=12 -> ~1% rsd, 5x slack
-        assert abs(ef[k] - n) <= 0.05 * n
-        assert abs(em[k] - ef[k]) <= 0.05 * max(n, 1)
-
-
-def test_hll_global_merge(spark):
-    from geoestate_etl_spark.operators.sketches import hll_build, hll_merge
-
-    li = spark.read.parquet(f"{SF_ORACLE}/lineitem.parquet")
-    parts = [li.filter(F.col("l_orderkey") % 2 == i) for i in range(2)]
-    merged = hll_merge(*[hll_build(p, "l_partkey") for p in parts])
-    n = F.hll_sketch_estimate("hll").alias("n")
-    est = merged.select(n).first().n
-    full = hll_build(li, "l_partkey").select(n).first().n
-    truth = li.select("l_partkey").distinct().count()
-    assert abs(est - truth) <= 0.05 * truth
-    assert abs(est - full) <= 0.05 * truth

@@ -1,5 +1,5 @@
-"""Source/sink round-trips: CSV (incl. corrupt-record policies), JSON,
-ORC, partitioned parquet with partition pruning."""
+"""Source/sink round-trips: CSV (incl. corrupt-record policies), JSON
+and ORC."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geoestate_etl_spark.sources.csv_source import read_dirty_csv
-from geoestate_etl_spark.sources.parquet_io import write_parquet
 
 
 def test_csv_failfast_and_dropmalformed(spark, tmp_path):
@@ -63,12 +62,3 @@ def test_orc_roundtrip(spark, tmp_path):
     df.write.orc(p)
     assert spark.read.orc(p).agg(F.sum("v")).collect()[0][0] == sum(3 * i for i in range(100))
 
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    df = spark.range(1000).withColumn("bucket", (F.col("id") % 4).cast("int"))
-    p = str(tmp_path / "pp")
-    write_parquet(df, p, partition_by=["bucket"])
-    scan = spark.read.parquet(p).filter(F.col("bucket") == 2)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(bucket" in plan
-    assert scan.count() == 250

@@ -1,6 +1,7 @@
-"""Structured Streaming demo path: the batch-verified tumbling plan,
-run as a real readStream (file source -> memory sink) and checked
-against the batch result on the same rows."""
+"""Structured Streaming demo path: the batch-verified session-window
+plan and a stream-static join, run as a real readStream (file source
+-> memory sink) and checked against the batch result on the same
+rows."""
 
 from __future__ import annotations
 
@@ -8,10 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from geoestate_etl_spark.sources.parquet_io import load_events
-from geoestate_etl_spark.streaming.event_windows import (
-    stream_tumbling_counts,
-    tumbling_counts,
-)
 from tests.conftest import SF_SMOKE
 
 
@@ -87,94 +84,4 @@ def test_stream_static_join(spark, events_batch):
         }
     finally:
         q.stop()
-    assert got == expected
-
-
-def test_stream_matches_batch(spark, events_batch):
-    batch_df = spark.read.parquet(events_batch)
-    expected = {
-        (r.window_start, r.event_type): r.cnt
-        for r in tumbling_counts(batch_df, "1 hour").select(
-            "window_start", "event_type", "cnt"
-        ).collect()
-    }
-
-    stream = (
-        spark.readStream.schema(batch_df.schema).parquet(events_batch)
-    )
-    q = (
-        stream_tumbling_counts(stream, "1 hour")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r.window_start, r.event_type): r.cnt
-            for r in spark.sql("SELECT * FROM stream_out").collect()
-        }
-    finally:
-        q.stop()
-    assert got == expected
-
-
-# --- rocksdb state store ---------------------------------------------------
-
-def test_session_windows_on_rocksdb_state_store(spark, events_batch):
-    """Same session-window aggregation, state held in RocksDB instead
-    of the heap-backed default — results must be identical. This is
-    the large-state path: heap provider = O(state) executor heap,
-    RocksDB = bounded block cache + local disk."""
-    from geoestate_etl_spark.session import (
-        ROCKSDB_PROVIDER,
-        streaming_state_conf,
-    )
-    from geoestate_etl_spark.streaming.event_windows import session_windows
-
-    batch_df = spark.read.parquet(events_batch)
-    expected = {
-        (r.user_id, r.session_start): r.n_events
-        for r in session_windows(batch_df, "5 minutes").collect()
-    }
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    for k, v in streaming_state_conf().items():
-        spark.conf.set(k, v)
-    try:
-        stream = spark.readStream.schema(batch_df.schema).parquet(events_batch)
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "user_id", F.col("w.start").alias("session_start"), "n_events"
-            )
-        )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("rocks_out")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # the running query must actually be on RocksDB (its
-            # provider-specific metrics only exist when it is)
-            metrics = q.lastProgress["stateOperators"][0]["customMetrics"]
-            assert "rocksdb" in str(metrics).lower()
-            got = {
-                (r.user_id, r.session_start): r.n_events
-                for r in spark.sql("SELECT * FROM rocks_out").collect()
-            }
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
     assert got == expected

@@ -106,33 +106,6 @@ def test_resample_matches_duckdb_oracle(spark):
     assert got == want
 
 
-def test_interpolate_linear_interior_runs(spark):
-    rows = [
-        ("a", 0, 10.0), ("a", 1, None), ("a", 2, None), ("a", 3, 40.0),
-        ("a", 4, None),              # trailing -> stays NULL
-        ("b", 0, None), ("b", 1, 8.0),  # leading -> stays NULL
-    ]
-    df = spark.createDataFrame(rows, ["k", "o", "v"])
-    from geoestate_etl_spark.operators.timeseries import interpolate_linear
-
-    got = {(r.k, r.o): r.v for r in interpolate_linear(df, "k", "o", ["v"]).collect()}
-    assert got[("a", 1)] == 20.0 and got[("a", 2)] == 30.0
-    assert got[("a", 0)] == 10.0 and got[("a", 3)] == 40.0
-    assert got[("a", 4)] is None and got[("b", 0)] is None
-
-
-def test_interpolate_respects_order_distance(spark):
-    # irregular spacing: gap at o=5 between anchors at 0 (0.0) and 10
-    # (100.0) -> value 50.0, not the index-even 33.3
-    df = spark.createDataFrame(
-        [("a", 0, 0.0), ("a", 5, None), ("a", 10, 100.0)], ["k", "o", "v"]
-    )
-    from geoestate_etl_spark.operators.timeseries import interpolate_linear
-
-    got = {r.o: r.v for r in interpolate_linear(df, "k", "o", ["v"]).collect()}
-    assert got[5] == 50.0
-
-
 # --- generative pandas parity ------------------------------------------------
 
 from hypothesis import given, settings, strategies as st  # noqa: E402

@@ -2,7 +2,7 @@
 
 Mirrors tests/test_bpe.py's strategy: driver-side training invariants,
 Viterbi optimality against brute-force enumeration, distributed encode
-== driver encode, JVM decode round-trip, and model persistence.
+== driver encode, and JVM decode round-trip.
 """
 
 from __future__ import annotations
@@ -114,13 +114,6 @@ def test_unknown_char_degrades_gracefully(model):
     assert isinstance(ids, list) and len(ids) >= 1
     # unknown single chars map to UNK_ID, not an exception
     assert U.UNK_ID in ids or all(i > 0 for i in ids)
-
-
-def test_model_frame_roundtrip(spark, model):
-    df = model.to_frame(spark)
-    again = U.model_from_frame(df, max_piece_len=model.max_piece_len)
-    assert again.vocab == model.vocab
-    assert again.lp_micro == model.lp_micro
 
 
 def test_compression_beats_chars(spark, docs, model):

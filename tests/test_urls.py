@@ -1,4 +1,4 @@
-"""URL parse/canonicalize/dedup semantics + DuckDB parity on the same
+"""URL parse/canonicalize semantics + DuckDB parity on the same
 rule set (the repo-local oracle discipline used for vocab.py: ops that
 never joined the 50-entry registry still get a cross-engine gate)."""
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from geoestate_etl_spark.functions.urls import (
     canonical_url,
-    dedup_by_url,
     registered_domain,
     url_parts,
 )
@@ -62,18 +61,6 @@ def test_registered_domain(spark):
     df = spark.createDataFrame(rows, ["host", "want"])
     for r in df.select("want", registered_domain(F.col("host")).alias("got")).collect():
         assert r.got == r.want
-
-
-def test_dedup_by_url_collapses_canonical_equals(spark):
-    rows = [
-        (1, "http://E.com/p?utm_source=a"),
-        (2, "http://e.com/p"),            # same canonical as 1
-        (3, "http://e.com/p?q=1"),        # distinct
-        (4, "http://e.com/p/?q=1"),       # same canonical as 3
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "url"])
-    kept = sorted(r.doc_id for r in dedup_by_url(df, order_col="doc_id").collect())
-    assert kept == [1, 3]
 
 
 def test_canonicalization_duckdb_parity(spark):
@@ -144,19 +131,3 @@ FROM c
 """
     want = {r[0]: (r[1], r[2]) for r in con.execute(sql).fetchall()}
     assert got == want
-
-
-def test_dedup_by_url_keeps_distinct_unparseable(spark):
-    """Unparseable URLs must NOT collapse into one NULL-canonical
-    group: each distinct raw malformed URL survives (ADVICE r2)."""
-    rows = [
-        (1, "not a url"),
-        (2, "also :: not a url"),
-        (3, "///relative/only"),
-        (4, "http://ok.com/a"),
-        (5, "http://OK.com/a"),  # canonical-dups with 4
-    ]
-    df = spark.createDataFrame(rows, ["id", "url"])
-    out = dedup_by_url(df, "url", order_col="id")
-    kept = sorted(r.id for r in out.collect())
-    assert kept == [1, 2, 3, 4]
