@@ -1,4 +1,4 @@
-"""Upsert (MERGE INTO emulation).
+"""Upsert (MERGE INTO emulation) and SCD2 history tracking.
 
 Plain parquet has no transactional MERGE (that's Delta/Iceberg
 territory); the v1 pattern is read-modify-overwrite expressed
@@ -8,8 +8,12 @@ relationally:
   matched rows are replaced, new rows appended — one shuffle on the
   key, then a union. Equivalent to
   ``MERGE .. WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT``.
+- ``scd2_apply``: slowly-changing-dimension type 2 — incoming changes
+  close the current version (valid_to = change ts) and open a new
+  open-ended version; history rows are immutable. All set logic, no
+  per-row code.
 
-At 100 TB it is bounded by one key-shuffle of each input; writing
+At 100 TB both are bounded by one key-shuffle of each input; writing
 the result partitioned by key range / date keeps the overwrite
 surgical (dynamic partition overwrite) instead of full-table.
 """
@@ -17,6 +21,7 @@ surgical (dynamic partition overwrite) instead of full-table.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
@@ -24,3 +29,61 @@ def upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
     be unique per key (pre-aggregate if not); schemas must align."""
     surviving = target.join(updates.select(*keys), on=keys, how="left_anti")
     return surviving.unionByName(updates)
+
+
+def scd2_apply(
+    history: DataFrame,
+    changes: DataFrame,
+    keys: list[str],
+    change_ts_col: str,
+    valid_from: str = "valid_from",
+    valid_to: str = "valid_to",
+) -> DataFrame:
+    """SCD2: ``history`` has (keys..., attrs..., valid_from, valid_to
+    [null = current]); ``changes`` has (keys..., attrs..., change_ts).
+
+    Handles any number of changes per key in one batch: versions are
+    chained — each change's ``valid_to`` is the key's next change
+    timestamp (window ``lead``), only the last stays open; the
+    previously-current row closes at the key's EARLIEST change. Closed
+    history is untouched, and the one-open-row-per-key invariant holds.
+
+    Batches are assumed to arrive in order: a change older than the
+    current version's ``valid_from`` is a LATE arrival. The close is
+    clamped with ``greatest(valid_from, earliest change)`` so a late
+    batch can never produce an inverted interval
+    (``valid_to < valid_from``) on the closing row — the current
+    version closes as a zero-length interval instead, and the late
+    change takes over from its own timestamp. Rewriting already-closed
+    history for late data is out of scope (that's a full temporal
+    merge; see ``operators/temporal.py`` for the read-side handling).
+    """
+    from pyspark.sql import Window
+
+    closed = history.filter(F.col(valid_to).isNotNull())
+    current = history.filter(F.col(valid_to).isNull())
+    to_type = history.schema[valid_to].dataType
+
+    w = Window.partitionBy(*keys).orderBy(F.col(change_ts_col).asc())
+    chained = changes.withColumn("_next_ts", F.lead(change_ts_col).over(w))
+
+    first_change = changes.groupBy(*keys).agg(
+        F.min(change_ts_col).alias("_new_from")
+    )
+    closing = (
+        current.join(first_change, on=keys, how="inner")
+        .withColumn(valid_to, F.greatest(F.col(valid_from), F.col("_new_from")))
+        .drop("_new_from")
+    )
+    untouched_current = current.join(
+        first_change.select(*keys), on=keys, how="left_anti"
+    )
+
+    opened = (
+        chained.withColumnRenamed(change_ts_col, valid_from)
+        .withColumn(valid_to, F.col("_next_ts").cast(to_type))
+        .drop("_next_ts")
+    )
+    return closed.unionByName(untouched_current).unionByName(closing).unionByName(
+        opened.select(*closed.columns)
+    )

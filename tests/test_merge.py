@@ -1,8 +1,15 @@
-"""Upsert semantics on small constructed tables."""
+"""Upsert / SCD2 semantics on small constructed tables."""
 
 from __future__ import annotations
 
-from geoestate_etl_spark.operators.merge import upsert
+import datetime
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+from geoestate_etl_spark.operators.merge import scd2_apply, upsert
 
 
 def test_upsert(spark):
@@ -14,3 +21,93 @@ def test_upsert(spark):
     )
     out = {r.id: (r.name, r.v) for r in upsert(target, updates, ["id"]).collect()}
     assert out == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
+
+
+SCD_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("attr", T.StringType()),
+        T.StructField("valid_from", T.TimestampType()),
+        T.StructField("valid_to", T.TimestampType()),
+    ]
+)
+
+
+def ts(s):
+    return datetime.datetime.fromisoformat(s)
+
+
+def test_scd2_apply(spark):
+    history = spark.createDataFrame(
+        [
+            (1, "old", ts("2020-01-01"), ts("2021-01-01")),  # closed
+            (1, "cur", ts("2021-01-01"), None),  # current, will be closed
+            (2, "keep", ts("2020-06-01"), None),  # current, untouched
+        ],
+        SCD_SCHEMA,
+    )
+    changes = spark.createDataFrame(
+        [(1, "new", ts("2022-03-01")), (3, "born", ts("2022-04-01"))],
+        ["id", "attr", "change_ts"],
+    )
+    out = scd2_apply(history, changes, ["id"], "change_ts")
+    rows = sorted(
+        [(r.id, r.attr, r.valid_from, r.valid_to) for r in out.collect()]
+    )
+    assert rows == sorted(
+        [
+            (1, "old", ts("2020-01-01"), ts("2021-01-01")),
+            (1, "cur", ts("2021-01-01"), ts("2022-03-01")),  # closed at change
+            (1, "new", ts("2022-03-01"), None),  # new current
+            (2, "keep", ts("2020-06-01"), None),  # untouched
+            (3, "born", ts("2022-04-01"), None),  # brand-new key
+        ]
+    )
+    # invariant: exactly one open row per live key
+    open_counts = (
+        out.filter(F.col("valid_to").isNull()).groupBy("id").count().collect()
+    )
+    assert all(r["count"] == 1 for r in open_counts)
+
+
+def test_scd2_two_changes_same_key_chain(spark):
+    """Two changes for one key in a single batch must chain versions,
+    not create two open rows (review finding)."""
+    history = spark.createDataFrame(
+        [(1, "cur", ts("2021-01-01"), None)], SCD_SCHEMA
+    )
+    changes = spark.createDataFrame(
+        [(1, "v2", ts("2022-01-01")), (1, "v3", ts("2023-01-01"))],
+        ["id", "attr", "change_ts"],
+    )
+    out = scd2_apply(history, changes, ["id"], "change_ts")
+    rows = sorted((r.attr, r.valid_from, r.valid_to) for r in out.collect())
+    assert rows == sorted(
+        [
+            ("cur", ts("2021-01-01"), ts("2022-01-01")),
+            ("v2", ts("2022-01-01"), ts("2023-01-01")),  # chained closure
+            ("v3", ts("2023-01-01"), None),  # single open row
+        ]
+    )
+    assert out.filter(F.col("valid_to").isNull()).count() == 1
+
+
+def test_scd2_late_change_never_inverts_interval(spark):
+    """A change older than the current version's valid_from (late
+    arrival) must not produce valid_to < valid_from on the closing row
+    (advice finding): the close clamps to greatest(valid_from, change)."""
+    history = spark.createDataFrame(
+        [(1, "cur", ts("2022-01-01"), None)], SCD_SCHEMA
+    )
+    changes = spark.createDataFrame(
+        [(1, "late", ts("2021-06-01"))], ["id", "attr", "change_ts"]
+    )
+    out = scd2_apply(history, changes, ["id"], "change_ts")
+    rows = {(r.attr): (r.valid_from, r.valid_to) for r in out.collect()}
+    # clamped: zero-length close, not an inverted interval
+    assert rows["cur"] == (ts("2022-01-01"), ts("2022-01-01"))
+    assert rows["late"] == (ts("2021-06-01"), None)
+    inverted = out.filter(
+        F.col("valid_to").isNotNull() & (F.col("valid_to") < F.col("valid_from"))
+    )
+    assert inverted.count() == 0

@@ -67,6 +67,7 @@ LIBRARY_ONLY_DEFS = frozenset(
         f"{PACKAGE}/operators/h264.py::_annexb_nals",
         f"{PACKAGE}/operators/h264.py::h264_frames",
         f"{PACKAGE}/operators/h264.py::make_h264_annexb",
+        f"{PACKAGE}/operators/merge.py::scd2_apply",
         f"{PACKAGE}/operators/pq.py::pq_adc_topk",
         f"{PACKAGE}/operators/pq.py::pq_bytes_per_vector",
         f"{PACKAGE}/operators/pq.py::pq_recall_table",
