@@ -84,15 +84,6 @@ class CorpusResult:
     def unpersist(self) -> None:
         self.cached.unpersist()
 
-    def fingerprints(self) -> DataFrame:
-        """Fingerprints of this batch's survivors (column ``fp``) —
-        union into the standing ``seen`` table to make the next batch
-        incremental. These are the *raw-text* fingerprints computed
-        during dedup (carried through as the ``fp`` output column), so
-        a re-crawl of the same raw document matches even though the
-        stored text is scrubbed."""
-        return self.packed.select("fp").distinct()
-
 
 def quality_gate(
     text_col: Column | str,
@@ -150,8 +141,10 @@ def run_corpus(
     O(batch), not O(history). History-aware *near*-dup removal would
     need the standing table to carry MinHash signatures too; near
     dups are found by this corpus-wide job's slower-cadence full
-    re-cluster instead. Maintain the table with
-    :meth:`CorpusResult.fingerprints`.
+    re-cluster instead. Maintain the table by unioning in each run's
+    distinct ``packed.fp``: the *raw-text* fingerprints computed during
+    dedup, so a re-crawl of the same raw document matches even though
+    the stored text is scrubbed.
 
     Three to five actions total: the span-drop count (only when
     ``span_dedup_delimiter`` is given — the span-dedup output is

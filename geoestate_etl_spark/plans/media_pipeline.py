@@ -86,18 +86,6 @@ class MediaCorpusResult:
     def unpersist(self) -> None:
         self.survivors.unpersist()
 
-    def content_hashes(self) -> DataFrame:
-        """This batch's surviving content hashes (column ``chash``) —
-        union into the standing ``seen_hashes`` table to make the next
-        batch incremental (the media twin of
-        ``CorpusResult.fingerprints``). A re-crawl of a byte-identical
-        payload matches regardless of path or landing time; dropped
-        re-encodes carry different bytes and are re-dropped by the
-        content tier instead."""
-        return self.survivors.select(
-            F.col("_chash").alias("chash")
-        ).distinct()
-
 
 def run_media_corpus(
     spark: SparkSession,
@@ -120,7 +108,11 @@ def run_media_corpus(
     previously ingested batches — decodable files whose payload hash
     already exists leave via a left-anti join before the in-batch
     dedup tiers, so processing stays O(batch), not O(history).
-    Maintain the table with :meth:`MediaCorpusResult.content_hashes`.
+    Maintain the table by unioning in each run's distinct
+    ``survivors._chash`` (as ``chash``): a re-crawl of a byte-identical
+    payload matches regardless of path or landing time; dropped
+    re-encodes carry different bytes and are re-dropped by the content
+    tier instead.
     """
     from geoestate_etl_spark.operators.multimodal import embed_media_stub
     from geoestate_etl_spark.operators.semantic_dedup import (
@@ -269,8 +261,8 @@ def run_media_corpus(
             .groupBy("_fp")
             .agg(
                 F.min("media_id").alias("media_id"),
-                # keeper's content hash rides along: content_hashes() feeds the
-                # standing seen_hashes table for incremental drops
+                # keeper's content hash rides along as ``_chash``: it
+                # feeds the standing seen_hashes table for incremental drops
                 F.min_by("_chash", "media_id").alias("_chash"),
                 *[F.min_by(c, "media_id").alias(c) for c in meta_cols],
             )

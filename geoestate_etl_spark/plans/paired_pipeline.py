@@ -84,27 +84,6 @@ class PairedCorpusResult:
     def unpersist(self) -> None:
         self.survivors.unpersist()
 
-    def image_hashes(self) -> DataFrame:
-        """Surviving image content hashes (column ``chash``) — union
-        into the standing table passed as ``seen_image_hashes`` to
-        make the next batch incremental (the paired twin of
-        ``MediaCorpusResult.content_hashes``)."""
-        return self.survivors.select(
-            F.col("_chash").alias("chash")
-        ).distinct()
-
-    def caption_fingerprints(self) -> DataFrame:
-        """Surviving caption fingerprints (column ``fp``) — union into
-        the standing table passed as ``seen_caption_fps`` (the paired
-        twin of ``CorpusResult.fingerprints``)."""
-        from geoestate_etl_spark.functions.text import fingerprint_md5
-
-        return self.survivors.select(
-            fingerprint_md5(self._caption_col).alias("fp")
-        ).distinct()
-
-    _caption_col: str = "caption"
-
 
 #: The equality tiers as (window tag, key column). The two image tiers
 #: keep DISTINCT tags: their 64-bit keys share one string space, so a
@@ -190,9 +169,9 @@ def run_paired_corpus(
     media pipeline's ``seen_hashes``, historical re-encodes /
     perceptual / near-dup twins are the in-batch tiers' job on a full
     re-cluster (history-aware NEAR-dup would need standing
-    signatures). Maintain the tables
-    with :meth:`PairedCorpusResult.image_hashes` /
-    :meth:`PairedCorpusResult.caption_fingerprints`.
+    signatures). Maintain the tables by unioning in each run's
+    distinct ``survivors._chash`` (as ``chash``) and
+    ``fingerprint_md5(caption_col)`` of the survivors (as ``fp``).
     """
     from geoestate_etl_spark.functions.text import fingerprint_md5
     from geoestate_etl_spark.operators.components import (
@@ -416,5 +395,4 @@ def run_paired_corpus(
         shard_manifest=manifest,
         audit_ok=audit_ok,
         survivors=survivors,
-        _caption_col=caption_col,
     )

@@ -7,27 +7,18 @@ the union+window formulation implements the standard semantics.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geoestate_etl_spark.operators.asof import asof_join, range_join_bucketed
 from geoestate_etl_spark.plans.registry import QuerySpec
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from geoestate_etl_spark.sources.parquet_io import load_events
-
-        return load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from geoestate_etl_spark.sources.parquet_io import table
 
 
 def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each event joined to the user's latest purchase at-or-before it."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id", "ts")
@@ -40,7 +31,7 @@ def q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders joined into fixed price bands via the bucketed range join."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     # bands built JVM-side (spark.range): a Python createDataFrame here
     # costs seconds of py4j/serialization warm-up for 10 rows
     bands = spark.range(10).select(
@@ -65,7 +56,7 @@ SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 def q_pivot_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer counts pivoted nation × market segment (explicit value
     list → stable output schema)."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     out = (
         cust.groupBy("c_nationkey")
         .pivot("c_mktsegment", SEGMENTS)
@@ -152,9 +143,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (double(S)/double(n) matches across engines, raw double-sum means
     do not). Reference parity: the reference has no joins at all —
     this suite is engine-declared surface (SURVEY §2 'beyond')."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
 
@@ -229,9 +220,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- q5: local supplier volume (ASIA, 1996) -------------------
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
-    sup = _t(spark, sf_dir, "supplier")
+    nat = table(spark, sf_dir, "nation")
+    reg = table(spark, sf_dir, "region")
+    sup = table(spark, sf_dir, "supplier")
     asia_nat = F.broadcast(
         nat.join(
             F.broadcast(reg.filter(F.col("r_name") == "ASIA")),
@@ -383,7 +374,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- q14: promo revenue share (conditional agg, e6 ratio) -----
-    part = _t(spark, sf_dir, "part")
+    part = table(spark, sf_dir, "part")
     q14_base = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -543,7 +534,7 @@ def q_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = anti-join survivors + replacement rows."""
     from geoestate_etl_spark.operators.merge import upsert
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     updates = cust.filter(F.col("c_custkey") % 10 == 0).withColumn(
         "c_acctbal", F.col("c_acctbal") + 1000.0
     )
@@ -563,7 +554,7 @@ def q_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         temporal_join_bucketed,
     )
 
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     w = Window.partitionBy("o_custkey").orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
@@ -597,7 +588,7 @@ def q_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     Includes an uncorrelated scalar subquery — Catalyst plans it as a
     1-row subquery broadcast, certifying the subquery surface too
     (absorbed the former scalar_subquery entry, r2)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
     # integer-cents means from exact cents sums (r3 float discipline)
     return spark.sql(
         """

@@ -9,8 +9,6 @@ matching column names and rounding.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,10 +16,7 @@ from geoestate_etl_spark.operators import aggregates as agg
 from geoestate_etl_spark.operators import topk
 from geoestate_etl_spark.operators.transforms import decade_of
 from geoestate_etl_spark.plans.registry import QuerySpec
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from geoestate_etl_spark.sources.parquet_io import table
 
 
 # --- P1/P3/P7: projection + pushdown filter --------------------------------
@@ -30,7 +25,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter + 4-column projection; predicate and column pruning both
     reach the parquet scan (verify via .explain → PushedFilters)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_quantity") > 30).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     )
@@ -40,7 +35,7 @@ def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     return topk.filtered_top_k(
         orders,
         F.col("o_totalprice") > 100.0,
@@ -55,7 +50,7 @@ def q_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minmax_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.group_min_max(
-        _t(spark, sf_dir, "lineitem"),
+        table(spark, sf_dir, "lineitem"),
         ["l_returnflag"],
         "l_extendedprice",
         "max_price",
@@ -67,7 +62,7 @@ def q_minmax_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_decade_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     return agg.histogram_by_bucket(
         orders, decade_of("o_orderdate"), "decade", "cnt"
     ).orderBy("decade")
@@ -77,7 +72,7 @@ def q_decade_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cleaning_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.trim(F.col("text")).substr(1, 20).alias("head"),

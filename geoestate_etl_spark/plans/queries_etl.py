@@ -11,15 +11,16 @@ from pyspark.sql import functions as F
 
 from geoestate_etl_spark.operators.incremental import merge_count_sum
 from geoestate_etl_spark.operators.profiling import profile_columns
+from geoestate_etl_spark.plans.prepared import DERIVED_DIR
 from geoestate_etl_spark.plans.registry import QuerySpec
+from geoestate_etl_spark.sources.parquet_io import table
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+#: the committed raw-parse artifact both engines read
+_HOUSES_RAW = os.path.join(DERIVED_DIR, "houses_slice_raw.parquet")
 
 
 def q_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return profile_columns(_t(spark, sf_dir, "documents"), ["doc_id", "lang", "n_chars"])
+    return profile_columns(table(spark, sf_dir, "documents"), ["doc_id", "lang", "n_chars"])
 
 
 def q_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,7 +36,7 @@ def q_incremental_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     which cost a driver hash in round 2. Integer cents are exact and
     associative, so split+merge == full recompute bit-for-bit.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     old = (
         orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -68,8 +69,6 @@ def q_houses_slice_top25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``sf_dir`` is unused — the input is the fixed reference sample.
     """
-    import os
-
     from geoestate_etl_spark.plans.pipeline import run_pipeline
 
     slice_path = "/root/reference/data/russian_houses_slice.csv"
@@ -84,10 +83,7 @@ def q_houses_slice_top25(spark: SparkSession, sf_dir: str) -> DataFrame:
             validate_stage,
         )
 
-        repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        raw = spark.read.parquet(
-            os.path.join(repo, "data", "derived", "houses_slice_raw.parquet")
-        ).drop("_row_idx")
+        raw = spark.read.parquet(_HOUSES_RAW).drop("_row_idx")
         validated, _nv, _ni = validate_stage(raw)
         # no persist: the frame is tiny and consumed once; caching it
         # would accumulate relations across registry runs (r3 advice)
@@ -104,10 +100,9 @@ def q_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value sums travel as BIGINT cents (see q_incremental_counts) so
     the merge is exact integer arithmetic, hash-stable across engines.
     """
-    from geoestate_etl_spark.sources.parquet_io import load_events
     from geoestate_etl_spark.streaming.event_windows import tumbling_counts
 
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
 
     def rollup(df: DataFrame) -> DataFrame:
         # the shared tumbling-window operator; keep only the exact
@@ -127,9 +122,6 @@ def q_continuous_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").alias("cnt"), F.sum("sum_cents").alias("sum_cents"))
     )
     return merged
-
-
-from geoestate_etl_spark.plans.queries_ext import _repo_root  # noqa: E402
 
 
 def _morton_sql() -> str:
@@ -169,11 +161,11 @@ SPECS = [
         q_houses_slice_top25,
         # the full reference pipeline from raw strings, in SQL; strips
         # mirror functions/cleaning.py, predicates functions/validation.py.
-        # The artifact path is templated from THIS file's location (the
-        # same derivation the Spark side uses), so the oracle survives a
-        # checkout outside /root/repo (r3 advice).
+        # The artifact path is the same constant the Spark side reads,
+        # derived from the package location, so the oracle survives a
+        # checkout anywhere (r3 advice).
         "WITH raw AS (SELECT * FROM read_parquet("
-        f"'{_repo_root()}/data/derived/houses_slice_raw.parquet')), "
+        f"'{_HOUSES_RAW}')), "
         "v AS (SELECT * FROM raw WHERE "
         "region IS NOT NULL AND trim(region) <> '' "
         "AND address IS NOT NULL AND trim(address) <> '' "

@@ -12,12 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geoestate_etl_spark.plans.registry import QuerySpec
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geoestate_etl_spark.sources.parquet_io import load_events
-
-    return load_events(spark, sf_dir)
+from geoestate_etl_spark.sources.parquet_io import table
 
 
 def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,7 +26,7 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     - Spark 4 VARIANT (``parse_json`` + ``variant_get`` — the
       shredded open-schema type for semi-structured lakes).
     """
-    ev = _events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     props_struct = F.from_json("props", "k BIGINT")
     return ev.select(
         "event_id",
@@ -61,7 +56,7 @@ def q_chat_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else → 'system'; the line carries the event type and
     the exact integer cents of ``value``.
     """
-    ev = _events(spark, sf_dir).filter(F.col("user_id") < 30)
+    ev = table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
     role = F.when(
         F.col("event_type").isin("click", "view", "purchase"), F.lit("user")
     ).otherwise(F.lit("system"))

@@ -10,17 +10,12 @@ at runtime — that's desired.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geoestate_etl_spark.operators.joins import broadcast_dim_join, sortmerge_join
 from geoestate_etl_spark.plans.registry import QuerySpec
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from geoestate_etl_spark.sources.parquet_io import table
 
 
 def q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,10 +25,10 @@ def q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim — at real scale it shuffles, here AQE decides). Aggregate is
     partial+final hash agg on r_name.
     """
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    region = _t(spark, sf_dir, "region")
+    orders = table(spark, sf_dir, "orders")
+    customer = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
+    region = table(spark, sf_dir, "region")
 
     joined = orders.join(customer, orders.o_custkey == customer.c_custkey)
     joined = broadcast_dim_join(joined, nation, on=[joined.c_nationkey == nation.n_nationkey])
@@ -69,8 +64,8 @@ def q_lineitem_orders_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from geoestate_etl_spark.operators.skew import adaptive_skew_join
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
 
     def rollup(joined: DataFrame) -> DataFrame:
         return joined.groupBy("o_orderpriority").agg(
@@ -93,11 +88,11 @@ def q_parts_top_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     part/supplier broadcast; top-k via TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    part = table(spark, sf_dir, "part").select("p_partkey", "p_name")
+    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     joined = broadcast_dim_join(li, part, on=[li.l_partkey == part.p_partkey])
     joined = broadcast_dim_join(joined, supp, on=[joined.l_suppkey == supp.s_suppkey])
     # per-row discounted price is an exact 4-decimal rational (2dp

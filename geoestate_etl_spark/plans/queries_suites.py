@@ -29,28 +29,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from geoestate_etl_spark.plans.prepared import (
+    derived_frame,
+    derived_path,
+    prepared_frame,
+)
 from geoestate_etl_spark.plans.registry import QuerySpec
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-#: Built-plan cache for suites whose DataFrame CONSTRUCTION cost
-#: (hundreds of py4j Column calls: multi-join unions, bit-interleave
-#: expressions) rivals their execution cost. A DataFrame is an
-#: immutable lazy plan — a serving system prepares it once and
-#: re-executes; re-building per call re-pays ~2s of driver-side py4j
-#: round-trips for an identical plan (measured on geo_distance_radius
-#: at r5). Keyed by applicationId so a fresh session rebuilds.
-_PLAN_CACHE: dict = {}
-
-
-def _plan_once(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    key = (name, sf_dir, spark.sparkContext.applicationId)
-    if key not in _PLAN_CACHE:
-        _PLAN_CACHE[key] = build()
-    return _PLAN_CACHE[key]
+from geoestate_etl_spark.sources.parquet_io import table
 
 
 def _NULL_TS():
@@ -79,9 +64,9 @@ def q_global_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents sum, the median is a round-to-integer of (a+b)/2 on the same
     doubles both engines see — both cross-engine hash-stable, unlike
     round(avg, 2)."""
-    cnt = _t(spark, sf_dir, "lineitem").agg(F.count("*").alias("lineitem_cnt"))
+    cnt = table(spark, sf_dir, "lineitem").agg(F.count("*").alias("lineitem_cnt"))
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    stats = _t(spark, sf_dir, "orders").agg(
+    stats = table(spark, sf_dir, "orders").agg(
         F.round(F.sum(cents) / F.count("*")).cast("long").alias("avg_price_cents"),
         F.round(F.median("o_totalprice") * 100).cast("long").alias("median_cents"),
     )
@@ -92,8 +77,8 @@ def q_top_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/T1 top-N by count on two tables, tagged."""
     from geoestate_etl_spark.operators import topk
 
-    pri = topk.top_k_by_count(_t(spark, sf_dir, "orders"), ["o_orderpriority"], 10)
-    seg = topk.top_k_by_count(_t(spark, sf_dir, "customer"), ["c_mktsegment"], 10)
+    pri = topk.top_k_by_count(table(spark, sf_dir, "orders"), ["o_orderpriority"], 10)
+    seg = topk.top_k_by_count(table(spark, sf_dir, "customer"), ["c_mktsegment"], 10)
     return pri.select(
         F.lit("priority").alias("grp_kind"),
         F.col("o_orderpriority").alias("grp"),
@@ -117,7 +102,7 @@ def q_renumber_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundary sample re-reads the source (r3 verdict #4). Checkpoint,
     # not persist: blocks release with the frame instead of
     # accumulating in the cache across registry runs.
-    df = _t(spark, sf_dir, "orders").select("o_orderkey").localCheckpoint(eager=True)
+    df = table(spark, sf_dir, "orders").select("o_orderkey").localCheckpoint(eager=True)
     a = win.renumber_global(df, "o_orderkey", "rn").withColumn(
         "rn", F.col("rn").cast(T.LongType())
     )
@@ -175,7 +160,7 @@ def q_window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _window_rank_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank family (desc window) + distribution family (asc window)
     per customer row."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = table(spark, sf_dir, "customer")
     wd = Window.partitionBy("c_nationkey").orderBy(
         F.desc("c_acctbal"), F.asc("c_custkey")
     )
@@ -214,7 +199,7 @@ def q_orders_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (F4-F6) + null-handling + date arithmetic, one projection."""
     from geoestate_etl_spark.operators.transforms import year_string_to_iso
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     price = F.col("o_totalprice")
     d = F.to_date("o_orderdate")
     return o.select(
@@ -247,8 +232,8 @@ def q_orders_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_set_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """union/intersect/except + distinct, tagged (op, val)."""
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
+    cust = table(spark, sf_dir, "customer")
+    supp = table(spark, sf_dir, "supplier")
     c_nk = cust.select(F.col("c_nationkey").alias("nk"))
     s_nk = supp.select(F.col("s_nationkey").alias("nk"))
 
@@ -270,8 +255,8 @@ def q_set_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rollup + explicit GROUPING SETS + cube, tagged and normalized
     to (variant, k1, k2, cnt, val)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
     rollup = (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count("*").alias("cnt"), F.sum("l_quantity").alias("val"))
@@ -329,8 +314,8 @@ def q_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoestate_etl_spark.operators.joins import anti_join, semi_join
 
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    orders = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    orders = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     return semi_join(cust, orders, on="c_custkey").select(
         F.lit("with_orders").alias("tag"), "c_custkey", "c_name"
     ).unionByName(
@@ -346,14 +331,13 @@ def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_event_windows_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling + sliding + session windows, normalized to
     (kind, grp, t_start, t_end, cnt, val)."""
-    from geoestate_etl_spark.sources.parquet_io import load_events
     from geoestate_etl_spark.streaming.event_windows import (
         session_windows,
         sliding_counts,
         tumbling_counts,
     )
 
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     tumb = tumbling_counts(ev, "1 hour").select(
         F.lit("tumbling").alias("kind"),
         F.col("event_type").alias("grp"),
@@ -491,7 +475,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from geoestate_etl_spark.operators.quality_model import token_margin_micro
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
         TX.char_count("text").alias("n_chars_calc"),
@@ -517,8 +501,6 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store — serving is then base columns + ONE parquet-scan join.
     # Drift vs the current gram code is gated by
     # tests/test_prepared_artifacts.py.
-    from geoestate_etl_spark.plans.prepared import prepared_frame
-
     def build_grams() -> DataFrame:
         # ONE corpus scan + ONE explode computes BOTH word-gram sizes
         # (r10 — guide §2.3/§2.4): the interpreted tokenize + gram HOFs
@@ -620,7 +602,7 @@ def q_dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the spans-dropped count (n_copies slot)."""
     from geoestate_etl_spark.operators import dedup as DD
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     exact = DD.dedup_exact(docs, "text", "doc_id").select(
         F.lit("exact").alias("kind"),
         F.col("fp").alias("k1"),
@@ -712,7 +694,7 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_b",
         F.col("hamming").cast(T.LongType()).alias("score"),
     )
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     first = emb.select("embedding").first()
     planes = SIM.make_hyperplanes(8, len(first[0]))
     # per-row double-cast + norm hoist (the semantic_pairs treatment —
@@ -773,20 +755,16 @@ def q_components_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_star,
         dedup_clusters,
     )
-    from geoestate_etl_spark.plans.queries_ext import (
-        dedup_pairs_path,
-        q_dedup_components,
-    )
+    from geoestate_etl_spark.plans.queries_ext import dedup_pairs
 
-    supp = _t(spark, sf_dir, "supplier")
+    supp = table(spark, sf_dir, "supplier")
     edges = supp.select(
         F.col("s_suppkey").alias("id_a"),
         (F.col("s_nationkey").cast("long") + 1_000_000).alias("id_b"),
     ).persist()
-    # ensure the pair artifact exists BEFORE the threads race to read
-    # it (q_dedup_components writes it if missing)
-    q_dedup_components(spark, sf_dir)
-    pairs = spark.read.parquet(dedup_pairs_path(sf_dir)).persist()
+    # the pair artifact is written (if missing) BEFORE the threads race
+    # to read it
+    pairs = dedup_pairs(spark, sf_dir).persist()
 
     from geoestate_etl_spark.operators.graph_metrics import k_core
 
@@ -872,7 +850,7 @@ def q_pair_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_b",
         F.col("jaccard").alias("value"),
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     left = c.filter(F.col("c_custkey") % 2 == 0).select(
         F.col("c_custkey").alias("id_a"), F.col("c_name").alias("na")
     )
@@ -907,7 +885,7 @@ def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoestate_etl_spark.operators import similarity as SIM
     from geoestate_etl_spark.plans.queries_ext import _probe
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     exact = SIM.brute_force_topk(emb, _probe(spark, sf_dir), k=10).select(
         F.lit("exact").alias("method"), "vec_id", "cos_sim"
     )
@@ -928,7 +906,7 @@ def _similarity_ann_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     HASH-MATCH GATED since r4 (was the last deterministic rows-only
     entry — r3 verdict #1): the IVF side serves from the COMMITTED
-    ``(vec_id, cell)`` + centroid artifact (``ensure_ivf_artifact``;
+    ``(vec_id, cell)`` + centroid artifact (``read_ivf_artifact``;
     drift-gated like the dedup-pair/semantic-cluster checkpoints), and
     the oracle rebuilds all three candidate sets in SQL — LSH buckets
     from the inlined hyperplane literals, IVF cells from the same
@@ -941,7 +919,7 @@ def _similarity_ann_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoestate_etl_spark.operators import similarity as SIM
     from geoestate_etl_spark.plans.queries_ext import _probe, read_ivf_artifact
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
     probe = _probe(spark, sf_dir)
 
     # ONE corpus pass for all three variants (r4 perf pass): the
@@ -1036,10 +1014,9 @@ def q_ann_certify(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_SEED,
         _probe,
         ensure_warehouse_index,
-        pq_codes_path,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = table(spark, sf_dir, "embeddings")
 
     n_cells = 16
     path = ensure_warehouse_index(spark, sf_dir, n_cells)
@@ -1083,11 +1060,12 @@ def q_ann_certify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast(T.ArrayType(T.DoubleType())).alias("embedding")
     )
     books = PQ.pq_train(embd, m=PQ_M, k=PQ_K, seed=PQ_SEED)
-    cpath = pq_codes_path(sf_dir)
-    if not os.path.exists(cpath):
-        PQ.pq_encode(embd, books).select("vec_id", "pq_code").write.mode(
-            "overwrite"
-        ).parquet(cpath)
+    derived_frame(
+        spark,
+        sf_dir,
+        "pq_codes",
+        lambda: PQ.pq_encode(embd, books).select("vec_id", "pq_code"),
+    )
     pq_adc = PQ.pq_adc_scores(PQ.pq_encode(embd, books), books, probe1).select(
         F.lit("pq_adc").alias("variant"),
         "vec_id",
@@ -1134,18 +1112,11 @@ def q_vocab_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       frozen-bucket) windows) against the oracle's plain per-domain
       window cumsum, plus the budget boundary rule.
 
-    Plan + trained models built once per (session, sf_dir) via
-    :func:`_plan_once` (r5 perf — VERDICT r4 #6): every fn() call was
-    re-running the eager vocab build and the BPE/unigram driver
-    training loops for an identical result; a serving system trains
-    once and reuses the tokenizer.
+    The eager vocab build and the BPE/unigram driver training loops
+    run once per (session, sf_dir): the registry serves this query as
+    a prepared plan (r5 perf — VERDICT r4 #6), so a serving system
+    trains once and reuses the tokenizer.
     """
-    return _plan_once(
-        "vocab_suite", spark, sf_dir, lambda: _build_vocab_suite(spark, sf_dir)
-    )
-
-
-def _build_vocab_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoestate_etl_spark.operators import bpe as BPE
     from geoestate_etl_spark.operators.prefix import pack_sequences
     from geoestate_etl_spark.operators.vocab import build_vocab, encode_docs
@@ -1157,7 +1128,7 @@ def _build_vocab_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tfidf_top_terms pushdown audit). The five branches rescan a
     # small pruned parquet instead; only DERIVED frames (vocab below)
     # are cached.
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     # eagerly checkpointed: the 'vocab' branch and the encode join both
     # consume it — without this the wordcount + scalable renumber
     # (including its range-partition sampling job) runs twice.
@@ -1289,8 +1260,8 @@ def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
       sketch values themselves cannot hash across engines, but a
       sketch gone wrong flips the indicator and the driver row — the
       tolerance check is driver-visible instead of test-only."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
     med = orders.agg(
         F.percentile_approx("o_totalprice", 0.5).alias("approx"),
         F.percentile("o_totalprice", 0.5).alias("exact"),
@@ -1357,7 +1328,7 @@ def q_returnflag_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantiles — one output row per flag."""
     from geoestate_etl_spark.operators.skew import salted_group_count
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     salted = salted_group_count(li, ["l_returnflag"], salt_buckets=16)
     # two countDistincts inside one wide agg force an EXPAND (row
     # multiplication) under every other aggregate, including the
@@ -1400,7 +1371,7 @@ def q_status_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from geoestate_etl_spark.operators.topk import top_k_per_group
 
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     mm = o.groupBy("o_orderstatus").agg(
         F.max(F.struct("o_totalprice", "o_orderkey"))
         .getField("o_orderkey")
@@ -1439,7 +1410,7 @@ def q_status_extrema(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     high = F.col("l_quantity") > 25
     ls = li.groupBy("l_linestatus").agg(
         F.bool_and(F.col("l_quantity") > 0).alias("all_positive"),
@@ -1539,7 +1510,7 @@ def _string_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrity survives because equal inputs map to equal tokens, so
     joins on the tokenized column still work downstream). Both pure
     JVM Columns (sha2), map-only at any scale."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("up"),
@@ -1592,7 +1563,7 @@ def q_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _array_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array surface melted to (kind, vec_id, k, v): per-vector stats
     via higher-order functions + posexplode elements."""
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
+    e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
     arr = F.col("embedding")
     stats = e.select(
         "vec_id",
@@ -1637,7 +1608,7 @@ def q_map_collect_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_map_collect_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-typed variant of the map/collect suite (test surface)."""
-    n = _t(spark, sf_dir, "nation")
+    n = table(spark, sf_dir, "nation")
     m = F.create_map(
         F.lit("key"),
         F.col("n_nationkey").cast("string"),
@@ -1666,7 +1637,7 @@ def q_map_collect_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_window_frame_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit frames over one partition spec: trailing moving average
     (integer-cents round-half-up) + first/last/nth values."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     base = Window.partitionBy("o_custkey").orderBy(
         F.asc("o_orderdate"), F.asc("o_orderkey")
     )
@@ -1696,19 +1667,10 @@ def q_geo_distance_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     density counts (the former geo_grid_count entry, folded in r4
     to free the slot `semantic_dedup` took).
 
-    Plan built once per (session, sf_dir) via :func:`_plan_once` —
-    the six-variant union costs ~2s of py4j construction alone (r5
-    profiling), which a serving deployment pays once, not per query.
+    The six-variant union costs ~2s of py4j construction alone (r5
+    profiling); the registry serves it as a prepared plan, so a
+    serving deployment pays that once per session, not per query.
     """
-    return _plan_once(
-        "geo_distance_radius",
-        spark,
-        sf_dir,
-        lambda: _build_geo_distance_radius(spark, sf_dir),
-    )
-
-
-def _build_geo_distance_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geoestate_etl_spark.functions.geo import grid_cell, haversine_km, in_bbox
     from geoestate_etl_spark.functions.zorder import morton_key_2d
     from geoestate_etl_spark.operators.spatial import radius_join
@@ -1720,10 +1682,10 @@ def _build_geo_distance_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .persist() is bounded/cross-run-dedup'd by analyzed plan, and —
     # unlike localCheckpoint — keeps AQE, see docs/TUNING.md traps).
     cust = _with_coords(
-        _t(spark, sf_dir, "customer").select("c_custkey"), "c_custkey"
+        table(spark, sf_dir, "customer").select("c_custkey"), "c_custkey"
     ).persist()
     supp = _with_coords(
-        _t(spark, sf_dir, "supplier").select("s_suppkey"),
+        table(spark, sf_dir, "supplier").select("s_suppkey"),
         "s_suppkey",
         "slat",
         "slon",
@@ -1810,7 +1772,7 @@ def _build_geo_distance_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossing convention and BETWEEN can never disagree on a boundary.
     from geoestate_etl_spark.operators.spatial import spatial_join
 
-    pts = _t(spark, sf_dir, "customer").select(
+    pts = table(spark, sf_dir, "customer").select(
         "c_custkey",
         ((F.col("c_custkey") % 2500) / 10.0 + 0.05).alias("x"),
         ((F.col("c_custkey") * 7 % 500) / 10.0 + 0.05).alias("y"),
@@ -1820,7 +1782,7 @@ def _build_geo_distance_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     vert = lambda dx, dy: F.struct(  # noqa: E731
         (ax + dx).alias("x"), (ay + dy).alias("y")
     )
-    polys = _t(spark, sf_dir, "nation").select(
+    polys = table(spark, sf_dir, "nation").select(
         "n_nationkey",
         F.array(
             vert(1.0, 1.0), vert(9.0, 1.0), vert(9.0, 5.0),
@@ -1975,7 +1937,7 @@ def q_urls_chunks_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         canonical_url(F.col("url")).alias("s1"),
         registered_domain(url_parts(F.col("url")).getField("host")).alias("s2"),
     )
-    docs = _t(spark, sf_dir, "documents")
+    docs = table(spark, sf_dir, "documents")
     chunk_rows = chunk_documents(docs, "doc_id", "text", 10, 3).select(
         F.lit("chunk").alias("kind"),
         F.col("doc_id").cast(T.LongType()).alias("id1"),
@@ -2206,12 +2168,7 @@ def _specs() -> list[QuerySpec]:
         _NORM_SQL,
         _TOKEN_RE,
         _WC_SQL,
-        dedup_pairs_path,
-        ivf_assign_path,
-        media_phash_path,
-        neardup_sigs_path,
         oracle_sf_dir,
-        pq_codes_path,
     )
     from geoestate_etl_spark.plans.queries_geo import _HAVERSINE, _coords_cte
 
@@ -2264,12 +2221,11 @@ def _specs() -> list[QuerySpec]:
             import duckdb
 
             from geoestate_etl_spark.operators.similarity import nearest_cells
-            from geoestate_etl_spark.plans.queries_ext import ivf_centroids_path
 
             con = duckdb.connect()
             cents = con.execute(
                 "SELECT cell, centroid FROM read_parquet("
-                f"'{ivf_centroids_path(oracle_sf)}/*.parquet') "
+                f"'{derived_path(oracle_sf, 'ivf_centroids')}/*.parquet') "
                 "ORDER BY cell"
             ).fetchall()
             probe = con.execute(
@@ -2334,7 +2290,7 @@ def _specs() -> list[QuerySpec]:
         f"([{','.join(str(v) for v in row)}])[pq_code[{j + 1}] + 1]"
         for j, row in enumerate(_pq_lut)
     )
-    pq_codes_path_sql = os.path.join(pq_codes_path(oracle_sf), "*.parquet")
+    pq_codes_path_sql = os.path.join(derived_path(oracle_sf, "pq_codes"), "*.parquet")
     similarity_ann_sql = (
         "WITH emb AS (SELECT vec_id, "
         "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e FROM embeddings), "
@@ -2350,7 +2306,7 @@ def _specs() -> list[QuerySpec]:
         "lshc AS (SELECT vec_id FROM bits "
         "WHERE hamming(bucket, (SELECT bucket FROM pb)) <= 2), "
         "ivfc AS (SELECT vec_id FROM read_parquet("
-        f"'{ivf_assign_path(oracle_sf)}/*.parquet') "
+        f"'{derived_path(oracle_sf, 'ivf_assign')}/*.parquet') "
         f"WHERE cell IN ({ivf_cells})), "
         "l10 AS (SELECT 'lsh' AS method, vec_id, cos_sim FROM sc "
         "WHERE vec_id IN (SELECT vec_id FROM lshc) "
@@ -2395,7 +2351,7 @@ def _specs() -> list[QuerySpec]:
     # for the embedding variant (same 8 inlined plane literals).
     near_dup_sql = (
         "WITH s AS (SELECT id, sh, sig, simhash FROM read_parquet("
-        f"'{neardup_sigs_path(oracle_sf)}/*.parquet')), "
+        f"'{derived_path(oracle_sf, 'neardup_sigs')}/*.parquet')), "
         "mb AS (SELECT id, CAST(b AS VARCHAR) || ':' || "
         "CAST(list_slice(sig, b * 4 + 1, b * 4 + 4) AS VARCHAR) AS bkey "
         "FROM s, (SELECT unnest([0, 1, 2, 3]) AS b)), "
@@ -2432,7 +2388,7 @@ def _specs() -> list[QuerySpec]:
         # arithmetic or logical shift, so signed 64-bit wrap is safe),
         # 1024 occupancy cap, exact bit_count(xor) <= 6 rescore
         "phs AS (SELECT id, phash FROM read_parquet("
-        f"'{media_phash_path(oracle_sf)}/*.parquet') "
+        f"'{derived_path(oracle_sf, 'media_phash')}/*.parquet') "
         "WHERE phash IS NOT NULL), "
         "phb AS (SELECT id, phash, CAST(i AS VARCHAR) || ':' || "
         "CAST((phash >> (i * 8)) & 255 AS VARCHAR) AS pband "
@@ -2896,7 +2852,7 @@ LEFT JOIN mqs USING (doc_id)
             "g AS (SELECT src AS id, least(src, min(dst)) AS component "
             "FROM r GROUP BY src), "
             "p AS (SELECT id_a, id_b FROM read_parquet("
-            f"'{dedup_pairs_path(oracle_sf)}/*.parquet')), "
+            f"'{derived_path(oracle_sf, 'dedup_pairs')}/*.parquet')), "
             "pe AS (SELECT id_a AS src, id_b AS dst FROM p "
             "UNION SELECT id_b, id_a FROM p), "
             "pr AS (SELECT src, dst FROM pe UNION "

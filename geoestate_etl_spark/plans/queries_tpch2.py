@@ -45,8 +45,6 @@ aggregate + equi-join instead of two self-joins of the fact table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -56,10 +54,7 @@ from geoestate_etl_spark.plans.queries_advanced import (
     _tpch_null_pad,
 )
 from geoestate_etl_spark.plans.registry import QuerySpec
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from geoestate_etl_spark.sources.parquet_io import table
 
 
 # --------------------------------------------------------------------
@@ -93,8 +88,8 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     table crossed with a 1-row supplier-count broadcast — map-only
     after one tiny scalar agg, no shuffle, scales with the part dim.
     """
-    sup = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part").select(
+    sup = table(spark, sf_dir, "supplier")
+    part = table(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("long").alias("pk")
     )
     s_cnt = sup.agg(F.count("*").cast("long").alias("s_cnt"))
@@ -166,13 +161,13 @@ def q_tpch_suite2(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS/NOT IN/NOT EXISTS subqueries) over the same parquet plus
     the SQL-rebuilt partsupp CTE — independent plans, same rows.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    sup = table(spark, sf_dir, "supplier")
+    part = table(spark, sf_dir, "part")
+    nat = table(spark, sf_dir, "nation")
+    reg = table(spark, sf_dir, "region")
     ps = derived_partsupp(spark, sf_dir)
 
     lsupp = F.col("l_suppkey").cast("long")

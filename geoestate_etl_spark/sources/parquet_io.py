@@ -69,6 +69,14 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One driver testdata table from ``sf_dir``; ``events`` goes
+    through :func:`load_events`."""
+    if name == "events":
+        return load_events(spark, sf_dir)
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> dict[str, DataFrame]:
@@ -76,11 +84,4 @@ def load_tables(
     from geoestate_etl_spark.schema import TESTDATA_TABLES
 
     names = names or TESTDATA_TABLES
-    return {
-        name: (
-            load_events(spark, sf_dir)
-            if name == "events"
-            else spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        )
-        for name in names
-    }
+    return {name: table(spark, sf_dir, name) for name in names}

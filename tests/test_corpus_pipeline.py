@@ -125,7 +125,7 @@ def test_incremental_batch_dedups_against_history(spark, result):
     batch2 = spark.createDataFrame(
         [(100, GOOD), (101, PII_DOC), (102, new_doc)], ["doc_id", "text"]
     )
-    res2 = run_corpus(batch2, token_budget=64, seen=result.fingerprints())
+    res2 = run_corpus(batch2, token_budget=64, seen=result.packed.select("fp").distinct())
     assert res2.n_input == 3 and res2.n_gated == 3
     assert res2.n_unseen == 1
     assert {r.doc_id for r in res2.packed.select("doc_id").collect()} == {102}
@@ -421,7 +421,7 @@ def test_seen_chain_empty_metrics_row_falls_back(spark, result, monkeypatch):
             made.append(self)
 
     monkeypatch.setattr(stage, "Observation", Recorded)
-    res2 = run_corpus(_batch2(spark), token_budget=64, seen=result.fingerprints())
+    res2 = run_corpus(_batch2(spark), token_budget=64, seen=result.packed.select("fp").distinct())
     try:
         assert any(o._jo.getRow().length() == 0 for o in made)
         assert (res2.n_input, res2.n_gated, res2.n_unseen) == (3, 3, 1)

@@ -17,12 +17,12 @@ import os
 import pytest
 
 from geoestate_etl_spark.operators import dedup as DD
-from geoestate_etl_spark.plans.queries_ext import dedup_pairs_path
+from geoestate_etl_spark.plans.prepared import derived_path
 from tests.conftest import SF_ORACLE
 
 
 def test_committed_pairs_match_current_code(spark):
-    path = dedup_pairs_path(SF_ORACLE)
+    path = derived_path(SF_ORACLE, "dedup_pairs")
     if not os.path.exists(path):
         pytest.skip("no committed artifact for this sf (first run writes it)")
     committed = {
@@ -54,9 +54,8 @@ def test_committed_semantic_clusters_match_current_code(spark):
     import os as _os
 
     from geoestate_etl_spark.operators.semantic_dedup import cluster_embeddings
-    from geoestate_etl_spark.plans.queries_ext import semantic_clusters_path
 
-    path = semantic_clusters_path(SF_ORACLE)
+    path = derived_path(SF_ORACLE, "semantic_clusters")
     if not _os.path.exists(path):
         pytest.skip("no committed artifact for this sf (first run writes it)")
     committed = {
@@ -81,9 +80,7 @@ def test_committed_neardup_sigs_match_current_code(spark):
     kernels produce from the documents table."""
     import os as _os
 
-    from geoestate_etl_spark.plans.queries_ext import neardup_sigs_path
-
-    path = neardup_sigs_path(SF_ORACLE)
+    path = derived_path(SF_ORACLE, "neardup_sigs")
     if not _os.path.exists(path):
         pytest.skip("no committed artifact for this sf (first run writes it)")
     committed = {
@@ -163,13 +160,10 @@ def test_committed_ivf_artifact_matches_current_code(spark):
     import os as _os
 
     from geoestate_etl_spark.operators.similarity import ivf_build, nearest_cells
-    from geoestate_etl_spark.plans.queries_ext import (
-        _probe,
-        ivf_assign_path,
-        ivf_centroids_path,
-    )
+    from geoestate_etl_spark.plans.queries_ext import _probe
 
-    apath, cpath = ivf_assign_path(SF_ORACLE), ivf_centroids_path(SF_ORACLE)
+    apath = derived_path(SF_ORACLE, "ivf_assign")
+    cpath = derived_path(SF_ORACLE, "ivf_centroids")
     if not (_os.path.exists(apath) and _os.path.exists(cpath)):
         pytest.skip("no committed artifact for this sf (first run writes it)")
     committed = {
@@ -214,10 +208,9 @@ def test_committed_pq_codes_match_current_code(spark):
         PQ_K,
         PQ_M,
         PQ_SEED,
-        pq_codes_path,
     )
 
-    path = pq_codes_path(SF_ORACLE)
+    path = derived_path(SF_ORACLE, "pq_codes")
     if not _os.path.exists(path):
         pytest.skip("no committed artifact for this sf (first run writes it)")
     committed = {
@@ -258,7 +251,7 @@ def test_committed_media_phash_matches_current_code(spark, tmp_path):
 
     from geoestate_etl_spark.plans import queries_ext as QE
 
-    path = QE.media_phash_path(SF_ORACLE)
+    path = derived_path(SF_ORACLE, "media_phash")
     if not os.path.exists(path):
         pytest.skip("no committed artifact for this sf (first run writes it)")
     committed = {
@@ -272,7 +265,7 @@ def test_committed_media_phash_matches_current_code(spark, tmp_path):
         os.path.join(SF_ORACLE, "documents.parquet"),
         os.path.join(scratch, "documents.parquet"),
     )
-    fresh_path = QE.media_phash_path(scratch)
+    fresh_path = derived_path(scratch, "media_phash")
     try:
         fresh = {
             (r.id, r.phash)

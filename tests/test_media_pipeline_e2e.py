@@ -239,7 +239,13 @@ def test_seen_hashes_incremental_across_drops(spark, tmp_path):
     assert res1.n_final == pred1.n_final
     # detach the standing table from res1's caches before unpersist
     seen = spark.createDataFrame(
-        [(r.chash,) for r in res1.content_hashes().collect()], "chash long"
+        [
+            (r.chash,)
+            for r in res1.survivors.select(F.col("_chash").alias("chash"))
+            .distinct()
+            .collect()
+        ],
+        "chash long",
     )
     res1.unpersist()
 

@@ -10,7 +10,10 @@ package loads no module by a computed name (no
 ``importlib``/``__import__``), so the static walk sees every edge.
 
 Def level: every top-level ``def``, ``class`` and assigned name of a
-package module, public or private, is a node. Its references are the identifiers it uses
+package module, public or private, is a node, and so is every
+non-dunder method of a top-level class, reached by its attribute name
+(``path::Class.method``; a dunder stays part of its class). Its
+references are the identifiers it uses
 (names, attribute names, and identifier tokens inside string constants
 other than docstrings, so a registry key or a SQL function name
 counts). The walk starts from every reached file outside the package
@@ -237,6 +240,24 @@ def _aliases(tree: ast.AST) -> dict[str, set[str]]:
     return out
 
 
+def _methods(stmt: ast.stmt) -> list[ast.stmt]:
+    """The non-dunder methods of a top-level class (none otherwise)."""
+    if not isinstance(stmt, ast.ClassDef):
+        return []
+    return [
+        m
+        for m in stmt.body
+        if isinstance(m, _DEF_NODES[:2]) and not m.name.startswith("__")
+    ]
+
+
+def _span(stmt: ast.stmt) -> tuple[int, int]:
+    """First line (decorators included) and line count of a def."""
+    decorators = getattr(stmt, "decorator_list", [])
+    first = min([stmt.lineno] + [d.lineno for d in decorators])
+    return first, stmt.end_lineno - first + 1
+
+
 def _assigned_names(stmt: ast.stmt) -> list[str]:
     targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
     names = []
@@ -279,12 +300,15 @@ def unreached_defs(root: str = REPO, roots=ROOTS) -> list[Def]:
                 ):
                     seeds |= _references([stmt], skip)
                 continue
-            decorators = getattr(stmt, "decorator_list", [])
-            first = min([stmt.lineno] + [d.lineno for d in decorators])
-            refs = _references([stmt], skip)
+            methods = _methods(stmt)
+            body = [n for n in ast.iter_child_nodes(stmt) if n not in methods]
+            refs = _references(body, skip)
             for name in names:
-                d = Def(rel, name, first, stmt.end_lineno - first + 1)
+                d = Def(rel, name, *_span(stmt))
                 defs.setdefault(name, []).append((d, refs))
+            for m in methods:
+                d = Def(rel, f"{stmt.name}.{m.name}", *_span(m))
+                defs.setdefault(m.name, []).append((d, _references([m], skip)))
     seen: set[str] = set()
     todo = list(seeds)
     while todo:
@@ -296,7 +320,7 @@ def unreached_defs(root: str = REPO, roots=ROOTS) -> list[Def]:
         for _, refs in defs.get(name, ()):
             todo.extend(refs - seen)
     return sorted(
-        (d for entries in defs.values() for d, _ in entries if d.name not in seen),
+        (d for name, entries in defs.items() if name not in seen for d, _ in entries),
         key=lambda d: (d.path, d.line),
     )
 
@@ -348,7 +372,7 @@ def test_def_walk_flags_stray_and_transitively_dead_defs(tmp_path):
         '"""Mentions stray() in a docstring only."""\n'
         "LIMIT = 3\n"
         "def entry():\n"
-        "    return _helper() + LIMIT\n"
+        "    return _helper() + LIMIT + Result().used()\n"
         "def _helper():\n"
         "    return by_name('keyed')\n"
         "def by_name(k):\n"
@@ -362,6 +386,13 @@ def test_def_walk_flags_stray_and_transitively_dead_defs(tmp_path):
         "    return 2\n"
         "class _Private:\n"
         "    pass\n"
+        "class Result:\n"
+        "    def __repr__(self):\n"
+        "        return 'r'\n"
+        "    def used(self):\n"
+        "        return 1\n"
+        "    def stray_method(self):\n"
+        "        return 2\n"
     )
     (tmp_path / "main.py").write_text(f"from {PACKAGE} import go\ngo()\n")
     dead = unreached_defs(str(tmp_path), ("main.py",))
@@ -369,11 +400,13 @@ def test_def_walk_flags_stray_and_transitively_dead_defs(tmp_path):
         ("stray", 11, 2),
         ("only_from_stray", 13, 3),
         ("_Private", 16, 2),
+        ("Result.stray_method", 23, 2),
     ]
     assert unreached_def_keys(str(tmp_path), ("main.py",)) == {
         f"{PACKAGE}/ops.py::stray",
         f"{PACKAGE}/ops.py::only_from_stray",
         f"{PACKAGE}/ops.py::_Private",
+        f"{PACKAGE}/ops.py::Result.stray_method",
     }
 
 

@@ -184,6 +184,7 @@ def test_incremental_seen_state_drops_either_side(spark, tmp_path):
     image hash or its caption fingerprint already exists in the
     standing corpus (O(batch) anti-joins), before any in-batch dedup
     work; fresh pairs flow through untouched."""
+    from geoestate_etl_spark.functions.text import fingerprint_md5
     from tests.media_corpus_fixture import (
         _encode_gray_png,
         fixture_dhash,
@@ -193,11 +194,21 @@ def test_incremental_seen_state_drops_either_side(spark, tmp_path):
     rows, _ = generate_paired_rows()
     res1 = _run(spark, tmp_path / "b1", rows)
     seen_img = spark.createDataFrame(
-        [(r.chash,) for r in res1.image_hashes().collect()],
+        [
+            (r.chash,)
+            for r in res1.survivors.select(F.col("_chash").alias("chash"))
+            .distinct()
+            .collect()
+        ],
         "chash long",
     )
     seen_cap = spark.createDataFrame(
-        [(r.fp,) for r in res1.caption_fingerprints().collect()],
+        [
+            (r.fp,)
+            for r in res1.survivors.select(fingerprint_md5("caption").alias("fp"))
+            .distinct()
+            .collect()
+        ],
         "fp string",
     )
     surv = sorted(

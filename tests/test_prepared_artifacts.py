@@ -14,6 +14,8 @@ import shutil
 from pyspark.sql import functions as F
 
 from geoestate_etl_spark.plans.prepared import (
+    derived_frame,
+    derived_path,
     invalidate_artifact_key,
     invalidate_artifacts,
     prepared_frame,
@@ -177,6 +179,32 @@ def test_failed_build_cleans_temp(spark, tmp_path):
     assert not os.path.exists(parent) or all(
         ".tmp-" not in d for d in os.listdir(parent)
     )
+
+
+def test_failed_derived_build_leaves_no_artifact(spark, tmp_path):
+    """A committed-artifact build whose Spark write fails must leave
+    nothing at its path: an empty directory there passes every later
+    exists-check and fails each read with UNABLE_TO_INFER_SCHEMA. The
+    next call with a working builder writes the artifact."""
+    sf = str(tmp_path / "sf_failbuild")
+    path = derived_path(sf, "failbuild")
+    try:
+        with pytest.raises(Exception, match="boom"):
+            derived_frame(
+                spark,
+                sf,
+                "failbuild",
+                lambda: spark.range(3).selectExpr(
+                    "CASE WHEN id >= 0 THEN raise_error('boom') ELSE id END AS id"
+                ),
+            )
+        assert not os.path.exists(path)
+        parent = os.path.dirname(path)
+        base = os.path.basename(path)
+        assert [d for d in os.listdir(parent) if d.startswith(base)] == []
+        assert derived_frame(spark, sf, "failbuild", lambda: spark.range(3)).count() == 3
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_mtime_ns_resolution_in_key(tmp_path):

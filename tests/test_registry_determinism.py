@@ -29,3 +29,11 @@ def test_twice_identical(spark, name):
         f"({len(first)} vs {len(second)} rows; first diff: "
         f"{next((a, b) for a, b in zip(first, second) if a != b) if len(first) == len(second) else 'row-count'})"
     )
+
+
+def test_unwrapped_builder_builds_a_fresh_plan(spark):
+    # the registry's prepared-plan cache is the only plan cache, so the
+    # undecorated builder (``fn.__wrapped__``, what plan audits call to
+    # bypass it) builds a new Dataset on every call
+    build = SPECS["geo_distance_radius"].fn.__wrapped__
+    assert build(spark, SF_SMOKE) is not build(spark, SF_SMOKE)
