@@ -19,96 +19,8 @@ lineage each iteration, which keeps deep iterative plans compilable.
 
 from __future__ import annotations
 
-import threading
-import weakref
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: Guard for the iteration's shuffle-partition window: callers run CC
-#: on CONCURRENT driver threads (components_suite builds its variants
-#: that way), and a naive per-call save/set/restore races two ways —
-#: the second thread can save the first's TEMPORARY value and
-#: "restore" the session to 1 partition permanently, or size its own
-#: window from that temporary value and run a large iteration
-#: single-task. Every entrant therefore sizes from the ORIGINAL value
-#: (saved once by the first entrant), the session conf holds the MAX
-#: over all active windows (a big concurrent CC is never shrunk by a
-#: tiny one), and the last exit restores the original. State is keyed
-#: PER SparkSession (weakly, so a stopped session's entry is
-#: collectable): ``spark.sql.shuffle.partitions`` is a session-scoped
-#: conf, and a process-global saved value would let a second session's
-#: window size itself from — and "restore" — the FIRST session's
-#: setting (r8 ADVICE, medium). Residuals, documented: a concurrent
-#: NON-CC query planned inside someone else's active window sees the
-#: reduced setting, and a user conf change made mid-window is
-#: overwritten on exit — both performance-only, bounded by the
-#: window's duration, and impossible at scale (a big edge set sizes
-#: to the original, making the window a no-op).
-_conf_lock = threading.Lock()
-
-
-class _WindowState:
-    __slots__ = ("saved", "active")
-
-    def __init__(self) -> None:
-        self.saved: str | None = None
-        self.active: list[int] = []
-
-
-_conf_state: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-@contextmanager
-def _iteration_shuffle_window(sess, n_edges: int):
-    """Temporarily size ``spark.sql.shuffle.partitions`` from the
-    measured edge count (≥100k edges per partition; never raised above
-    the session setting — at scale this is a no-op)."""
-    key = "spark.sql.shuffle.partitions"
-    entered = False
-    npart = 0
-    with _conf_lock:
-        st = _conf_state.get(sess)
-        if st is None:
-            st = _WindowState()
-            _conf_state[sess] = st
-        try:
-            original = int(
-                sess.conf.get(key) if st.saved is None else st.saved
-            )
-        except ValueError:  # non-numeric conf (e.g. "auto")
-            original = None
-        if original is not None:
-            # enter even when npart == original: a LARGE concurrent CC
-            # must push its full size into the active set so a tiny
-            # window running beside it cannot hold the conf at 1 while
-            # the large iteration plans its rounds
-            npart = max(1, min(original, n_edges // 100_000 + 1))
-            saved_before = st.saved
-            if st.saved is None:
-                st.saved = str(original)
-            st.active.append(npart)
-            try:
-                sess.conf.set(key, str(max(st.active)))
-            except Exception:
-                # undo the bookkeeping so a failed set cannot pin
-                # max(active) for every future window (r8 ADVICE, low)
-                st.active.remove(npart)
-                st.saved = saved_before
-                raise
-            entered = True
-    try:
-        yield
-    finally:
-        if entered:
-            with _conf_lock:
-                st.active.remove(npart)
-                if st.active:
-                    sess.conf.set(key, str(max(st.active)))
-                elif st.saved is not None:
-                    sess.conf.set(key, st.saved)
-                    st.saved = None
 
 
 def connected_components(
@@ -127,14 +39,12 @@ def connected_components(
 
     ``driver_max_edges`` (r9): an edge set at or below this bound is
     solved with driver-side union-find instead of the iterative
-    distributed loop. The bound is exactly the iteration window's
-    one-shuffle-partition clamp (≥100k edges per partition): below
-    it every distributed round would run as a SINGLE task anyway, so
-    the loop's per-round scheduling (one localCheckpoint job per
-    round, O(log diameter) rounds) is pure overhead over a graph
-    whose deduped edges are ≤ ~1.6 MB of longs — the same
-    driver-bounded-metadata class as the k-means centroids and range
-    boundaries. Labels are the identical unique fixed point (min
+    distributed loop. Its deduped edges are ≤ ~1.6 MB of longs, far
+    below AQE's advisory partition size, so every distributed round
+    would coalesce to a single task anyway and the loop's per-round
+    scheduling (one localCheckpoint job per round, O(log diameter)
+    rounds) is pure overhead — the same driver-bounded-metadata
+    class as the k-means centroids and range boundaries. Labels are the identical unique fixed point (min
     reachable id), pinned by ``tests/test_components.py`` parity.
     ``None`` forces the distributed loop.
     """
@@ -164,13 +74,7 @@ def connected_components(
     )
 
     # Materialize the (possibly expensive) pair plan into the cache
-    # now and size the ITERATION's shuffles from the measured edge
-    # count: localCheckpoint bypasses AQE (docs/TUNING.md §traps), so
-    # without this every tiny iteration round pays the session's full
-    # shuffle-partition fan-out in empty-task scheduling — measured as
-    # ~3s of corpus_pipeline's fixed cost at sf0.1 (r8). At scale the
-    # clamp leaves the session setting untouched (≥100k edges per
-    # partition keeps npart == default long before memory matters).
+    # now; the measured edge count picks the driver tier below.
     n_edges = edges.count()
     if driver_max_edges is not None and n_edges <= driver_max_edges:
         out = _cc_driver(pairs.sparkSession, edges)
@@ -178,8 +82,8 @@ def connected_components(
             edges.unpersist()
             return out
     # Truncate the edge lineage AFTER the cache is materialized: the
-    # checkpoint scans cached partitions (cheap, and the expensive
-    # upstream already executed WITH AQE via the count above), and the
+    # checkpoint scans cached partitions (cheap: the expensive
+    # upstream already executed via the count above), and the
     # iteration plans stop embedding the whole upstream logical tree —
     # Catalyst re-analyzed the full MinHash-LSH lineage once per round
     # otherwise, the other measured fixed cost of corpus_pipeline's CC
@@ -201,10 +105,7 @@ def connected_components(
         )
     )
 
-    # the loop plans (and eagerly executes) each round inside the
-    # sized-shuffle window (thread-safe, see _iteration_shuffle_window)
-    with _iteration_shuffle_window(pairs.sparkSession, n_edges):
-        return _cc_iterate(edges, labels, max_iter)
+    return _cc_iterate(edges, labels, max_iter)
 
 
 def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":

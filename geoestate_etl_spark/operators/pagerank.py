@@ -76,82 +76,66 @@ def pagerank(
 
         ranks = nodes.withColumn("pr", p).localCheckpoint()
 
-        # size the iteration's shuffles from the measured edge count (the
-        # connected_components discipline, r10): localCheckpoint bypasses
-        # AQE, so every round otherwise pays the session's full
-        # shuffle-partition fan-out in empty-task scheduling — measured as
-        # most of the fixpoint's fixed cost on small graphs (62 jobs, ~5s
-        # at sf0.1). The cache is already materialized (nodes.count()
-        # above), so this count is a cheap cached scan; at scale the clamp
-        # is a no-op (≥100k edges per partition reaches the session
-        # setting long before memory matters).
-        from geoestate_etl_spark.operators.components import (
-            _iteration_shuffle_window,
+        # loop-invariant edge layout (guide §2.4): hash-partition +
+        # sort the cached edge relation by the join key ONCE, so every
+        # iteration's contrib join reuses the cached partitioning and
+        # ordering instead of re-exchanging (and re-sorting) the full
+        # edge set per round — at scale that is `iters` fewer full
+        # edge shuffles. The one build-time exchange reads the
+        # already-materialized cache.
+        edges_keyed = (
+            edges.repartition(F.col(src))
+            .sortWithinPartitions(src)
+            .persist()
         )
-
-        n_edges = edges.count()
-        with _iteration_shuffle_window(edges.sparkSession, n_edges):
-            # loop-invariant edge layout (guide §2.4): hash-partition +
-            # sort the cached edge relation by the join key ONCE, so every
-            # iteration's contrib join reuses the cached partitioning and
-            # ordering instead of re-exchanging (and re-sorting) the full
-            # edge set per round — at scale that is `iters` fewer full
-            # edge shuffles. repartition() picks up the window's sized
-            # partition count; the one build-time exchange reads the
-            # already-materialized cache.
-            edges_keyed = (
-                edges.repartition(F.col(src))
-                .sortWithinPartitions(src)
-                .persist()
+        # loop-invariant out-degree table, derived from the keyed cache
+        # so its groupBy reuses the partitioning (no exchange); feeds
+        # the contrib join and the dangling anti-join every iteration
+        out_deg = (
+            edges_keyed.groupBy(src).agg(F.count("*").alias("deg")).persist()
+        )
+        for _ in range(iters):
+            contribs = (
+                edges_keyed.join(ranks.withColumnRenamed("id", src), src)
+                .join(out_deg, src)
+                .select(F.col(dst).alias("id"), (F.col("pr") / F.col("deg")).alias("c"))
+                .groupBy("id")
+                .agg(F.sum("c").alias("contrib"))
             )
-            # loop-invariant out-degree table, derived from the keyed cache
-            # so its groupBy reuses the partitioning (no exchange); feeds
-            # the contrib join and the dangling anti-join every iteration
-            out_deg = (
-                edges_keyed.groupBy(src).agg(F.count("*").alias("deg")).persist()
-            )
-            for _ in range(iters):
-                contribs = (
-                    edges_keyed.join(ranks.withColumnRenamed("id", src), src)
-                    .join(out_deg, src)
-                    .select(F.col(dst).alias("id"), (F.col("pr") / F.col("deg")).alias("c"))
-                    .groupBy("id")
-                    .agg(F.sum("c").alias("contrib"))
-                )
-                # mass of nodes with no outgoing edges, redistributed
-                # uniformly. Stays IN-PLAN as a 1-row aggregate broadcast
-                # into the rank update — a driver-side collect here would
-                # add a full extra Spark job + driver sync per iteration
-                # (round-1 verdict #4); this way the eager localCheckpoint
-                # below is the iteration's single job.
-                dangling = ranks.join(
-                    out_deg.withColumnRenamed(src, "id"), "id", "left_anti"
-                ).agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-                ranks = (
-                    nodes.join(contribs, "id", "left")
-                    .crossJoin(F.broadcast(dangling))
-                    .select(
-                        "id",
+            # mass of nodes with no outgoing edges, redistributed
+            # uniformly. Stays IN-PLAN as a 1-row aggregate broadcast
+            # into the rank update — a driver-side collect here would
+            # add a full extra Spark job + driver sync per iteration
+            # (round-1 verdict #4); this way the eager localCheckpoint
+            # below is the iteration's single job.
+            dangling = ranks.join(
+                out_deg.withColumnRenamed(src, "id"), "id", "left_anti"
+            ).agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
+            ranks = (
+                nodes.join(contribs, "id", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "id",
+                    (
+                        # uniform path keeps the EXACT historical float
+                        # expression — the driver oracle unrolls the same
+                        # arithmetic, and (1-d)/n vs (1-d)·(1/n) differ in
+                        # the last ulp (ORACLE_NOTES half-decimal trap)
                         (
-                            # uniform path keeps the EXACT historical float
-                            # expression — the driver oracle unrolls the same
-                            # arithmetic, and (1-d)/n vs (1-d)·(1/n) differ in
-                            # the last ulp (ORACLE_NOTES half-decimal trap)
-                            (
-                                F.lit((1.0 - damping) / n)
-                                + F.lit(damping) * F.col("dm") / F.lit(float(n))
-                                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                            )
-                            if seeds is None
-                            else (
-                                F.lit(1.0 - damping) * p
-                                + F.lit(damping) * F.col("dm") * p
-                                + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
-                            )
-                        ).alias("pr"),
-                    )
-                    .localCheckpoint()
+                            F.lit((1.0 - damping) / n)
+                            + F.lit(damping) * F.col("dm") / F.lit(float(n))
+                            + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                        )
+                        if seeds is None
+                        else (
+                            F.lit(1.0 - damping) * p
+                            + F.lit(damping) * F.col("dm") * p
+                            + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                        )
+                    ).alias("pr"),
                 )
+                .localCheckpoint()
+            )
         return ranks
     finally:
         for df in (edges, edges_keyed, out_deg, nodes):

@@ -79,14 +79,7 @@ def bfs_distances(
     # exchange AND re-exchanged/re-sorted the full edge set inside
     # every level's sort-merge join at scale; the cached partitioning +
     # ordering now satisfy the join's requirements directly). The
-    # count materializes the cache (the first level's join needed that
-    # work anyway) and sizes the level loop's checkpoint shuffles (the
-    # connected_components discipline — localCheckpoint bypasses AQE,
-    # so each level otherwise pays the session's full shuffle-partition
-    # fan-out in empty-task scheduling; at scale the clamp is a no-op).
-    from geoestate_etl_spark.operators.components import (
-        _iteration_shuffle_window,
-    )
+    # first level's join materializes the cache.
     from geoestate_etl_spark.stage import observed
 
     e = (
@@ -99,8 +92,6 @@ def bfs_distances(
     # released in ``finally``: the returned frame is checkpoint-
     # truncated, and a failing level leaves no cache registered
     try:
-        n_edges = e.count()
-
         visited = spark.createDataFrame(
             [(int(source), 0)],
             T.StructType(
@@ -111,29 +102,28 @@ def bfs_distances(
             ),
         ).localCheckpoint(eager=True)
         frontier = visited.select("id")
-        with _iteration_shuffle_window(spark, n_edges):
-            for d in range(1, max_hops + 1):
-                # the empty-frontier check rides the eager checkpoint's
-                # materialization via the Observation API — no separate
-                # isEmpty job per level (the connected_components
-                # convergence-check discipline)
-                nxt, read_new = observed(
-                    frontier.join(e, frontier["id"] == e["u"])
-                    .select(F.col("v").alias("id"))
-                    .distinct()
-                    .join(visited, "id", "left_anti")
-                    .withColumn("dist", F.lit(d).cast("int")),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                nxt = nxt.localCheckpoint(eager=True)
-                n_new = int(read_new()["n"] or 0)
-                if n_new == 0:
-                    break
-                # visited is a union of per-level CHECKPOINTED frames — the
-                # lineage stays O(levels) shallow without re-materializing
-                # the cumulative set every round
-                visited = visited.union(nxt)
-                frontier = nxt.select("id")
+        for d in range(1, max_hops + 1):
+            # the empty-frontier check rides the eager checkpoint's
+            # materialization via the Observation API — no separate
+            # isEmpty job per level (the connected_components
+            # convergence-check discipline)
+            nxt, read_new = observed(
+                frontier.join(e, frontier["id"] == e["u"])
+                .select(F.col("v").alias("id"))
+                .distinct()
+                .join(visited, "id", "left_anti")
+                .withColumn("dist", F.lit(d).cast("int")),
+                F.count(F.lit(1)).alias("n"),
+            )
+            nxt = nxt.localCheckpoint(eager=True)
+            n_new = int(read_new()["n"] or 0)
+            if n_new == 0:
+                break
+            # visited is a union of per-level CHECKPOINTED frames — the
+            # lineage stays O(levels) shallow without re-materializing
+            # the cumulative set every round
+            visited = visited.union(nxt)
+            frontier = nxt.select("id")
         return visited
     finally:
         e.unpersist()

@@ -45,10 +45,11 @@ def q_chat_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendered as one ordered, role-templated text block — the
     sequence-to-training-text step of a conversation/SFT pipeline.
 
-    Ordering is the cross-engine trap: the parquet carries NANOSECOND
-    timestamps, Spark's loader rebuilds microseconds, so the sort key
-    is (unix_micros, event_id) on BOTH engines — the event_id tiebreak
-    absorbs any sub-µs ties. The ordered fold is the JVM-side
+    Ordering is the cross-engine trap: the testdata carries
+    microsecond timestamps, but a NANOSECOND file is loaded with µs
+    rebuilt (``load_events``), so the sort key is (unix_micros,
+    event_id) on BOTH engines — the event_id tiebreak absorbs any
+    sub-µs ties. The ordered fold is the JVM-side
     sort_array-of-structs → transform → array_join pattern (no window,
     no Python): one hash agg per user.
 

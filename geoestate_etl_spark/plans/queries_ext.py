@@ -547,9 +547,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf — the cacheManager deduplicates by analyzed-plan equality, so
     # repeated registry runs REUSE the entry (the cross-run hit is
     # ~4× on this line) rather than accumulate. NOT localCheckpoint:
-    # checkpoint materializes through the RDD path, which bypasses
-    # AQE — the cluster self-join then runs with every uncoalesced
-    # reducer and the query measured 0.6s → 2.3s (r4).
+    # a checkpoint is private to one run, so it forgoes that reuse,
+    # and the r4 conversion measured 0.6s → 2.3s.
     pairs = semantic_pairs(clustered, cosine_threshold=0.40).persist()
     _, decisions = semantic_dedup(clustered, cosine_threshold=0.40, pairs=pairs)
     nl = F.lit(None).cast("bigint")

@@ -1679,8 +1679,8 @@ def q_geo_distance_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE coord derivation per source table, shared by all six variants
     # (r5 perf — VERDICT r4 #5: topk/grid/point/radius/nn each re-read
     # customer/supplier and re-derived the synthetic coords; plain
-    # .persist() is bounded/cross-run-dedup'd by analyzed plan, and —
-    # unlike localCheckpoint — keeps AQE, see docs/TUNING.md traps).
+    # .persist() is bounded/cross-run-dedup'd by analyzed plan, see
+    # docs/TUNING.md traps).
     cust = _with_coords(
         table(spark, sf_dir, "customer").select("c_custkey"), "c_custkey"
     ).persist()

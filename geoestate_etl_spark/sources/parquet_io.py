@@ -47,22 +47,36 @@ def write_sorted_table(
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events table loader, normalizing nanosecond timestamps.
 
-    Earlier driver testdata wrote ``ts`` as parquet TIMESTAMP(NANOS),
-    which Spark 4 refuses to read natively; ``nanosAsLong`` surfaces it
-    as ns-since-epoch longs and we rebuild a microsecond timestamp with
+    The r3 testdata writes plain tz-less timestamp[us], which reads
+    directly (as TIMESTAMP_NTZ). Earlier driver testdata wrote ``ts``
+    as parquet TIMESTAMP(NANOS), which Spark 4 refuses to read
+    natively (``PARQUET_TYPE_ILLEGAL``); such a file is re-read with
+    the per-read ``nanosAsLong`` option, which surfaces ``ts`` as
+    ns-since-epoch longs, and we rebuild a microsecond timestamp with
     *integer* division (ns epoch values exceed double's 2^53 exact
     range, so float division would corrupt timestamps by ±1 µs). The
-    r3 testdata writes plain tz-less timestamp[us], which reads
-    directly (as TIMESTAMP_NTZ); the rebuild path stays for nanos
-    inputs.
+    option alone still fails at schema inference, so that read
+    declares the schema. The session conf is never written.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    from pyspark.errors import AnalysisException
     from pyspark.sql import types as T
 
-    if isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+    path = os.path.join(sf_dir, "events.parquet")
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        df = (
+            spark.read.schema(
+                "event_id long, ts long, user_id long, event_type string,"
+                " value double, props string"
+            )
+            .option("spark.sql.legacy.parquet.nanosAsLong", "true")
+            .parquet(path)
+        )
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
         # watermarks/event-time ops require TIMESTAMP; with the UTC
         # session timezone the cast preserves every wall-clock value
         df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))

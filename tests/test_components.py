@@ -171,71 +171,6 @@ def test_driver_tier_random_graph_matches_distributed(spark):
     assert cc_map(spark, edges) == _cc_distributed_map(spark, edges)
 
 
-def test_shuffle_window_state_is_per_session(spark):
-    """``spark.sql.shuffle.partitions`` is session-scoped, so the
-    window's saved/active bookkeeping must be too (r8 ADVICE, medium):
-    a second session entering a window while the first's is active
-    must size from — and restore — ITS OWN original, not the first
-    session's."""
-    from geoestate_etl_spark.operators.components import (
-        _iteration_shuffle_window,
-    )
-
-    key = "spark.sql.shuffle.partitions"
-    other = spark.newSession()
-    orig_a, orig_b = "24", "6"
-    saved_a, saved_b = spark.conf.get(key), other.conf.get(key)
-    try:
-        spark.conf.set(key, orig_a)
-        other.conf.set(key, orig_b)
-        with _iteration_shuffle_window(spark, 10):  # sizes to 1
-            assert spark.conf.get(key) == "1"
-            assert other.conf.get(key) == orig_b  # untouched
-            with _iteration_shuffle_window(other, 10**7):  # 101 > 6 ⇒ 6
-                assert other.conf.get(key) == orig_b
-                assert spark.conf.get(key) == "1"
-            assert other.conf.get(key) == orig_b
-        assert spark.conf.get(key) == orig_a  # own original restored
-        assert other.conf.get(key) == orig_b
-    finally:
-        spark.conf.set(key, saved_a)
-        other.conf.set(key, saved_b)
-
-
-def test_shuffle_window_failed_set_rolls_back_bookkeeping(spark):
-    """A conf.set that raises must not leak its npart into the active
-    set (r8 ADVICE, low): the next window would otherwise be pinned to
-    max(active) forever."""
-    from geoestate_etl_spark.operators import components as C
-
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-
-    class _Boom(Exception):
-        pass
-
-    class _FailingConf:
-        def get(self, k):
-            return spark.conf.get(k)
-
-        def set(self, k, v):
-            raise _Boom()
-
-    class _FailingSession:
-        conf = _FailingConf()
-
-        def __hash__(self):
-            return id(self)
-
-    sess = _FailingSession()
-    with pytest.raises(_Boom):
-        with C._iteration_shuffle_window(sess, 10):
-            pass
-    st = C._conf_state.get(sess)
-    assert st is None or (st.active == [] and st.saved is None)
-    assert spark.conf.get(key) == saved
-
-
 def test_driver_tier_null_ids_fall_back_to_loop(spark):
     """A NULL id cannot be ordered in Python; the driver tier must
     decline and the distributed loop's null-key semantics apply."""
